@@ -1,31 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Headline-query benchmark. Prints ONE JSON line:
+/** Headline-query benchmark: times a noop-sink write of each query's
+  * full result through [[GraftRun.execute]]. Positional query names
+  * time only those queries (the isolated re-run that adjudicates one
+  * query's regression without 35 noisy neighbors). Prints TWO JSON lines:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
+  * and the compact bests-only "best_total" line.
+  *
+  * Usage: SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.Bench [query ...]
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shared session config lives in GraftSession.base (rationale
-    // documented there) so the bench and every diagnostic tool run the
-    // same plan. r16: the r15 64 KB minPartitionSize floor is gone —
-    // it cost 15-35% on ~20 untouched queries per the driver's bench.
-    val spark = GraftSession.base(sfDir, cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up: run every headline query once at the smallest sf so the
-    // timed loop measures steady-state throughput, not codegen/JIT
-    // warm-up (plans are identical across sf → codegen cache hits).
-    val warmDir = "/root/testdata/sf0.001"
-    val warm = if (new java.io.File(warmDir).exists()) warmDir else sfDir
-    SparkEntry.headlineQueries.foreach { q =>
-      try q.fn(spark, warm).count() catch { case _: Throwable => () }
-    }
-    // drop warm-up persisted data so timed runs do their own work
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager.clearCache()
+    val (spark, budget) = GraftRun.session(sfDir)
+    val headliners = GraftRun.select(args.toSeq)
+    GraftRun.warmUp(spark, headliners, sfDir)
     // The machine's timing is noisy (same plan 1-10x across runs, see
     // NOTES_r3); best-of-N per query is the steady-state signal and 3
     // reps proved too few to establish a stable floor (the r3 "4x
@@ -33,20 +22,15 @@ object Bench {
     // carries reps plus per-query MEDIANS next to the bests so a noisy
     // outlier round is identifiable from the artifact alone.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "9").toInt.max(1)
-    // per-query peak execution memory rides along (QueryAudit sums the
-    // executed plans' Tungsten peakMemory metrics): the throughput
-    // number alone can hide a plan that got faster by ballooning its
-    // hash tables — at cluster scale that trade matters
-    val audit = QueryAudit.attach(spark, maxRecords = reps * 4)
-    // spill budget live under the full sweep (r12 verdict item 6):
-    // the accounting path runs on every rep, the per-query spill
-    // rides next to peak_mem_mb, and the process-wide high-water is
-    // the temp-directory-pressure gauge. Default cap (100 GB, the
-    // reference's own default) never cancels honest work;
+    // per-query peak execution memory rides along (the executed
+    // plans' Tungsten peakMemory metrics, max over the run's
+    // executions): the throughput number alone can hide a plan that got
+    // faster by ballooning its hash tables — at cluster scale that
+    // trade matters. The spill budget (GraftRun.session) is live under
+    // the full sweep: the per-query spill rides next to peak_mem_mb,
+    // and the process-wide high-water is the temp-directory-pressure
+    // gauge. Its default cap never cancels honest work;
     // spark.graft.query.maxSpillMb overrides.
-    val budget = SpillBudget.fromConfOrDefault(spark)
-    var lastAuditId = 0L
-    val headliners = SparkEntry.headlineQueries
     val times = collection.mutable.Map.empty[String, List[Double]]
     val peakByQuery = collection.mutable.Map.empty[String, Long]
     val spillByQuery = collection.mutable.Map.empty[String, Long]
@@ -59,23 +43,18 @@ object Bench {
     for (rep <- 1 to reps) {
       val order = new scala.util.Random(rep).shuffle(headliners)
       order.foreach { q =>
-        val t0 = System.nanoTime()
         // a failed query reports -1 and poisons the total to null below —
         // a failure must never improve the headline number
         val t =
-          try { q.fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable =>
+          try {
+            val r = GraftRun.execute(spark)(q.fn(spark, sfDir))
+            val metrics = r.executions.map(e => QueryAudit.planMetrics(e.qe.executedPlan))
+            peakByQuery(q.name) = math.max(peakByQuery.getOrElse(q.name, -1L), metrics.map(_._1).max)
+            spillByQuery(q.name) = math.max(spillByQuery.getOrElse(q.name, -1L), metrics.map(_._2).sum)
+            r.wallSeconds
+          } catch { case e: Throwable =>
             System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); -1.0 }
         times(q.name) = t :: times.getOrElse(q.name, Nil)
-        try audit.awaitQuiesce(lastAuditId + 1, 2000) catch { case _: Throwable => () }
-        val recs = audit.recordsRaw().filter(_.query_id > lastAuditId)
-        if (recs.nonEmpty) {
-          lastAuditId = recs.map(_.query_id).max
-          val p = recs.map(_.peak_memory_bytes).max
-          peakByQuery(q.name) = math.max(peakByQuery.getOrElse(q.name, -1L), p)
-          val s = recs.map(_.spilled_bytes).sum
-          spillByQuery(q.name) = math.max(spillByQuery.getOrElse(q.name, -1L), s)
-        }
       }
     }
     val results = headliners.map { q =>

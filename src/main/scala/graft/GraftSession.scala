@@ -2,12 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The ONE bench/diagnostic session builder. Bench, MicroBench,
-  * PeakMem, PlanDump, SpillProbe and StageProfile all call
-  * [[base]] and layer runner-specific overrides on top, so the plan a
-  * diagnostic tool profiles or dumps is the plan the bench actually
-  * runs — previously the identical 10-line config block was copy-pasted
-  * into all six mains, a guarantee nothing enforced (ADVICE r15).
+/** The ONE session builder of the mains: [[GraftRun.session]] builds
+  * every main's session (Bench, Verify, Profile, SpillProbe) on
+  * [[base]], so the plan a diagnostic profiles and the plan the oracle
+  * checks are the plan the bench times.
   *
   * Config rationale (applies to every runner):
   *  - master `local[$cpus]` with `cpus` from `$SPARK_GRAFT_CPUS`: the

@@ -1,13 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Negative-path spill-budget probe (r13 verdict item 5): the unit
   * suite proves the accounting and both cancellation directions, but
   * no BENCH-shaped run had ever actually cancelled. This main builds
-  * the exact Bench session (same confs, audit + budget attached the
-  * same way), runs a healthy control, then a deliberately over-cap
+  * the Bench session (GraftRun.session) and runs everything through
+  * GraftRun.execute: a healthy control, then a deliberately over-cap
   * window query (spill forced via the windowExec buffer thresholds,
   * cap from spark.graft.query.maxSpillMb), then two registry
   * neighbors — and prints ONE JSON line recording that the cancel
@@ -19,22 +18,16 @@ import org.apache.spark.sql.functions._
 object SpillProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val capMb = sys.env.getOrElse("SPARK_GRAFT_MAX_SPILL_MB", "1")
-    // Shared session config: GraftSession.base (same plan as Bench),
-    // plus the probe's own spill cap.
-    val spark = GraftSession.base(sfDir, cpus)
-      .config("spark.graft.query.maxSpillMb", capMb)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, budget) = GraftRun.session(sfDir, "spark.graft.query.maxSpillMb" -> capMb)
     val audit = QueryAudit.attach(spark, maxRecords = 64)
-    val budget = SpillBudget.fromConfOrDefault(spark)
 
-    def run(name: String): (Boolean, String) =
-      try { SparkEntry.queries(name)(spark, sfDir).count(); (true, "") }
+    def run(df: => org.apache.spark.sql.DataFrame): (Boolean, String) =
+      try { GraftRun.execute(spark)(df); (true, "") }
       catch { case e: Exception => (false, QueryAudit.classifyCode(e)) }
+    def query(name: String) = run(SparkEntry.queries(name)(spark, sfDir))
 
-    val before = run("q1_agg")
+    val before = query("q1_agg")
     // the over-cap victim: a full-table window whose group buffers are
     // forced to disk (same spill mechanics the suite uses — honest
     // sf-scale queries are zero-spill by design, so the probe forces
@@ -45,26 +38,18 @@ object SpillProbe {
     // read-ahead buffers — the probe wants REALISTIC spill, just > cap)
     Seq("spark.sql.windowExec.buffer.in.memory.threshold",
       "spark.sql.windowExec.buffer.spill.threshold").foreach(spark.conf.set(_, "4096"))
-    val victim =
-      try {
-        val grp = pmod(col("event_id"), lit(256))
-        spark.read.parquet(s"$sfDir/events.parquet")
-          .repartition(256, grp)
-          .withColumn("rnk", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(grp).orderBy(col("event_id"))))
-          .where(col("rnk") > 0).count()
-        (true, "")
-      } catch { case e: Exception => (false, QueryAudit.classifyCode(e)) }
+    val grp = pmod(col("event_id"), lit(256))
+    val victim = run(spark.read.parquet(s"$sfDir/events.parquet")
+      .repartition(256, grp)
+      .withColumn("rnk", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(grp).orderBy(col("event_id"))))
+      .where(col("rnk") > 0))
     Seq("spark.sql.windowExec.buffer.in.memory.threshold",
       "spark.sql.windowExec.buffer.spill.threshold").foreach(spark.conf.unset)
-    val after1 = run("q1_agg")
-    val after2 = run("l_dedup_minhash")
+    val after1 = query("q1_agg")
+    val after2 = query("l_dedup_minhash")
 
-    // let the failure + neighbor records land
-    val deadline = System.nanoTime() + 30e9.toLong
-    while (System.nanoTime() < deadline &&
-      !(audit.recordsRaw().exists(_.error_class == "resource") &&
-        audit.recordsRaw().count(_.status == "ok") >= 3)) Thread.sleep(50)
+    // every run drained the listener bus: all audit records have landed
     val recs = audit.recordsRaw()
     val resourceRecs = recs.filter(_.error_class == "resource")
     val okRecs = recs.filter(_.status == "ok")

@@ -22,7 +22,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def df(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Driver-owned sessions (Verify) are built without GraftExtensions;
+    // Driver-owned sessions may be built without GraftExtensions;
     // register() is idempotent and cheap, and every query loads at least
     // one table, so this guarantees graft_* functions resolve everywhere.
     graft.functions.GraftFunctions.register(spark)
@@ -68,7 +68,7 @@ object Tables {
   /** Initial post-shuffle partition count for AQE, derived from lake
     * size: one partition per 2 MB of raw parquet input, clamped to
     * [cores, 1024]. Feeds `spark.sql.adaptive.coalescePartitions.
-    * initialPartitionNum` in the diagnostic mains — the pinned
+    * initialPartitionNum` in every main's session — the pinned
     * shuffle.partitions = cores floor spilled 219 GB at the third
     * decade (25M pair-agg rows per partition, PLANS.md r10), while AQE
     * coalescing collapses the extra width for free when data is small,

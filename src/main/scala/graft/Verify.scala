@@ -1,29 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.Shim
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Runs on
+  * [[GraftRun.session]], so the oracle checks the plans the bench times. */
 object Verify {
+  /** The oracle's action: the full result as one parquet file. */
+  def write(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional query-name filter (local debugging)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Scan size estimates are FILE bytes x column fraction, but
-      // snappy parquet expands 24-31x in memory (sf10 audit: the
-      // customer/part dims hid a decade of growth under the broadcast
-      // threshold and statically built 192 MB hash relations). 16x
-      // keeps the estimate within ~2x of built size, so scan-backed
-      // broadcast picks demote on schedule while AQE still re-converts
-      // genuinely small sides from ACTUAL compressed bytes.
-      .config("spark.sql.sources.fileCompressionFactor", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // spill budget live in the gate itself (reference: the temp-dir
     // cap is always on, 100 GB default) — intentional behavior note
     // (ADVICE r13): a query spilling past the cap is CANCELLED
@@ -32,7 +21,7 @@ object Verify {
     // appears, raise or disable the cap via spark.graft.query
     // .maxSpillMb rather than weakening the gate; the default never
     // cancels honest work (the full sf10 sweep runs zero-spill).
-    SpillBudget.fromConfOrDefault(spark): Unit
+    val (spark, _) = GraftRun.session(sfDir)
     new java.io.File(outDir).mkdirs()
     // forensics lives OUTSIDE outDir: the driver globs every entry of
     // outDir as a query parquet dir, and a _forensics subdir breaks its read
@@ -52,8 +41,7 @@ object Verify {
     var lastAuditId = 0L
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        write(fn(spark, sfDir), s"$outDir/$name")
         // hash decomposition of the EXACT bytes the driver will read
         // (re-read from the written file, not the live plan) — see
         // Forensics; a driver-side hash mismatch diffs against this.
@@ -69,10 +57,10 @@ object Verify {
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name forensics skipped: ${e.getMessage}")
         }
-        // listener delivery is async: give this query's records a
-        // moment to land, then attribute everything newer than the
-        // previous query's high-water id to this query
-        try audit.awaitQuiesce(lastAuditId + 1, 5000) catch { case _: Throwable => () }
+        // listener delivery is async: drain the bus, then attribute
+        // everything newer than the previous query's high-water id to
+        // this query
+        Shim.drainListenerBus(spark)
         val recs = audit.recordsRaw().filter(_.query_id > lastAuditId)
         if (recs.nonEmpty) {
           lastAuditId = recs.map(_.query_id).max

@@ -186,7 +186,8 @@ object ShingleKernels {
     }
     starts.add(pos); ends.add(hi) // final token (empty if trailing run)
     val m = starts.size()
-    val nChunks = (m + n - 1) / n // m >= 1, so >= 1
+    // m >= 1, so >= 1; (m + n - 1) / n overflows Int for large n
+    val nChunks = 1 + (m - 1) / n
     val arr = new Array[Any](nChunks)
     var c = 0
     while (c < nChunks) {

@@ -216,7 +216,9 @@ object LlmPipelineExt5 {
       // ARRAY — the kernel runs once per row BEFORE the repartition,
       // so the exchange carries arrays and both consumers (pair stats,
       // merge) reuse the one exchange without recomputing it.
-      val d = docs(s, dir)
+      // a null-text doc has no tokens, so no row: the oracle's unnest
+      // drops it too
+      val d = docs(s, dir).where(col("text").isNotNull)
         .select(col("doc_id"), whitespaceTokens(col("text")).as("toks"))
         .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
       // pair statistics straight off adjacent array positions — the

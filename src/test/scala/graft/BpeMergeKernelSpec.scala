@@ -11,7 +11,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * ("a a a a"), the self-pair (w1 == w2) and pairs at array edges —
   * the parity cases where a wrong scan would diverge.
   */
-class BpeMergeKernelSpec extends SparkSpec {
+class BpeMergeKernelSpec extends SparkSpec with TmpDirSupport {
 
   /** The relational form's answer for one doc, via Spark. */
   private def relational(docs: Seq[(Long, Seq[String])], w1: String, w2: String)
@@ -76,5 +76,22 @@ class BpeMergeKernelSpec extends SparkSpec {
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(result.passed, s"scalacheck: ${result.status}")
+  }
+
+  test("l_bpe_merge: a null-text doc has no row; every other row is unchanged") {
+    // the oracle's unnest drops a doc without tokens
+    val docs = Tables.df(spark, sfDir, "documents")
+    val (withNull, without) = (tmpDir("bpe_null"), tmpDir("bpe_nonull"))
+    docs.write.parquet(s"$without/documents.parquet")
+    val nullId = docs.agg(max("doc_id")).head().getAs[Number](0).longValue + 1
+    docs.unionByName(docs.limit(1)
+        .withColumn("doc_id", lit(nullId).cast(docs.schema("doc_id").dataType))
+        .withColumn("text", lit(null).cast("string")))
+      .write.parquet(s"$withNull/documents.parquet")
+    val q = SparkEntry.queries("l_bpe_merge")
+    val got = q(spark, withNull).collect().toSeq
+    assert(!got.exists(_.getAs[Number]("doc_id").longValue == nullId),
+      "the null-text doc kept an output row")
+    assert(got == q(spark, without).collect().toSeq)
   }
 }

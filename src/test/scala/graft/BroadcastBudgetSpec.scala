@@ -133,23 +133,34 @@ class BroadcastBudgetSpec extends SparkSpec {
     kids.foreach(walk(_)(f))
   }
 
-  /** Execute `df` fully and return (built size, class) for every
-    * BroadcastExchange in the final plan, largest first — class one of
+  /** The broadcast side's first six operators, top down, e.g.
+    * `Project <- Filter <- FileScan`: names the join site a violation
+    * comes from.
+    */
+  private def chain(p: SparkPlan): String =
+    Iterator.iterate(Option(p))(_.flatMap {
+      case a: AdaptiveSparkPlanExec => Some(a.executedPlan)
+      case q: QueryStageExec => Some(q.plan)
+      case o => o.children.headOption
+    }).takeWhile(_.isDefined).take(6).map(_.get.nodeName).mkString(" <- ")
+
+  /** Execute `df` fully and return (built size, class, side sketch) for
+    * every BroadcastExchange in the final plan, largest first — class one of
     * "scan-backed" / "runtime-converted" / "DERIVED". Must drive THIS
     * queryExecution's plan (a `df.write` would build a separate
     * QueryExecution and leave these metrics untouched at zero).
     */
-  private[graft] def broadcastSizes(df: DataFrame): Seq[(Long, String)] = {
+  private[graft] def broadcastSizes(df: DataFrame): Seq[(Long, String, String)] = {
     val qe = df.queryExecution
     qe.executedPlan.execute().foreach(_ => ())
-    val sizes = Seq.newBuilder[(Long, String)]
+    val sizes = Seq.newBuilder[(Long, String, String)]
     walk(qe.executedPlan) {
       case b: BroadcastExchangeExec =>
         val cls =
           if (isRuntimeConverted(b)) "runtime-converted"
           else if (isScanBacked(b)) "scan-backed"
           else "DERIVED"
-        sizes += ((b.metrics.get("dataSize").map(_.value).getOrElse(0L), cls))
+        sizes += ((b.metrics.get("dataSize").map(_.value).getOrElse(0L), cls, chain(b.child)))
       case _ => ()
     }
     sizes.result().sortBy(-_._1)
@@ -178,11 +189,12 @@ class BroadcastBudgetSpec extends SparkSpec {
       .groupBy().agg(sum(length(col("b.text"))).as("n_bytes"), max(col("b.k")).as("mk"))
     val sizes = broadcastSizes(seeded)
     assert(sizes.nonEmpty, "seeded broadcast not found in executed plan")
-    val (sz, cls) = sizes.head
+    val (sz, cls, side) = sizes.head
     assert(cls == "DERIVED",
       s"the seeded post-explode side must classify as DERIVED (it contains a " +
         s"Generate, and the hint makes it static) — got $cls; a looser class " +
         "would mask the defect")
+    assert(side.contains("Generate"), s"the side sketch must reach the explode: $side")
     assert(sz > budgetBytes,
       s"seeded corpus broadcast should exceed the $budgetBytes-byte budget, " +
         s"got $sz — budget no longer discriminates at $auditDir")
@@ -198,8 +210,8 @@ class BroadcastBudgetSpec extends SparkSpec {
           violations += s"${q.name}: failed to execute for audit: ${e.getMessage}"
           Nil
         }
-      sizes.headOption.foreach { case (s, _) => largest += ((s, q.name)) }
-      sizes.foreach { case (s, cls) =>
+      sizes.headOption.foreach { case (s, _, _) => largest += ((s, q.name)) }
+      sizes.foreach { case (s, cls, side) =>
         val budget = cls match {
           case "scan-backed" => math.max(budgetFor(q.name), scanSideBudget)
           case "runtime-converted" => math.max(budgetFor(q.name), convertedSideBudget)
@@ -208,7 +220,8 @@ class BroadcastBudgetSpec extends SparkSpec {
         if (s > budget)
           violations += f"${q.name}: $cls " +
             f"BroadcastExchange built ${s / 1024.0 / 1024.0}%.1f MB " +
-            f"(budget ${budget / 1024 / 1024} MB) — corpus-proportional side statically broadcast?"
+            f"(budget ${budget / 1024 / 1024} MB) — corpus-proportional side statically broadcast? " +
+            s"side: $side"
       }
     }
     // the high-water marks that back the budget choice (visible via -oI)

@@ -44,6 +44,15 @@ class ChunkKernelSpec extends SparkSpec {
     check(edgeInputs)
   }
 
+  test("chunk kernel: n near Int.MaxValue yields the whole text as one chunk") {
+    // the chunk count must not overflow computing ceil(m / n)
+    check(Seq("a b c"), ns = Seq(Int.MaxValue))
+    import spark.implicits._
+    val got = Seq("a b c").toDF("text")
+      .select(TextAnalysis.wordChunks(col("text"), Int.MaxValue)).head().getSeq[String](0)
+    assert(got == Seq("a b c"))
+  }
+
   test("property: chunk kernel equals composed form on random strings") {
     val weird = Gen.oneOf(' ', '\u3000', '\u000B', '\f', '\r', '\n',
       '\t', '\u00A0', 'a', 'b', 'Z', '0', '9', '!', '.', '-',

@@ -293,7 +293,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("round-8 tranche: exchange budgets hold, no cartesian anywhere") {
-    // measured shapes (sf0.001, AQE final plans, PlanCount) + one unit
+    // measured shapes (sf0.001, AQE final plans) + one unit
     // of headroom; min-broadcast only where the broadcast is structural
     // (threshold/grid/term/scalar tables), not an AQE size decision.
     import org.apache.spark.sql.execution.joins.CartesianProductExec

@@ -5,7 +5,8 @@
 # before the end-of-round snapshot.
 #
 #   tools/gate.sh          # sbt -batch compile (fast, ~10 s incremental)
-#   tools/gate.sh smoke    # compile + Verify on sf0.001 + oracle compare (~2 min)
+#   tools/gate.sh smoke    # compile + Verify on sf0.001 + oracle compare, then
+#                          # one Bench rep and one Profile run on sf0.001 (~5 min)
 #
 # Exit nonzero on any failure.
 set -euo pipefail
@@ -28,5 +29,20 @@ if [[ "${1:-}" == "smoke" ]]; then
     echo "[gate] ORACLE COMPARE FAILED"; grep -a FAIL /tmp/gate_oracle.log | tail -20; exit 1; }
   tail -1 /tmp/gate_oracle.log
   python3 tools/survey_check.py /tmp/gate_vout
+  # no spec runs the mains: this is the check that Bench and Profile work
+  lake=/root/testdata/sf0.001
+  echo "[gate] Bench sf0.001 (1 rep)"
+  SPARK_GRAFT_SF_DIR=$lake SPARK_GRAFT_BENCH_REPS=1 SPARK_GRAFT_BENCH_OUT=/tmp/gate_bench.json \
+    sbt -batch "runMain graft.Bench" >/tmp/gate_bench.log 2>&1 || {
+    echo "[gate] BENCH FAILED"; tail -20 /tmp/gate_bench.log; exit 1; }
+  grep -q '"failed":0,' /tmp/gate_bench.json || {
+    echo "[gate] BENCH QUERIES FAILED"; grep -a '\[bench\]' /tmp/gate_bench.log | tail -20; exit 1; }
+  echo "[gate] Profile sf0.001 l_paragraph_scrub"
+  rm -rf /tmp/gate_profile
+  sbt -batch "runMain graft.Profile $lake /tmp/gate_profile smoke l_paragraph_scrub" \
+    >/tmp/gate_profile.log 2>&1 || {
+    echo "[gate] PROFILE FAILED"; grep -a '\[profile\]' /tmp/gate_profile.log | tail -20; exit 1; }
+  [[ -s /tmp/gate_profile/l_paragraph_scrub_smoke.txt ]] || {
+    echo "[gate] PROFILE WROTE NO MAIN PLAN"; exit 1; }
   echo "[gate] smoke OK"
 fi
