@@ -43,7 +43,10 @@ object Graft {
 
   /** Force re-registration on next query() — call after external
     * writers add files beneath `dir` (the memoized temp views hold the
-    * file listing from registration time).
+    * file listing from registration time). The table schema memo
+    * ([[Tables.schemaOf]]) needs no refresh: it is keyed on the file
+    * listing itself, so re-registration re-infers exactly the tables
+    * whose files changed.
     */
   def refreshViews(spark: SparkSession): Unit =
     viewsReady.synchronized { viewsReady.remove(spark) }
@@ -297,7 +300,8 @@ object Graft {
       require(fs.getFileStatus(target).isDirectory,
         s"$path is a single-file table (read-only source data); bulk ingest " +
           "targets directory-backed lake tables")
-      val existing = spark.read.parquet(path).schema
+      // keyed on the current listing: an external rewrite re-infers
+      val existing = Tables.schemaOf(spark, path)
       // names, types and ORDER must match; nullability deliberately
       // excluded — parquet round-trips every column nullable, so a
       // fresh batch's non-null primitives would never append otherwise

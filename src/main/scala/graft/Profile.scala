@@ -3,18 +3,24 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
+import org.apache.spark.sql.graftshim.Shim
 
 /** Plan and metric profile of registered queries, each run once through
   * [[GraftRun.execute]] after a warm-up — the plan the bench times, so
   * the committed evidence and the attribution describe the timed work.
   *
-  * For each query it writes the noop write's AQE-final plan to
+  * For each query it first prints one `[profile] <query>: build <ms> ms,
+  * <n> jobs before the write` line: the time to build the DataFrame and
+  * the Spark jobs that build launched (table schema inference on a cold
+  * memo, eager checkpoints, driver-side collects). Then it writes the
+  * noop write's AQE-final plan to
   * `<outDir>/<query>_<suffix>.txt` and every earlier execution
   * (localCheckpoint segments, internal collects), numbered in
   * completion order, to `<query>_<suffix>_seg<k>.txt`. Then, for every
@@ -36,14 +42,28 @@ object Profile {
     val (spark, _) = GraftRun.session(sfDir)
     val qs = GraftRun.select(args.drop(3).toSeq)
     val stages = new ConcurrentLinkedQueue[StageInfo]()
+    val jobs = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = stages.add(sc.stageInfo)
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
     })
     GraftRun.warmUp(spark, qs, sfDir)
     val failed = qs.filterNot { q =>
       stages.clear()
       try {
-        val r = GraftRun.execute(spark)(q.fn(spark, sfDir))
+        var buildMs = 0.0
+        var buildJobs = 0
+        val r = GraftRun.execute(spark) {
+          // execute drained the bus on entry: count from here
+          jobs.set(0)
+          val t0 = System.nanoTime()
+          val df = q.fn(spark, sfDir)
+          buildMs = (System.nanoTime() - t0) / 1e6
+          Shim.drainListenerBus(spark)
+          buildJobs = jobs.get()
+          df
+        }
+        println(f"[profile] ${q.name}: build ${buildMs}%.0f ms, $buildJobs jobs before the write")
         println(f"========== ${q.name}: wall=${r.wallSeconds}%.2fs, ${r.executions.size} executions")
         r.executions.zipWithIndex.foreach { case (e, i) =>
           val plan = e.qe.explainString(FormattedMode)

@@ -1,15 +1,25 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
-  * Reads are plain `spark.read.parquet` so Catalyst keeps full pushdown:
-  * column pruning and predicate pushdown reach the parquet scan, and at
-  * cluster scale partition pruning applies if the layout is directory-
-  * partitioned. No caching here — operators decide what to reuse.
+  * Reads are `spark.read.schema(s).parquet` with `s` from [[schemaOf]],
+  * a per-session memo of Spark's own parquet schema inference. Its key is
+  * the table's qualified path, the recursive listing of its files as
+  * (path, length, modification time), and the session's values of the
+  * confs inference reads; an added, removed or rewritten file or a
+  * changed conf misses and re-infers, so the memo never needs a refresh.
+  * Only the inference job is saved: Spark still lists the files at read
+  * time, and Catalyst keeps full pushdown — column pruning and predicate
+  * pushdown reach the parquet scan, and at cluster scale partition
+  * pruning applies if the layout is directory-partitioned. No data
+  * caching here — operators decide what to reuse.
   *
   * `events.ts` is nanosecond-precision parquet, which Spark only reads
   * as a Long (spark.sql.legacy.parquet.nanosAsLong — set by our session
@@ -26,7 +36,8 @@ object Tables {
     // register() is idempotent and cheap, and every query loads at least
     // one table, so this guarantees graft_* functions resolve everywhere.
     graft.functions.GraftFunctions.register(spark)
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") raw.schema("ts").dataType match {
       // ns-precision parquet read as Long (nanosAsLong): truncate to µs
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -37,6 +48,58 @@ object Tables {
       case _ => raw
     } else raw
   }
+
+  /** The session confs Spark's parquet schema inference reads. */
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  private type Listing = Seq[(String, Long, Long)]
+  private type Memo = mutable.Map[String, (Listing, Map[Seq[Option[String]], StructType])]
+
+  // session → qualified path → (the path's latest listing, schema per
+  // inference-conf values over that listing). Weak keys like
+  // Graft.viewsReady; a path keeps only its latest listing, so repeated
+  // appends replace the entry instead of piling up old file sets.
+  private val schemas = new java.util.WeakHashMap[SparkSession, Memo]()
+
+  /** `spark.read.parquet(path).schema`, memoized per session on the
+    * qualified path, the recursive (path, length, modification time)
+    * listing of its files and the [[inferenceConfs]] values. A miss runs
+    * that inference (one Spark job); a hit launches none. The listing is
+    * taken BEFORE inference, so a file written in between can only leave
+    * an entry under a listing that no later call matches, never a stale
+    * schema under the new listing. A missing path lists empty and
+    * misses, and the inference raises Spark's own error.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p).toString
+    val listing: Listing =
+      try files(fs, fs.getFileStatus(p)).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val confs = inferenceConfs.map(spark.conf.getOption)
+    def memoFor(m: Memo) =
+      m.get(qualified).collect { case (`listing`, byConf) => byConf }.getOrElse(Map.empty)
+    val hit = schemas.synchronized { Option(schemas.get(spark)).flatMap(memoFor(_).get(confs)) }
+    hit.getOrElse {
+      val schema = spark.read.parquet(path).schema
+      schemas.synchronized {
+        val m = schemas.computeIfAbsent(spark, _ => mutable.Map.empty)
+        m(qualified) = (listing, memoFor(m) + (confs -> schema))
+      }
+      schema
+    }
+  }
+
+  /** Every file beneath `st`, recursively (`st` itself if it is one). */
+  private def files(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files(fs, _))
+    else Seq(st)
 
   /** Partition count for corpus-wide text/vector work repartitioned off
     * a driver single-file table: the cores floor, raised so no task
@@ -53,7 +116,7 @@ object Tables {
     * documented as droppable entirely.
     */
   def workPartitions(spark: SparkSession, dir: String, name: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val p = new Path(s"$dir/$name.parquet")
     val bytes =
       try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getContentSummary(p).getLength
@@ -82,7 +145,7 @@ object Tables {
   def initialShufflePartitions(dir: String, cores: Int): Int = {
     val conf = new org.apache.hadoop.conf.Configuration()
     val bytes = all.map { name =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+      val p = new Path(s"$dir/$name.parquet")
       try p.getFileSystem(conf).getContentSummary(p).getLength
       catch { case scala.util.control.NonFatal(e) =>
         // ADVICE r11: swallowing Throwable masked a wrong/missing dir as
@@ -110,13 +173,9 @@ object Tables {
     */
   def rowCount(spark: SparkSession, dir: String, name: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
+    val root = new Path(s"$dir/$name.parquet")
     val fs = root.getFileSystem(conf)
-    def files(st: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.FileStatus] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
-      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-      else Nil
-    files(fs.getFileStatus(root)).map { f =>
+    files(fs, fs.getFileStatus(root)).filter(_.getPath.getName.endsWith(".parquet")).map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()

@@ -299,9 +299,10 @@ object Materialize {
     * evolves, day partitions written under the old schema are ignored
     * by (schema-pinned) queries but keep occupying storage. One row
     * per incompatible partition with both hashes, so the retirement
-    * below can target exactly these by metadata. Schema is read from
-    * one parquet FOOTER per day on the driver — O(days) metadata
-    * reads, no data scan, no Spark job.
+    * below can target exactly these by metadata. Each day's schema is
+    * Spark's inference over one of its files, through the
+    * [[graft.Tables.schemaOf]] memo: one small inference job per day on
+    * the first call, none on a repeat over unchanged files. No data scan.
     */
   def listIncompatiblePartitions(spark: SparkSession, outDir: String,
       current: org.apache.spark.sql.types.StructType): DataFrame = {
@@ -321,9 +322,9 @@ object Materialize {
             .filter(_.getPath.getName.endsWith(".parquet"))
             .sortBy(_.getPath.getName)
           files.headOption.map { f =>
-            // footer-only schema read; partition dirs are single-schema
-            // by construction (each day is written in one atomic swap)
-            val schema = spark.read.parquet(f.getPath.toString).schema
+            // partition dirs are single-schema by construction (each
+            // day is written in one atomic swap), so one file decides
+            val schema = graft.Tables.schemaOf(spark, f.getPath.toString)
             (s.getPath.getName.stripPrefix("date="), schemaHash(schema), currentHash,
               files.size.toLong, files.map(_.getLen).sum)
           }

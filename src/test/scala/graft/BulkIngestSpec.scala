@@ -55,6 +55,36 @@ class BulkIngestSpec extends SparkSpec with TmpDirSupport {
     assert(spark.read.parquet(s"$dir/events.parquet").count() === 10L)
   }
 
+  test("schema gate on a warm memo: views registered, a drifted batch is still rejected") {
+    val dir = seededLake()
+    Graft.bulkIngest(spark, dir, "events", eventRows(1 to 10, "error"))
+    assert(Graft.query(spark, dir, "SELECT count(*) FROM events").head().getLong(0) === 10L)
+    val drifted = eventRows(11 to 12, "error").withColumn("user_id", col("user_id").cast("int"))
+    val e = intercept[IllegalArgumentException] {
+      Graft.bulkIngest(spark, dir, "events", drifted)
+    }
+    assert(e.getMessage.contains("schema mismatch"))
+    assert(Graft.query(spark, dir, "SELECT count(*) FROM events").head().getLong(0) === 10L)
+  }
+
+  test("schema gate reads an external rewrite, not the memo") {
+    val dir = seededLake()
+    Graft.bulkIngest(spark, dir, "events", eventRows(1 to 10, "error"))
+    assert(Graft.query(spark, dir, "SELECT count(*) FROM events").head().getLong(0) === 10L)
+    // another writer replaces the table with a widened schema
+    val widened = eventRows(1 to 10, "error").withColumn("host", lit("h1"))
+    widened.write.mode("overwrite").parquet(s"$dir/events.parquet")
+    val e = intercept[IllegalArgumentException] {
+      Graft.bulkIngest(spark, dir, "events", eventRows(11 to 12, "error"))
+    }
+    assert(e.getMessage.contains("schema mismatch"))
+    // the new shape is the one the gate now accepts
+    assert(Graft.bulkIngest(spark, dir, "events",
+      eventRows(11 to 12, "error").withColumn("host", lit("h2"))) === 2L)
+    assert(Graft.query(spark, dir, "SELECT count(*) FROM events WHERE host IS NOT NULL")
+      .head().getLong(0) === 12L)
+  }
+
   test("single-file source tables are refused, not corrupted") {
     val e = intercept[IllegalArgumentException] {
       Graft.bulkIngest(spark, sfDir, "events", eventRows(1 to 2, "error"))

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Tables.rowCount is the metadata path for corpus-size scale knobs
@@ -11,27 +8,6 @@ import org.apache.spark.sql.functions._
   * K for l_semantic_dedup no longer pays a full scan before the query.
   */
 class LakeStatsSpec extends SparkSpec {
-
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val jobs = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = body
-      // listener events are async; any job `body` ran has completed
-      // (runJob blocks), so its JobStart is already posted — give the
-      // bus a moment to deliver, then wait for the count to go stable
-      var prev = -1
-      var settles = 0
-      while (settles < 3 && prev != jobs.get()) {
-        prev = jobs.get(); Thread.sleep(150); settles += 1
-      }
-      (a, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   test("footer row count matches the scanned count, with zero Spark jobs") {
     for (t <- Seq("embeddings", "documents", "lineitem")) {

@@ -432,6 +432,17 @@ class MaterializeSpec extends SparkSpec with TmpDirSupport {
     assert(JitPartitions.listParts(spark, out).isEmpty)
   }
 
+  test("listIncompatiblePartitions: a repeat on an unchanged lake launches no Spark job") {
+    val out = tmpDir("graft-schrepeat") + "/view"
+    Materialize.updateByDay(spark, statsSource, out)
+    val evolved = statsSource.withColumn("sampled", lit(false)).schema
+    val (first, cold) = jobsDuring(Materialize.listIncompatiblePartitions(spark, out, evolved).collect())
+    assert(first.nonEmpty && cold > 0)
+    val (again, warm) = jobsDuring(Materialize.listIncompatiblePartitions(spark, out, evolved).collect())
+    assert(warm === 0)
+    assert(again.toSeq === first.toSeq)
+  }
+
   test("schema evolution: incompatible partitions listed exactly, retired exactly") {
     val out = java.nio.file.Files.createTempDirectory("graft-schev").toString + "/view"
     val full = statsSource

@@ -1,15 +1,45 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Shim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for specs (one JVM, reused via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** `body`'s value and the number of Spark jobs it launched from this
+    * thread. Jobs are tagged with a fresh local property, so work left
+    * running by another suite is not counted; the listener bus is
+    * drained before the count is read.
+    */
+  protected def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty(SparkSpec.JobTag) == tag)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(SparkSpec.JobTag, tag)
+    try {
+      val a = body
+      Shim.drainListenerBus(spark)
+      (a, jobs.get())
+    } finally {
+      sc.setLocalProperty(SparkSpec.JobTag, null)
+      sc.removeSparkListener(l)
+    }
+  }
 }
 
 object SparkSpec {
+  private val JobTag = "graft.test.jobTag"
+
   lazy val session: SparkSession = {
     // Overridable so plan-audit specs (BroadcastBudgetSpec) can run
     // against generated decade lakes at full width:

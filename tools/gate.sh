@@ -44,5 +44,7 @@ if [[ "${1:-}" == "smoke" ]]; then
     echo "[gate] PROFILE FAILED"; grep -a '\[profile\]' /tmp/gate_profile.log | tail -20; exit 1; }
   [[ -s /tmp/gate_profile/l_paragraph_scrub_smoke.txt ]] || {
     echo "[gate] PROFILE WROTE NO MAIN PLAN"; exit 1; }
+  grep -a '^\[profile\] l_paragraph_scrub: build ' /tmp/gate_profile.log || {
+    echo "[gate] PROFILE PRINTED NO BUILD LINE"; exit 1; }
   echo "[gate] smoke OK"
 fi
