@@ -166,28 +166,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions", name),
         b))
     }
-    ext.injectTableFunction((
-      FunctionIdentifier("view_instance"),
-      new ExpressionInfo("graft.functions", "view_instance"),
-      // the builder needs the session for lake-dir resolution, which
-      // injectTableFunction doesn't pass — resolve the active one
-      args => ReferenceNames.viewInstanceBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("get_payload"),
-      new ExpressionInfo("graft.functions", "get_payload"),
-      args => ReferenceNames.getPayloadBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("jsonb_each"),
-      new ExpressionInfo("graft.functions", "jsonb_each"),
-      args => ReferenceNames.jsonbEachBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("jsonb_array_elements"),
-      new ExpressionInfo("graft.functions", "jsonb_array_elements"),
-      args => ReferenceNames.jsonbArrayElementsBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("expand_histogram"),
-      new ExpressionInfo("graft.functions", "expand_histogram"),
-      args => ReferenceNames.expandHistogramBuilder(SparkSession.active)(args)))
+    // the builders need the session for lake-dir resolution, which
+    // injectTableFunction doesn't pass — resolve the active one
+    ReferenceNames.tableFunctions.foreach { case (name, b) =>
+      ext.injectTableFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name),
+        args => b(SparkSession.active)(args)))
+    }
     ext.injectResolutionRule(session => graft.plans.TimeRangeRewrite(session))
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)

@@ -604,6 +604,23 @@ object ReferenceNames {
       .queryExecution.logical
   }
 
+  /** Every non-admin table function, name → builder over its session.
+    * Both installers iterate this one list: [[register]] binds the
+    * builders to the given session, [[GraftExtensions]] to the session
+    * active when the call is resolved.
+    */
+  val tableFunctions: Seq[(String, SparkSession => Seq[Expression] => LogicalPlan)] = Seq(
+    "view_instance" -> (viewInstanceBuilder(_)),
+    "get_payload" -> (getPayloadBuilder(_)),
+    "jsonb_each" -> (jsonbEachBuilder(_)),
+    "jsonb_array_elements" -> (jsonbArrayElementsBuilder(_)),
+    "expand_histogram" -> (expandHistogramBuilder(_)),
+    "list_partitions" -> (listPartitionsBuilder(_)),
+    "list_view_sets" -> (listViewSetsBuilder(_)),
+    "process_spans" -> (processSpansBuilder(_)),
+    "parse_block" -> (parseBlockBuilder(_)),
+    "perfetto_trace_chunks" -> (perfettoTraceChunksBuilder(_)))
+
   /** Install the alias names on a session we didn't build (idempotent
     * via createOrReplace; cheap). The extensions path registers the
     * same builders at session build time.
@@ -613,26 +630,9 @@ object ReferenceNames {
     builders.foreach { case (name, b) =>
       ss.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
     }
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "view_instance", viewInstanceBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "get_payload", getPayloadBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "jsonb_each", jsonbEachBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "jsonb_array_elements", jsonbArrayElementsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "expand_histogram", expandHistogramBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "list_partitions", listPartitionsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "list_view_sets", listViewSetsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "process_spans", processSpansBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "parse_block", parseBlockBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "perfetto_trace_chunks", perfettoTraceChunksBuilder(spark), "scala_udf")
+    tableFunctions.foreach { case (name, b) =>
+      ss.tableFunctionRegistry.createOrReplaceTempFunction(name, b(spark), "scala_udf")
+    }
     // The admin five exist only on sessions whose CONTEXT was built
     // admin (SparkConf, immutable from SQL) — reference query.rs:152.
     if (adminFromSparkConf(spark)) registerAdmin(spark)

@@ -14,11 +14,11 @@ import org.apache.spark.sql.graftshim.Shim
 /** Native backward as-of join as a first-class Catalyst operator:
   * custom LogicalPlan + SparkStrategy + BinaryExecNode.
   *
-  * Semantics (same as [[graft.operators.AsofJoin]], the composed
-  * window formulation, and DuckDB/QuestDB `ASOF JOIN`): for each left
-  * row, the single right row with the same key and the largest
+  * Semantics (DuckDB/QuestDB `ASOF JOIN`): for each left row, the
+  * single right row with the same key and the largest
   * `rightTime <= leftTime` (inclusive; ties on time resolved by right
-  * sort order, i.e. the last one). Left rows with no match get nulls.
+  * sort order, i.e. the last one — pinned by `rightTiebreak`). Left
+  * rows with no match get nulls.
   *
   * Execution model — built for the 100 TB case:
   *  - `requiredChildDistribution` co-partitions both sides by key
@@ -52,20 +52,27 @@ object AsofJoinNative {
     * time type. Right columns are suffixed with `rightSuffix` when
     * they collide with left names. Both time columns must have the
     * same type.
+    *
+    * `rightTiebreak` (right column names, before suffixing) orders
+    * equal-time right rows: backward picks the largest
+    * `(rightTime, rightTiebreak)`, forward the smallest. Without it the
+    * pick among equal times follows sort arrival order.
     */
   def join(left: DataFrame, right: DataFrame, key: Seq[String],
       leftTime: String, rightTime: String, rightSuffix: String = "_r",
-      direction: String = "backward", tolerance: Option[Long] = None): DataFrame = {
+      direction: String = "backward", tolerance: Option[Long] = None,
+      rightTiebreak: Seq[String] = Nil): DataFrame = {
     val spark = left.sparkSession
     require(direction == "backward" || direction == "forward",
       s"direction must be backward|forward, got $direction")
     require(tolerance.forall(_ >= 0), "tolerance must be >= 0")
     Shim.addStrategy(spark, AsofJoinStrategy)
-    val r = TemporalJoinResolution.resolve(left, right, key, leftTime, rightTime, rightSuffix)
+    val r = TemporalJoinResolution.resolve(left, right, key, leftTime, rightTime,
+      rightSuffix, rightTiebreak)
     if (tolerance.isDefined) AsofJoinExec.timeExtractor(r.leftTime.dataType) // fail fast
     Shim.ofRows(spark,
       AsofJoinNode(r.leftPlan, r.rightPlan, r.leftKeys, r.rightKeys, r.leftTime, r.rightTime,
-        forward = direction == "forward", tolerance = tolerance))
+        forward = direction == "forward", tolerance = tolerance, rightTiebreak = r.rightTiebreak))
   }
 }
 
@@ -78,10 +85,11 @@ private[plans] object TemporalJoinResolution {
   final case class Resolved(
       leftPlan: LogicalPlan, rightPlan: LogicalPlan,
       leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
-      leftTime: Attribute, rightTime: Attribute)
+      leftTime: Attribute, rightTime: Attribute, rightTiebreak: Seq[Attribute])
 
   def resolve(left: DataFrame, right: DataFrame, key: Seq[String],
-      leftTime: String, rightTime: String, rightSuffix: String): Resolved = {
+      leftTime: String, rightTime: String, rightSuffix: String,
+      rightTiebreak: Seq[String] = Nil): Resolved = {
     val spark = left.sparkSession
     val lPlan = left.queryExecution.analyzed
     // de-collide right column names BEFORE analysis capture so the
@@ -102,15 +110,14 @@ private[plans] object TemporalJoinResolution {
       plan.output.find(a => resolver(a.name, name)).getOrElse(
         throw new IllegalArgumentException(
           s"column $name not in [${plan.output.map(_.name).mkString(", ")}]"))
+    def rightAttr(name: String): Attribute =
+      attr(rPlan, if (leftNames.contains(name)) name + rightSuffix else name)
     val lKeys = key.map(attr(lPlan, _))
-    val rKeys = key.map(k => attr(rPlan,
-      if (leftNames.contains(k)) k + rightSuffix else k))
     val lT = attr(lPlan, leftTime)
-    val rT = attr(rPlan,
-      if (leftNames.contains(rightTime)) rightTime + rightSuffix else rightTime)
+    val rT = rightAttr(rightTime)
     require(lT.dataType == rT.dataType,
       s"time column types differ: ${lT.dataType} vs ${rT.dataType}")
-    Resolved(lPlan, rPlan, lKeys, rKeys, lT, rT)
+    Resolved(lPlan, rPlan, lKeys, key.map(rightAttr), lT, rT, rightTiebreak.map(rightAttr))
   }
 }
 
@@ -121,7 +128,8 @@ case class AsofJoinNode(
     left: LogicalPlan, right: LogicalPlan,
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
     leftTime: Attribute, rightTime: Attribute,
-    forward: Boolean = false, tolerance: Option[Long] = None) extends BinaryNode {
+    forward: Boolean = false, tolerance: Option[Long] = None,
+    rightTiebreak: Seq[Attribute] = Nil) extends BinaryNode {
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(a => a.withNullability(true))
   override protected def withNewChildrenInternal(
@@ -131,8 +139,8 @@ case class AsofJoinNode(
 
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case AsofJoinNode(l, r, lk, rk, lt, rt, fwd, tol) =>
-      AsofJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, fwd, tol) :: Nil
+    case AsofJoinNode(l, r, lk, rk, lt, rt, fwd, tol, tb) =>
+      AsofJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, fwd, tol, tb) :: Nil
     case _ => Nil
   }
 }
@@ -161,7 +169,8 @@ case class AsofJoinExec(
     left: SparkPlan, right: SparkPlan,
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],
     leftTime: Attribute, rightTime: Attribute,
-    forward: Boolean = false, tolerance: Option[Long] = None) extends BinaryExecNode {
+    forward: Boolean = false, tolerance: Option[Long] = None,
+    rightTiebreak: Seq[Attribute] = Nil) extends BinaryExecNode {
 
   override def output: Seq[Attribute] =
     left.output ++ right.output.map(a => a.withNullability(true))
@@ -173,9 +182,12 @@ case class AsofJoinExec(
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
 
+  // the tiebreak extends the right sort, so the merge's last (backward)
+  // or first (forward) qualifying row is the largest or smallest
+  // (time, tiebreak)
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     (leftKeys :+ leftTime).map(SortOrder(_, Ascending)),
-    (rightKeys :+ rightTime).map(SortOrder(_, Ascending)))
+    ((rightKeys :+ rightTime) ++ rightTiebreak).map(SortOrder(_, Ascending)))
 
   // the merge consumes the left side in order and emits 1:1
   override def outputPartitioning: Partitioning = left.outputPartitioning
@@ -268,12 +280,14 @@ case class AsofJoinExec(
               }
             } else advancing = false // right is ahead: stop
           }
+          // the true gap is in [0, 2^64): the wrapped difference read
+          // unsigned is exact even across the Long extremes
           val withinTol = carry != null && (tolerance match {
             case None => true
             case Some(tol) =>
               val gap = if (forward) toLong(carryTime) - toLong(lTimeVal)
                         else toLong(lTimeVal) - toLong(carryTime)
-              gap <= tol
+              java.lang.Long.compareUnsigned(gap, tol) <= 0
           })
           numOutputRows += 1
           if (withinTol) numMatched += 1

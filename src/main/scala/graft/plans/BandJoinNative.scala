@@ -14,11 +14,11 @@ import org.apache.spark.sql.graftshim.Shim
   * lie within `width` of each other — as a first-class Catalyst
   * operator, the Flink-interval-join execution shape on Spark.
   *
-  * The composed formulation ([[graft.operators.BandJoin]]) buckets
-  * time and equi-joins on (key, bin), which costs a 3× explode of the
-  * left side, band-edge rows that the post-filter discards, and hash
-  * tables over full key groups. This exec instead merges the two
-  * (key, time)-sorted, co-partitioned streams with a sliding deque of
+  * A plain `|lt - rt| <= w` predicate plans a nested loop per key
+  * group, and bucketing time into an equi-join on (key, bin) costs a
+  * 3× explode of one side, band-edge rows that a post-filter discards,
+  * and hash tables over full key groups. This exec instead merges the
+  * two (key, time)-sorted, co-partitioned streams with a sliding deque of
   * the right rows currently inside `[leftTime - width, leftTime + width]`:
   * O(n + m + output) work, state bounded by the band's row density —
   * the intrinsic minimum any interval join must hold.
@@ -121,6 +121,9 @@ case class BandJoinExec(
           Iterator.empty
         } else {
           val lt = toLong(lTimeVal)
+          // the band [lt - w, lt + w], saturated at the Long extremes
+          val lo = if (lt < Long.MinValue + w) Long.MinValue else lt - w
+          val hi = if (lt > Long.MaxValue - w) Long.MaxValue else lt + w
           // new key group: the old band can never match again
           if (bandKey == null || keyOrd.compare(bandKey, lKey) != 0) {
             rows.clear(); times.clear()
@@ -128,7 +131,7 @@ case class BandJoinExec(
           }
           // evict rows that fell behind the band (left times ascend,
           // so they can't match any later left row either)
-          while (!times.isEmpty && times.peekFirst() < lt - w) {
+          while (!times.isEmpty && times.peekFirst() < lo) {
             times.pollFirst(); rows.pollFirst()
           }
           // pull right rows into the band up to lt + w
@@ -143,10 +146,10 @@ case class BandJoinExec(
               if (rTimeVal == null) { rBuf.next(); () } // unusable
               else {
                 val rt = toLong(rTimeVal)
-                if (rt <= lt + w) {
+                if (rt <= hi) {
                   val row = rBuf.next().copy()
-                  if (rt >= lt - w) { rows.addLast(row); times.addLast(rt) }
-                  // rt < lt - w: consumed and dropped — can't match
+                  if (rt >= lo) { rows.addLast(row); times.addLast(rt) }
+                  // rt < lo: consumed and dropped — can't match
                   // this or any later (larger-time) left row
                 } else advancing = false // beyond the band: stop
               }

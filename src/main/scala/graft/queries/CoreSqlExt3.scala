@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import graft.operators.AsofJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -467,20 +466,8 @@ object CoreSqlExt3 {
 
     GraftQuery("m_band_join", (s, dir) => {
       // temporal correlation: purchases within 30 min of each error,
-      // per user — bucketed band join (operators.BandJoin), never a
-      // per-key nested loop; oracle uses the direct inequality join
-      val e = t(s, dir, "events")
-      val errs = e.where(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"), col("ts"))
-      val purch = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-      graft.operators.BandJoin.within(errs, purch, "user_id",
-          epochMs(col("ts")), epochMs(col("ts")), widthMs = 1800000L)
-        .select(col("l_user_id").as("user_id"),
-          col("l_event_id").as("err_id"), col("r_event_id").as("pur_id"),
-          (epochMs(col("r_ts")) - epochMs(col("l_ts"))).as("dt_ms"),
-          round(col("r_value"), 2).as("value"))
-        .orderBy("user_id", "err_id", "pur_id")
+      // per user; the oracle uses the direct inequality join
+      ObservabilityExt2.errorPurchaseBand(s, dir)
     }, Some("""
       SELECT e.user_id AS user_id, e.event_id AS err_id, p.event_id AS pur_id,
         epoch_ms(p.ts) - epoch_ms(e.ts) AS dt_ms,
@@ -493,19 +480,9 @@ object CoreSqlExt3 {
 
     GraftQuery("m_asof_join", (s, dir) => {
       // backward as-of join: for each error event, the latest purchase
-      // value at-or-before it for that user (ASOF JOIN semantics via
-      // the union + carry-forward window — see operators.AsofJoin)
-      val e = t(s, dir, "events")
-      val errs = e.where(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"), epochMs(col("ts")).as("t_ms"))
-      val meas = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("m_id"),
-          epochMs(col("ts")).as("mt_ms"), col("value"))
-      AsofJoin.asofBackward(errs, meas, "user_id", col("t_ms"), col("mt_ms"),
-          Seq("value", "m_id"), col("event_id"), col("m_id"))
-        .select(col("user_id"), col("event_id"), col("t_ms"),
-          round(col("value"), 2).as("last_purchase"), col("m_id").as("purchase_id"))
-        .orderBy("user_id", "t_ms", "event_id")
+      // value at-or-before it for that user; the oracle is DuckDB's
+      // union + carry-forward window formulation of ASOF JOIN
+      ObservabilityExt2.errorPurchaseAsof(s, dir, forward = false)
     }, Some("""
       WITH l AS (
         SELECT user_id, event_id, epoch_ms(ts) AS t, 1 AS side, event_id AS seq,

@@ -13,6 +13,55 @@ object ObservabilityExt2 {
 
   private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
 
+  /** Error events `(user_id, event_id, t_ms)` and purchases
+    * `(user_id, m_id, mt_ms, value)`: the two sides of the temporal
+    * joins below.
+    */
+  private def errorsAndPurchases(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val e = events(s, dir)
+    (e.where(col("event_type") === "error")
+      .select(col("user_id"), col("event_id"), epochMs(col("ts")).as("t_ms")),
+     e.where(col("event_type") === "purchase")
+      .select(col("user_id"), col("event_id").as("m_id"),
+        epochMs(col("ts")).as("mt_ms"), col("value")))
+  }
+
+  /** For each error event, the same user's purchase latest at-or-before
+    * it (backward) or first at-or-after it within an hour (forward), on
+    * the native as-of exec (AsofJoinNode → AsofJoinStrategy →
+    * AsofJoinExec streaming merge). Equal-time purchases resolve by
+    * `m_id` — the largest backward, the smallest forward — the oracles'
+    * `(mt_ms, m_id)` order. Serves m_asof_join, m_asof_native and
+    * m_asof_forward.
+    */
+  private[queries] def errorPurchaseAsof(s: SparkSession, dir: String,
+      forward: Boolean): DataFrame = {
+    val (errs, purch) = errorsAndPurchases(s, dir)
+    graft.plans.AsofJoinNative.join(errs, purch, Seq("user_id"), "t_ms", "mt_ms",
+        direction = if (forward) "forward" else "backward",
+        tolerance = if (forward) Some(3600000L) else None,
+        rightTiebreak = Seq("m_id"))
+      .select(col("user_id"), col("event_id"), col("t_ms"),
+        round(col("value"), 2).as(if (forward) "next_purchase" else "last_purchase"),
+        col("m_id").as("purchase_id"))
+      .orderBy("user_id", "t_ms", "event_id")
+  }
+
+  /** Temporal correlation: the purchases within 30 min of each error,
+    * per user, on the native sliding-merge band exec (BandJoinNode →
+    * BandJoinExec) — never a per-key nested loop. Serves m_band_join
+    * and m_band_native.
+    */
+  private[queries] def errorPurchaseBand(s: SparkSession, dir: String): DataFrame = {
+    val (errs, purch) = errorsAndPurchases(s, dir)
+    graft.plans.BandJoinNative.join(errs, purch, Seq("user_id"), "t_ms", "mt_ms",
+        width = 1800000L)
+      .select(col("user_id"), col("event_id").as("err_id"), col("m_id").as("pur_id"),
+        (col("mt_ms") - col("t_ms")).as("dt_ms"),
+        round(col("value"), 2).as("value"))
+      .orderBy("user_id", "err_id", "pur_id")
+  }
+
   /** Spans from the synthesized begin/end stream, shared by m_call_tree. */
   private def spans(s: SparkSession, dir: String): DataFrame =
     SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
@@ -107,28 +156,9 @@ object ObservabilityExt2 {
       ORDER BY process_id, stream_tag, block_start_ms""")),
 
     GraftQuery("m_asof_native", (s, dir) => {
-      // the SAME as-of semantics as m_asof_join, but through the native
-      // Catalyst operator (AsofJoinNode → AsofJoinStrategy →
-      // AsofJoinExec streaming merge) instead of the composed window
-      // formulation — both are oracle-checked so the two
-      // implementations are pinned to each other
-      val e = events(s, dir)
-      val errs = e.where(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"), epochMs(col("ts")).as("t_ms"))
-      val meas = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("m_id"),
-          epochMs(col("ts")).as("mt_ms"), col("value"))
-      // the exec's pick among equal (key, time) right rows follows sort
-      // arrival order — fold the unique m_id into sub-ms time so the
-      // winner is total-ordered and matches the oracle's (mt_ms, m_id)
-      // DESC tiebreak even if two purchases ever share a millisecond.
-      // event_id < 1e6 at every SF, so ms*1e6 + id stays within Long.
-      val errsT = errs.withColumn("t2", col("t_ms") * 1000000L + lit(999999L))
-      val measT = meas.withColumn("mt2", col("mt_ms") * 1000000L + col("m_id"))
-      graft.plans.AsofJoinNative.join(errsT, measT, Seq("user_id"), "t2", "mt2")
-        .select(col("user_id"), col("event_id"), col("t_ms"),
-          round(col("value"), 2).as("last_purchase"), col("m_id").as("purchase_id"))
-        .orderBy("user_id", "t_ms", "event_id")
+      // the same builder as m_asof_join, pinned by the row_number form
+      // of the as-of oracle
+      errorPurchaseAsof(s, dir, forward = false)
     }, Some("""
       WITH l AS (SELECT user_id, event_id, epoch_ms(ts) AS t_ms
                  FROM events WHERE event_type = 'error'),
@@ -149,26 +179,10 @@ object ObservabilityExt2 {
       ORDER BY user_id, t_ms, event_id""")),
 
     GraftQuery("m_asof_forward", (s, dir) => {
-      // forward as-of with tolerance through the native operator: the
-      // FIRST purchase at-or-after each error, but only within 1 hour
-      // ("what did the user buy right after the error"). Same sub-ms
-      // id fold as m_asof_native, but the left fold is 0 so same-ms
-      // purchases stay INCLUSIVE and ties pick the smallest id; the
-      // tolerance carries the fold's max id so the 1-hour boundary is
-      // inclusive in ms terms.
-      val e = events(s, dir)
-      val errs = e.where(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"), epochMs(col("ts")).as("t_ms"))
-        .withColumn("t2", col("t_ms") * 1000000L)
-      val meas = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("m_id"),
-          epochMs(col("ts")).as("mt_ms"), col("value"))
-        .withColumn("mt2", col("mt_ms") * 1000000L + col("m_id"))
-      graft.plans.AsofJoinNative.join(errs, meas, Seq("user_id"), "t2", "mt2",
-          direction = "forward", tolerance = Some(3600000L * 1000000L + 999999L))
-        .select(col("user_id"), col("event_id"), col("t_ms"),
-          round(col("value"), 2).as("next_purchase"), col("m_id").as("purchase_id"))
-        .orderBy("user_id", "t_ms", "event_id")
+      // forward as-of with tolerance: the FIRST purchase at-or-after
+      // each error, but only within 1 hour ("what did the user buy
+      // right after the error")
+      errorPurchaseAsof(s, dir, forward = true)
     }, Some("""
       WITH l AS (SELECT user_id, event_id, epoch_ms(ts) AS t_ms
                  FROM events WHERE event_type = 'error'),
@@ -191,22 +205,9 @@ object ObservabilityExt2 {
       ORDER BY user_id, t_ms, event_id""")),
 
     GraftQuery("m_band_native", (s, dir) => {
-      // same band-join semantics as m_band_join, but through the native
-      // sliding-merge operator (BandJoinNode → BandJoinExec) instead of
-      // the bucketed 3×-explode composition; both oracle-checked, so the
-      // two implementations are pinned to each other
-      val e = events(s, dir)
-      val errs = e.where(col("event_type") === "error")
-        .select(col("user_id"), col("event_id"), epochMs(col("ts")).as("t_ms"))
-      val purch = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("pur_id"),
-          epochMs(col("ts")).as("pt_ms"), col("value"))
-      graft.plans.BandJoinNative.join(errs, purch, Seq("user_id"), "t_ms", "pt_ms",
-          width = 1800000L)
-        .select(col("user_id"), col("event_id").as("err_id"), col("pur_id"),
-          (col("pt_ms") - col("t_ms")).as("dt_ms"),
-          round(col("value"), 2).as("value"))
-        .orderBy("user_id", "err_id", "pur_id")
+      // the same builder as m_band_join; the two keys keep their own
+      // oracles
+      errorPurchaseBand(s, dir)
     }, Some("""
       SELECT e.user_id AS user_id, e.event_id AS err_id, p.event_id AS pur_id,
         epoch_ms(p.ts) - epoch_ms(e.ts) AS dt_ms,

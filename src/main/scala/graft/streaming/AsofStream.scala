@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** Streaming backward as-of join: for each probe event, the latest
   * measure at-or-before its event time, on a live stream — the
-  * streaming counterpart of plans.AsofJoinNative / operators.AsofJoin.
+  * streaming counterpart of plans.AsofJoinNative.
   *
   * Event-time correctness is the crux: arrival order is not time
   * order, so a probe can only be answered once the watermark passes

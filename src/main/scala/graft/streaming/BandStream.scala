@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, expr, lit, session_window}
 
 /** Streaming temporal correlation: the live counterpart of the band
-  * join (operators.BandJoin / plans.BandJoinNative) as a Structured
+  * join (plans.BandJoinNative) as a Structured
   * Streaming stream-stream inner join with an event-time range
   * condition.
   *

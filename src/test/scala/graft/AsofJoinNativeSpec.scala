@@ -6,9 +6,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 /** The native Catalyst as-of join (LogicalPlan + Strategy + ExecNode)
-  * must agree with both a brute-force reference and the composed
-  * window formulation ([[graft.operators.AsofJoin]]), and must plan as
-  * a co-partitioned streaming merge.
+  * must agree with a brute-force reference, also at the Long extremes,
+  * and must plan as a co-partitioned streaming merge.
   */
 class AsofJoinNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -46,28 +45,24 @@ class AsofJoinNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(out.where($"lid" === 12L).head().getAs[Long]("rid") === 92L)
   }
 
-  test("agrees with the composed window formulation on events data") {
+  test("agrees with a brute-force reference on events data") {
     val e = Tables.df(spark, sfDir, "events")
     val errs = e.where(col("event_type") === "error")
       .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("t"))
     val meas = e.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("m_id"),
         unix_micros(col("ts")).as("mt"), col("value"))
-    val composed = graft.operators.AsofJoin
-      .asofBackward(errs, meas, "user_id", col("t"), col("mt"),
-        Seq("value", "m_id"), col("event_id"), col("m_id"))
-      .select("user_id", "event_id", "t", "value", "m_id")
-    // native right side sorted by (key, time) alone: make the time-tie
-    // winner deterministic and identical to the composed (time, seq)
-    // order by folding the seq into sub-µs time (ts are ms-spaced)
-    val measU = meas.withColumn("mt2", col("mt") * 1000 + pmod(col("m_id"), lit(1000)))
-    val native = AsofJoinNative
-      .join(errs.withColumn("t2", col("t") * 1000 + lit(999)), measU,
-        Seq("user_id"), "t2", "mt2")
-      .select("user_id", "event_id", "t", "value", "m_id")
-    assert(native.exceptAll(composed).isEmpty && composed.exceptAll(native).isEmpty,
-      "native and composed as-of join disagree")
-    assert(native.count() === errs.count())
+    val got = AsofJoinNative.join(errs, meas, Seq("user_id"), "t", "mt",
+        rightTiebreak = Seq("m_id"))
+      .select("event_id", "m_id").as[(Long, Option[Long])].collect().toMap
+    val ms = meas.select("user_id", "m_id", "mt").as[(Long, Long, Long)].collect().toSeq
+    val es = errs.select("user_id", "event_id", "t").as[(Long, Long, Long)].collect().toSeq
+    // per error, the max-(mt, m_id) purchase of its user at-or-before it
+    val want = es.map { case (u, id, t) =>
+      id -> ms.filter(m => m._1 == u && m._3 <= t).maxByOption(m => (m._3, m._2)).map(_._2)
+    }.toMap
+    assert(got === want)
+    assert(want.values.count(_.isDefined) > 0)
   }
 
   test("matches brute force on randomized inputs (ties, nulls, empty keys)") {
@@ -140,6 +135,32 @@ class AsofJoinNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         val valid = cands.filter(_._3 == bestT).map(_._2).toSet
         assert(out(lid).exists(valid), s"lid=$lid got ${out(lid)} valid=$valid")
       }
+    }
+  }
+
+  test("extreme times: the tolerance gap does not wrap (BigInt brute force, both directions)") {
+    val (mn, mx) = (Long.MinValue, Long.MaxValue)
+    // key 1 is dense; on keys 2-5 the only candidate lies across zero,
+    // so the gap exceeds Long.MaxValue
+    val lTimes = Seq(1L -> Seq(mn, mn + 1, mn + 50, -5L, 0L, 5L, mx - 50, mx - 1, mx),
+      2L -> Seq(mx - 1, mx), 3L -> Seq(mn, mn + 1), 4L -> Seq(mx), 5L -> Seq(mn))
+    val rTimes = Seq(1L -> Seq(mn, mn + 2, -10L, 3L, mx - 60, mx - 2, mx),
+      2L -> Seq(-10L), 3L -> Seq(5L), 4L -> Seq(mn), 5L -> Seq(mx))
+    def rows(ts: Seq[(Long, Seq[Long])], id0: Long) =
+      ts.flatMap { case (k, t) => t.map(k -> _) }.zipWithIndex
+        .map { case ((k, t), i) => (k, id0 + i, t) }
+    val (lRows, rRows) = (rows(lTimes, 0L), rows(rTimes, 100L))
+    val (l, r) = (lRows.toDF("k", "lid", "lt"), rRows.toDF("k", "rid", "rt"))
+    for (forward <- Seq(false, true); tol <- Seq(0L, 1L, 100L, mx)) {
+      val got = AsofJoinNative.join(l, r, Seq("k"), "lt", "rt",
+          direction = if (forward) "forward" else "backward", tolerance = Some(tol))
+        .select("lid", "rid").as[(Long, Option[Long])].collect().toMap
+      val want = lRows.map { case (k, lid, lt) =>
+        val cands = rRows.filter(rr => rr._1 == k && (if (forward) rr._3 >= lt else rr._3 <= lt))
+        val best = if (forward) cands.minByOption(_._3) else cands.maxByOption(_._3)
+        lid -> best.filter(rr => (BigInt(rr._3) - BigInt(lt)).abs <= BigInt(tol)).map(_._2)
+      }.toMap
+      assert(got === want, s"forward=$forward tolerance=$tol")
     }
   }
 

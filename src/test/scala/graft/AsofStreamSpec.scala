@@ -109,15 +109,13 @@ class AsofStreamSpec extends SparkSpec {
       val streamed = collected("asof_stream_t3").collect {
         case (pid, (Some(mid), _)) => pid -> mid
       }
-      // batch reference: fold ids into sub-ms time for deterministic ties
-      import org.apache.spark.sql.functions._
-      // probes are inclusive of same-ms measures → fold 999 (> any
-      // measure id mod) into the probe side
-      val l = probes.toDF().select(col("key"), col("id").as("pid"),
-        (unix_millis(col("ts")) * 1000 + 999).as("t2"))
-      val r = measures.toDF().select(col("key").as("key"), col("id").as("mid"),
-        (unix_millis(col("ts")) * 1000 + col("id") % 1000).as("mt2"))
-      val batch = graft.plans.AsofJoinNative.join(l, r, Seq("key"), "t2", "mt2")
+      // batch reference: equal-time measures resolve by id, as in
+      // the stream's (t, id) order
+      import org.apache.spark.sql.functions.col
+      val l = probes.toDF().select(col("key"), col("id").as("pid"), col("ts"))
+      val r = measures.toDF().select(col("key"), col("id").as("mid"), col("ts").as("mts"))
+      val batch = graft.plans.AsofJoinNative.join(l, r, Seq("key"), "ts", "mts",
+          rightTiebreak = Seq("mid"))
         .select("pid", "mid").as[(Long, Option[Long])].collect()
         .collect { case (pid, Some(mid)) => pid -> mid }.toMap
       assert(streamed === batch)

@@ -4,10 +4,9 @@ import graft.plans.{BandJoinExec, BandJoinNative}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
-/** The native sliding-merge band join must agree with the bucketed
-  * composition ([[graft.operators.BandJoin]]) and a brute-force
-  * reference, and must plan as a single merge (no explode, no
-  * post-filter of band edges).
+/** The native sliding-merge band join must agree with a brute-force
+  * reference, also at the Long extremes, and must plan as a single
+  * merge (no explode, no post-filter of band edges).
   */
 class BandJoinNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
@@ -24,23 +23,24 @@ class BandJoinNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(out === Set((10L, 90L), (10L, 91L), (11L, 91L), (20L, 93L)))
   }
 
-  test("agrees with the bucketed composition on events data") {
+  test("agrees with a brute-force reference on events data") {
     val e = Tables.df(spark, sfDir, "events")
     val errs = e.where(col("event_type") === "error")
       .select(col("user_id"), col("event_id"), unix_millis(col("ts")).as("t"))
     val purch = e.where(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id").as("pid"), unix_millis(col("ts")).as("pt"))
-    val native = BandJoinNative.join(errs, purch, Seq("user_id"), "t", "pt",
+    val got = BandJoinNative.join(errs, purch, Seq("user_id"), "t", "pt",
         width = 1800000L)
-      .select(col("event_id").as("err_id"), col("pid").as("pur_id"))
-    val composed = graft.operators.BandJoin.within(
-        errs.select(col("user_id"), col("event_id"), col("t")),
-        purch.select(col("user_id"), col("pid"), col("pt")),
-        "user_id", col("t"), col("pt"), widthMs = 1800000L)
-      .select(col("l_event_id").as("err_id"), col("r_pid").as("pur_id"))
-    assert(native.count() > 0)
-    assert(native.exceptAll(composed).isEmpty && composed.exceptAll(native).isEmpty,
-      "native and bucketed band join disagree")
+      .select("event_id", "pid").as[(Long, Long)].collect().toSet
+    val es = errs.as[(Long, Long, Long)].collect().toSeq
+    val ps = purch.as[(Long, Long, Long)].collect().toSeq
+    val want = (for {
+      (eu, eid, t) <- es
+      (pu, pid, pt) <- ps
+      if eu == pu && math.abs(t - pt) <= 1800000L
+    } yield (eid, pid)).toSet
+    assert(want.nonEmpty)
+    assert(got === want)
   }
 
   test("matches brute force on randomized inputs") {
@@ -57,6 +57,25 @@ class BandJoinNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       if lk == rk && math.abs(lt - rt) <= 40L
     } yield (lid, rid)).toSet
     assert(out === expected)
+  }
+
+  test("extreme times: band bounds saturate at both Long ends (BigInt brute force)") {
+    val (mn, mx) = (Long.MinValue, Long.MaxValue)
+    val times = Seq(mn, mn + 1, mn + 30, mn + 60, -20L, 0L, 20L, mx - 60, mx - 30, mx - 1, mx)
+    val lRows = times.zipWithIndex.map { case (t, i) => (1L, i.toLong, t) }
+    val rRows = times.reverse.zipWithIndex.map { case (t, i) => (1L, 100L + i, t) }
+    for (w <- Seq(1L, 50L, mx)) {
+      val got = BandJoinNative.join(
+          lRows.toDF("k", "lid", "lt"), rRows.toDF("k", "rid", "rt"),
+          Seq("k"), "lt", "rt", width = w)
+        .select("lid", "rid").as[(Long, Long)].collect().toSet
+      val want = (for {
+        (_, lid, lt) <- lRows
+        (_, rid, rt) <- rRows
+        if (BigInt(lt) - BigInt(rt)).abs <= BigInt(w)
+      } yield (lid, rid)).toSet
+      assert(got === want, s"width=$w")
+    }
   }
 
   test("empty sides yield no pairs (inner-join semantics)") {

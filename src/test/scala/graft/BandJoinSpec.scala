@@ -1,20 +1,26 @@
 package graft
 
-import graft.operators.BandJoin
-import org.apache.spark.sql.functions._
+import graft.plans.BandJoinNative
 
+/** The band join's pair set against a brute force, with rows placed
+  * exactly on and just past the band edges.
+  */
 class BandJoinSpec extends SparkSpec {
   import spark.implicits._
 
   test("matches brute force on randomized inputs, including band edges") {
     val rnd = new scala.util.Random(7)
     val ls = Seq.tabulate(150)(i => (rnd.nextInt(4).toLong, i.toLong, rnd.nextInt(1000).toLong))
-    val rs = Seq.tabulate(150)(i => (rnd.nextInt(4).toLong, (500 + i).toLong, rnd.nextInt(1000).toLong))
-    val got = BandJoin.within(
+    // every left time also gets right rows at exactly ±w and ±(w + 1)
+    val edges = ls.take(20).zipWithIndex.flatMap { case ((k, _, t), i) =>
+      Seq(-101L, -100L, 100L, 101L).zipWithIndex.map { case (d, j) =>
+        (k, 2000L + 4 * i + j, t + d) }
+    }
+    val rs = Seq.tabulate(150)(i => (rnd.nextInt(4).toLong, (500 + i).toLong, rnd.nextInt(1000).toLong)) ++ edges
+    val got = BandJoinNative.join(
         ls.toDF("k", "lid", "t"), rs.toDF("k", "rid", "t"),
-        "k", col("t"), col("t"), widthMs = 100L)
-      .select("l_lid", "r_rid").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+        Seq("k"), "t", "t", width = 100L)
+      .select("lid", "rid").as[(Long, Long)].collect().toSet
     val want = (for {
       (lk, lid, lt) <- ls
       (rk, rid, rt) <- rs
@@ -22,14 +28,5 @@ class BandJoinSpec extends SparkSpec {
     } yield (lid, rid)).toSet
     assert(got === want)
     assert(want.nonEmpty)
-  }
-
-  test("plans a hash join on (key, bin), not a nested loop") {
-    val l = Seq((1L, 1L, 10L)).toDF("k", "lid", "t")
-    val r = Seq((1L, 2L, 20L)).toDF("k", "rid", "t")
-    val plan = BandJoin.within(l, r, "k", col("t"), col("t"), 100L)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("NestedLoop") && !plan.contains("CartesianProduct"),
-      s"band join must not nested-loop:\n$plan")
   }
 }

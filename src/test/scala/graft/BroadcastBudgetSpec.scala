@@ -61,7 +61,7 @@ class BroadcastBudgetSpec extends SparkSpec {
     *    over a file scan): the size estimate derives from file bytes ×
     *    column fraction, so it GROWS with the lake and the plan demotes
     *    itself to a shuffle join within a decade (measured: q7's
-    *    customer side and m_band_join/q13/m_otel_spans fact sides all
+    *    customer side and q13/m_otel_spans fact sides all
     *    demote by sf10). The estimate lies by a bounded compression ×
     *    pruning factor (~14× worst measured), so the allowance is
     *    16 × the session's autoBroadcastJoinThreshold — scale-invariant

@@ -4,7 +4,8 @@
 # artifacts. Run this before ANY commit touching src/; run with `smoke`
 # before the end-of-round snapshot.
 #
-#   tools/gate.sh          # sbt -batch compile (fast, ~10 s incremental)
+#   tools/gate.sh          # sbt -batch compile (fast, ~10 s incremental), then
+#                          # print the Scala line count under src/main
 #   tools/gate.sh smoke    # compile + Verify on sf0.001 + oracle compare, then
 #                          # one Bench rep and one Profile run on sf0.001 (~5 min)
 #
@@ -16,6 +17,8 @@ echo "[gate] sbt -batch compile"
 sbt -batch compile >/tmp/gate_compile.log 2>&1 || {
   echo "[gate] COMPILE FAILED"; tail -30 /tmp/gate_compile.log; exit 1; }
 echo "[gate] compile OK"
+# ROADMAP aim 2 tracks main-source size next to the bench total
+echo "[gate] main-source LOC: $(find src/main -name '*.scala' -exec cat {} + | wc -l)"
 
 if [[ "${1:-}" == "smoke" ]]; then
   rm -rf /tmp/gate_vout
