@@ -294,8 +294,7 @@ object Graft {
       rows: org.apache.spark.sql.DataFrame): Long = {
     require(tableName.matches("[A-Za-z0-9_]+"), s"invalid table name: $tableName")
     val path = s"$dir/$tableName.parquet"
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, target) = operators.LakeFs(spark, path)
     if (fs.exists(target)) {
       require(fs.getFileStatus(target).isDirectory,
         s"$path is a single-file table (read-only source data); bulk ingest " +

@@ -243,7 +243,8 @@ final class Lakehouse(spark: SparkSession, dir: String) {
 
   // In production this view is MATERIALIZED (the reference's otel views
   // are batch views built from ingested blocks, never recomputed per
-  // query) — SqlBatchView is the mechanism; this lazy definition is the
+  // query): SqlBatchView.otelSpans writes it slice by slice into the
+  // insert-range partition store, and this lazy definition is its
   // transform. The status branch reads the PRE-parents assembly so the
   // costlier parent-linkage self-join isn't replayed for it.
   private def otelSpansFrom(e: DataFrame): DataFrame = {

@@ -31,6 +31,13 @@ import org.apache.spark.sql.functions._
   *    intersection), not just ones it contains — with partitions the
   *    same run already wrote protected by identity.
   *
+  * The insert-range partition store below is graft's one partition
+  * store for views written by range: the JIT views here, and
+  * [[SqlBatchView]]'s sliced views, whose slice `[b, e)` is the
+  * partition `insert=b-(e-1)-0` (so [[NrtCadence]]'s compaction is
+  * just a wider slice write retiring what it overlaps, as in the
+  * reference's merge.rs).
+  *
   * Grouping is driver-light and distributed per view instance: each
   * (process, stream) key's block METADATA list (minutes, not rows) is
   * folded inside `flatMapGroups`, so a 1000-process lake groups 1000
@@ -214,18 +221,13 @@ object JitPartitions {
     */
   case object Overlap extends RetireMatch
 
-  private def fs(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   private val PartDirName = "insert=(-?\\d+)-(-?\\d+)-(\\d+)".r
 
   /** Registered partitions, from directory names alone (O(partitions)
     * metadata calls, no footer reads).
     */
   def listParts(spark: SparkSession, dir: String): Seq[PartitionRef] = {
-    val (f, p) = fs(spark, dir)
+    val (f, p) = LakeFs(spark, dir)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
       st.getPath.getName match {
@@ -253,7 +255,7 @@ object JitPartitions {
             p.beginInsertMs <= endInsertMs && beginInsertMs <= p.endInsertMs
         }
       }
-    val (f, _) = fs(spark, dir)
+    val (f, _) = LakeFs(spark, dir)
     victims.foreach(v => f.delete(new org.apache.hadoop.fs.Path(v.path), true))
     victims
   }
@@ -276,16 +278,27 @@ object JitPartitions {
     // metadata insert, so the partition never exists
     try df.write.mode("overwrite").parquet(path)
     catch { case e: Throwable =>
-      val (f, _) = fs(spark, dir)
+      val (f, _) = LakeFs(spark, dir)
       f.delete(new org.apache.hadoop.fs.Path(path), true)
       throw e
     }
     meta.foreach { case (hash, count) =>
-      val (f, _) = fs(spark, dir)
-      val out = f.create(new org.apache.hadoop.fs.Path(path, PartMetaName), true)
-      try out.write(s"$hash\n$count\n".getBytes("UTF-8")) finally out.close()
+      val (f, _) = LakeFs(spark, dir)
+      LakeFs.writeText(f, new org.apache.hadoop.fs.Path(path, PartMetaName), s"$hash\n$count\n")
     }
     PartitionRef(path, beginInsertMs, endInsertMs)
+  }
+
+  /** Rows in a written partition, from its parquet footers: metadata
+    * reads only, no Spark job.
+    */
+  def rowCount(spark: SparkSession, ref: PartitionRef): Long = {
+    val (f, p) = LakeFs(spark, ref.path)
+    f.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
+        .HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
+      try r.getRecordCount finally r.close()
+    }.sum
   }
 
   /** Hidden partition-metadata marker ('_' prefix: invisible to Spark
@@ -295,25 +308,12 @@ object JitPartitions {
   val PartMetaName = "_graft_part_meta"
 
   private def readPartMeta(f: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[(String, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path, PartMetaName)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](4096)
-        var n = in.read(chunk)
-        while (n > 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        buf.toString("UTF-8")
-      } finally in.close()
-      text.split("\n", -1).toSeq match {
+      path: String): Option[(String, Long)] =
+    LakeFs.readText(f, new org.apache.hadoop.fs.Path(path, PartMetaName))
+      .map(_.split("\n", -1).toSeq).collect {
         case hash +: count +: _ if count.nonEmpty && count.forall(_.isDigit) =>
-          Some((hash, count.toLong))
-        case _ => None
+          (hash, count.toLong)
       }
-    }
-  }
 
   /** Is a group's target partition already materialized and current?
     * Reference `is_jit_partition_up_to_date` (jit_partitions.rs:738),
@@ -351,7 +351,7 @@ object JitPartitions {
       }
     }
     if (matching.length != 1) return false
-    val (f, _) = fs(spark, dir)
+    val (f, _) = LakeFs(spark, dir)
     readPartMeta(f, matching.head.path) match {
       case Some((hash, count)) if hash == fileSchemaHash =>
         order match {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,32 +43,42 @@ object Materialize {
 
   private def writeDayMarker(spark: SparkSession, outDir: String,
       timeColumn: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(outDir, DayPartitionMarker)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(s"timeColumn=$timeColumn\ndateColumn=date\n".getBytes("UTF-8"))
-    finally os.close()
+    val (fs, root) = LakeFs(spark, outDir)
+    LakeFs.writeText(fs, new Path(root, DayPartitionMarker),
+      s"timeColumn=$timeColumn\ndateColumn=date\n")
   }
 
-  /** The lake's newest `date=` partition, from DIRECTORY NAMES alone —
-    * no file listing inside partitions, no parquet footer reads, so
-    * open-day detection is O(days), not O(history). Hadoop FS API, so
-    * file:/hdfs://s3a:// lakes all work (a java.io.File check would
-    * silently report non-local lakes as absent and degrade every
-    * update to a full rewrite).
+  private val IsoDate = "\\d{4}-\\d{2}-\\d{2}"
+
+  /** The `date=` partitions directly under `dir` as (ISO date, path),
+    * oldest first — the ONE listing of the day layout. DIRECTORY NAMES
+    * alone: no file listing inside partitions, no parquet footer reads,
+    * so it is O(days), not O(history). Only real ISO dates: a null
+    * time_bin would have produced a date=__HIVE_DEFAULT_PARTITION__
+    * directory that sorts after every date ('_' > '9') and would poison
+    * the open-day filter forever. ISO dates: lexicographic ==
+    * chronological.
     */
-  private def openDay(spark: SparkSession, outDir: String): Option[String] = {
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) None
-    else fs.listStatus(path).toSeq
+  private def dayDirs(fs: FileSystem, dir: Path): Seq[(String, Path)] =
+    if (!fs.exists(dir)) Seq.empty
+    else fs.listStatus(dir).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .map(_.getPath.getName.stripPrefix("date="))
-      // only real ISO dates: a null time_bin would have produced a
-      // date=__HIVE_DEFAULT_PARTITION__ directory that sorts after
-      // every date ('_' > '9') and would poison the filter forever
-      .filter(_.matches("\\d{4}-\\d{2}-\\d{2}"))
-      .sorted.lastOption // ISO dates: lexicographic == chronological
+      .map(s => (s.getPath.getName.stripPrefix("date="), s.getPath))
+      .filter(_._1.matches(IsoDate))
+      .sortBy(_._1)
+
+  /** The parquet files of one partition directory, sorted by name (so a
+    * probed file is deterministic across filesystems: listStatus order
+    * is unspecified).
+    */
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+
+  /** The lake's newest day — the open day an update recomputes from. */
+  private def openDay(spark: SparkSession, outDir: String): Option[String] = {
+    val (fs, root) = LakeFs(spark, outDir)
+    dayDirs(fs, root).lastOption.map(_._1)
   }
 
   /** Incrementally materialize `stats` (any frame with an epoch-ms
@@ -82,15 +93,8 @@ object Materialize {
     * retention paths cannot diverge. ISO dates: lexicographic ==
     * chronological.
     */
-  private def expiredDayDirs(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, beforeDate: String): Seq[org.apache.hadoop.fs.Path] =
-    fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-      .filter { s =>
-        val d = s.getPath.getName.stripPrefix("date=")
-        d.matches("\\d{4}-\\d{2}-\\d{2}") && d < beforeDate
-      }
-      .map(_.getPath)
+  private def expiredDayDirs(fs: FileSystem, dir: Path, beforeDate: String): Seq[Path] =
+    dayDirs(fs, dir).collect { case (d, p) if d < beforeDate => p }
 
   /** Partition retirement — the reference's `retire_partitions` admin
     * table function (rust/analytics/src/lakehouse/
@@ -102,12 +106,10 @@ object Materialize {
     * metadata-only drop.
     */
   def retireByDay(spark: SparkSession, outDir: String, beforeDate: String): RetireStats = {
-    require(beforeDate.matches("\\d{4}-\\d{2}-\\d{2}"),
+    require(beforeDate.matches(IsoDate),
       s"retireByDay: beforeDate must be ISO yyyy-MM-dd, got $beforeDate")
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return RetireStats(0)
-    val victims = expiredDayDirs(fs, path, beforeDate)
+    val (fs, root) = LakeFs(spark, outDir)
+    val victims = expiredDayDirs(fs, root, beforeDate)
     victims.foreach(fs.delete(_, true))
     RetireStats(victims.size.toLong)
   }
@@ -124,8 +126,7 @@ object Materialize {
   def retireByFile(spark: SparkSession, outDir: String, relPath: String): Boolean = {
     require(!relPath.contains(".."), s"retireByFile: path escapes the lake: $relPath")
     require(relPath.endsWith(".parquet"), s"retireByFile: not a partition file: $relPath")
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/$relPath")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, path) = LakeFs(spark, s"$outDir/$relPath")
     fs.exists(path) && fs.delete(path, false)
   }
 
@@ -138,7 +139,7 @@ object Materialize {
     */
   def regenerateDay(spark: SparkSession, stats: DataFrame, outDir: String,
       date: String): Long = {
-    require(date.matches("\\d{4}-\\d{2}-\\d{2}"),
+    require(date.matches(IsoDate),
       s"regenerateDay: date must be ISO yyyy-MM-dd, got $date")
     val day = stats
       .withColumn("date", to_date(timestamp_millis(col("time_bin_ms"))))
@@ -155,8 +156,7 @@ object Materialize {
         // dynamic overwrite of an empty frame touches nothing — the
         // damaged files being repaired would survive; an empty source
         // day repairs to an ABSENT partition
-        val p = new org.apache.hadoop.fs.Path(s"$outDir/date=$date")
-        val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val (f, p) = LakeFs(spark, s"$outDir/date=$date")
         if (f.exists(p)) f.delete(p, true)
       }
       rows
@@ -169,17 +169,11 @@ object Materialize {
     */
   def listPartitions(spark: SparkSession, outDir: String): DataFrame = {
     import spark.implicits._
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows: Seq[(String, Long, Long)] =
-      if (!fs.exists(path)) Seq.empty
-      else fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-        .map { s =>
-          val files = fs.listStatus(s.getPath).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-          (s.getPath.getName.stripPrefix("date="), files.size.toLong, files.map(_.getLen).sum)
-        }.sortBy(_._1)
-    rows.toDF("date", "n_files", "bytes")
+    val (fs, root) = LakeFs(spark, outDir)
+    dayDirs(fs, root).map { case (d, p) =>
+      val files = parquetFiles(fs, p)
+      (d, files.size.toLong, files.map(_.getLen).sum)
+    }.toDF("date", "n_files", "bytes")
   }
 
   final case class ReplicationStats(daysCopied: Long, daysDropped: Long)
@@ -201,36 +195,26 @@ object Materialize {
     * no-op, and retired data would keep being served from it.
     */
   def replicate(spark: SparkSession, srcDir: String, dstDir: String): ReplicationStats = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(srcDir)
-    val fs = src.getFileSystem(conf)
+    val (fs, src) = LakeFs(spark, srcDir)
     if (!fs.exists(src)) return ReplicationStats(0, 0)
-    val dst = new org.apache.hadoop.fs.Path(dstDir)
-    val dstFs = dst.getFileSystem(conf)
-    def days(p: org.apache.hadoop.fs.Path, f: org.apache.hadoop.fs.FileSystem): Set[String] =
-      if (!f.exists(p)) Set.empty
-      else f.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-        .map(_.getPath.getName.stripPrefix("date="))
-        .filter(_.matches("\\d{4}-\\d{2}-\\d{2}")).toSet
-    def sig(root: org.apache.hadoop.fs.Path, f: org.apache.hadoop.fs.FileSystem,
-        d: String): Map[String, Long] = {
-      val p = new org.apache.hadoop.fs.Path(root, s"date=$d")
+    val (dstFs, dst) = LakeFs(spark, dstDir)
+    def days(p: Path, f: FileSystem): Set[String] = dayDirs(f, p).map(_._1).toSet
+    def sig(root: Path, f: FileSystem, d: String): Map[String, Long] = {
+      val p = new Path(root, s"date=$d")
       if (!f.exists(p)) Map.empty
-      else f.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet"))
-        .map(s => s.getPath.getName -> s.getLen).toMap
+      else parquetFiles(f, p).map(s => s.getPath.getName -> s.getLen).toMap
     }
     val srcDays = days(src, fs)
     val toCopy = srcDays.toSeq.sorted
       .filter(d => sig(src, fs, d) != sig(dst, dstFs, d))
     toCopy.foreach { d =>
-      val to = new org.apache.hadoop.fs.Path(dst, s"date=$d")
+      val to = new Path(dst, s"date=$d")
       if (dstFs.exists(to)) dstFs.delete(to, true)
-      org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(src, s"date=$d"),
-        dstFs, to, false /* deleteSource */, true /* overwrite */, conf)
+      FileUtil.copy(fs, new Path(src, s"date=$d"), dstFs, to,
+        false /* deleteSource */, true /* overwrite */, spark.sparkContext.hadoopConfiguration)
     }
     val toDrop = (days(dst, dstFs) -- srcDays).toSeq.sorted
-    toDrop.foreach(d => dstFs.delete(new org.apache.hadoop.fs.Path(dst, s"date=$d"), true))
+    toDrop.foreach(d => dstFs.delete(new Path(dst, s"date=$d"), true))
     ReplicationStats(toCopy.size.toLong, toDrop.size.toLong)
   }
 
@@ -254,12 +238,11 @@ object Materialize {
     * reproduces.
     */
   def sweepExpired(spark: SparkSession, root: String, beforeDate: String): SweepStats = {
-    require(beforeDate.matches("\\d{4}-\\d{2}-\\d{2}"),
+    require(beforeDate.matches(IsoDate),
       s"sweepExpired: beforeDate must be ISO yyyy-MM-dd, got $beforeDate")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, rootPath) = LakeFs(spark, root)
     if (!fs.exists(rootPath)) return SweepStats(0, 0, 0)
-    def subdirs(p: org.apache.hadoop.fs.Path) =
+    def subdirs(p: Path) =
       fs.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath)
     var blocks = 0L; var streams = 0L; var processes = 0L
     subdirs(rootPath).foreach { proc =>
@@ -308,29 +291,17 @@ object Materialize {
       current: org.apache.spark.sql.types.StructType): DataFrame = {
     import spark.implicits._
     val currentHash = schemaHash(current)
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rows: Seq[(String, String, String, Long, Long)] =
-      if (!fs.exists(path)) Seq.empty
-      else fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
-        .sortBy(_.getPath.getName)
-        .flatMap { s =>
-          // sorted so the probed file is deterministic across
-          // filesystems (listStatus order is unspecified)
-          val files = fs.listStatus(s.getPath).toSeq
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .sortBy(_.getPath.getName)
-          files.headOption.map { f =>
-            // partition dirs are single-schema by construction (each
-            // day is written in one atomic swap), so one file decides
-            val schema = graft.Tables.schemaOf(spark, f.getPath.toString)
-            (s.getPath.getName.stripPrefix("date="), schemaHash(schema), currentHash,
-              files.size.toLong, files.map(_.getLen).sum)
-          }
-        }
-        .filter { case (_, fileHash, curHash, _, _) => fileHash != curHash }
-    rows.toDF("date", "incompatible_schema_hash", "current_schema_hash", "n_files", "bytes")
+    val (fs, root) = LakeFs(spark, outDir)
+    dayDirs(fs, root).flatMap { case (d, p) =>
+      val files = parquetFiles(fs, p)
+      files.headOption.map { f =>
+        // partition dirs are single-schema by construction (each day
+        // is written in one atomic swap), so one file decides
+        val schema = graft.Tables.schemaOf(spark, f.getPath.toString)
+        (d, schemaHash(schema), currentHash, files.size.toLong, files.map(_.getLen).sum)
+      }
+    }.filter { case (_, fileHash, curHash, _, _) => fileHash != curHash }
+      .toDF("date", "incompatible_schema_hash", "current_schema_hash", "n_files", "bytes")
   }
 
   /** Retire exactly the schema-incompatible partitions —
@@ -345,11 +316,8 @@ object Materialize {
   def retireIncompatiblePartitions(spark: SparkSession, outDir: String,
       current: org.apache.spark.sql.types.StructType): DataFrame = {
     val victims = listIncompatiblePartitions(spark, outDir, current)
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    victims.collect().foreach { r =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, s"date=${r.getString(0)}"), true)
-    }
+    val (fs, root) = LakeFs(spark, outDir)
+    victims.collect().foreach(r => fs.delete(new Path(root, s"date=${r.getString(0)}"), true))
     victims
   }
 

@@ -10,16 +10,18 @@ import org.apache.spark.sql.SparkSession
   * finer tiers' partitions via the merge query). The daemon's
   * scheduling loop is service plane; what the library owns is the
   * deterministic TICK SEMANTICS, driven here by an injected clock so
-  * specs replay a whole cadence history without wall-time:
+  * specs replay a whole cadence history without wall-time. Everything
+  * else is [[SqlBatchView]]'s slice write into the insert-range store:
   *
   *  - [[tick]]: one fine-tier firing at scheduled time t — materialize
   *    the closed Δ-slice, freshness-probed (a re-fired tick whose
   *    source didn't change is a metadata no-op, like the reference's
   *    count_src_query skip).
-  *  - [[compact]]: one coarse-tier firing — materialize the closed
-  *    coarse slice in one piece and retire the fine slices it covers
-  *    (the reference's QueryMerger compaction: many small partitions
-  *    become one, queries stop touching the fragments).
+  *  - [[compact]]: one coarse-tier firing — a forced write of the
+  *    closed coarse slice, whose overlap retirement removes the fine
+  *    partitions it covers (the reference's QueryMerger compaction:
+  *    many small partitions become one, queries stop touching the
+  *    fragments).
   *  - [[catchUp]]: the deterministic scheduler replay — every fine
   *    tick then every coarse tick scheduled in [fromMs, toMs), in
   *    time order, exactly what a daemon that was down would run on
@@ -27,10 +29,9 @@ import org.apache.spark.sql.SparkSession
   *    comment encodes the same catch-up contract).
   *
   * Scale shape: each tick is one slice's transform — O(slice source
-  * rows), closed history untouched; compaction reads only the fine
-  * partitions it replaces. The lake stays queryable throughout
-  * (SqlBatchView.query merges whatever granularity mix currently
-  * exists).
+  * rows), closed history untouched; compaction reads only its window's
+  * source. The lake stays queryable throughout (SqlBatchView.query
+  * merges whatever granularity mix currently exists).
   */
 object NrtCadence {
 
@@ -43,8 +44,12 @@ object NrtCadence {
     * Δ-grid).
     */
   def tickTimes(fromMs: Long, toMs: Long, deltaMs: Long): Seq[Long] = {
-    val first = (fromMs + deltaMs - 1) / deltaMs * deltaMs
-    Iterator.iterate(first)(_ + deltaMs).takeWhile(_ < toMs).toSeq
+    // round up with floorMod (negative times round up, not toward
+    // zero); a step past Long.MaxValue saturates there, which is never
+    // < toMs, so the grid ends instead of wrapping
+    def plus(t: Long, d: Long) = if (t > Long.MaxValue - d) Long.MaxValue else t + d
+    val first = plus(fromMs, (deltaMs - Math.floorMod(fromMs, deltaMs)) % deltaMs)
+    Iterator.iterate(first)(plus(_, deltaMs)).takeWhile(_ < toMs).toSeq
   }
 
   /** The slice a tick scheduled at `tMs` materializes: the CLOSED
@@ -57,97 +62,41 @@ object NrtCadence {
     (trunc - 2 * deltaMs, trunc - deltaMs)
   }
 
-  /** One fine-tier firing. Returns rows written, or -1 when the
-    * freshness probe skipped the slice — including a slice that lies
-    * inside an already-compacted window: its freshness marker records
-    * the COARSE write's count, so the probe would read a mismatch and
-    * tear the coarse partition down to this one fine fragment, dropping
-    * the rest of the window from query results until the next coarse
-    * re-fire. The compacted-marker check costs one directory listing,
-    * the same order as the freshness probe itself.
+  /** One fine-tier firing. Returns rows written, or -1 when the slice
+    * was skipped: fresh under the probe, or already covered by a
+    * strictly wider (compacted) partition — rewriting the fine slice
+    * there would retire the coarse partition and leave only this
+    * fragment of its window.
     */
   def tick(spark: SparkSession, v: SqlBatchView.Def, outDir: String,
       tMs: Long, deltaMs: Long): Long = {
     val (b, e) = tickSlice(tMs, deltaMs)
-    val covered = compactedWindows(spark, outDir)
-      .exists { case (cb, ce) => b >= cb && b < ce }
+    val covered = JitPartitions.listParts(spark, outDir).exists { p =>
+      p.beginInsertMs <= b && p.endInsertMs >= e - 1 &&
+        (p.beginInsertMs, p.endInsertMs) != ((b, e - 1))
+    }
     if (covered) -1L
     else SqlBatchView.updateSlice(spark, v, outDir, b, e)
   }
 
-  /** One coarse-tier firing at scheduled time `tMs`: materialize the
-    * closed coarse slice [trunc−2Δc, trunc−Δc) as ONE partition and
-    * retire every finer slice whose begin falls inside it. Write
-    * before delete: a crash between the two serves duplicates to a
-    * point-in-time read, never a gap, and the retire is idempotent on
-    * re-fire. A `_compacted_<begin>` marker records the compacted
-    * window LAST, so [[catchUp]]'s fine loop skips windows that are
-    * already coarse (a replayed fine tick must not tear a compacted
-    * partition back down to its first fragment); a crash before the
-    * marker leaves the window fine-tick-rewritable and the replayed
-    * compaction restores it.
+  /** One coarse-tier firing at scheduled time `tMs`: a forced write of
+    * the closed coarse slice [trunc−2Δc, trunc−Δc) as ONE partition,
+    * which retires every fine partition it overlaps. The write comes
+    * before the retire, so a crash between the two serves duplicates to
+    * a point-in-time read, never a gap; the fine ticks of a replay skip
+    * the window (the coarse partition covers them) and the replayed
+    * compaction finishes the retire.
     */
   def compact(spark: SparkSession, v: SqlBatchView.Def, outDir: String,
       tMs: Long, coarseMs: Long): Long = {
     val (b, e) = tickSlice(tMs, coarseMs)
-    val written = SqlBatchView.updateSlice(spark, v, outDir, b, e, force = true)
-    retireFineSlices(spark, outDir, b, e, keepMs = b)
-    val path = new org.apache.hadoop.fs.Path(s"$outDir/_compacted_$b")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(path, true)
-    try out.write(e.toString.getBytes("UTF-8")) finally out.close()
-    written
-  }
-
-  /** Compacted windows recorded by [[compact]]: begin → end. */
-  private def compactedWindows(spark: SparkSession, outDir: String): Seq[(Long, Long)] = {
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Seq.empty
-    else fs.listStatus(path).toSeq.flatMap { s =>
-      val n = s.getPath.getName
-      if (!n.startsWith("_compacted_")) None
-      else scala.util.Try {
-        val b = n.stripPrefix("_compacted_").toLong
-        val in = fs.open(s.getPath)
-        val e = try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
-        (b, e)
-      }.toOption
-    }
-  }
-
-  /** Drop slice PARTITIONS with begin in [fromMs, toMs) except
-    * `keepMs` (the compacted replacement). Freshness markers are
-    * deliberately KEPT: a replayed fine tick for a retired slice then
-    * probes fresh and skips, instead of resurrecting the fragment the
-    * compaction just removed. (The one marker the coarse write
-    * overwrites is keepMs's own; a replayed fine tick there rewrites
-    * a fine fragment transiently, and the replayed coarse compaction
-    * that follows it in [[catchUp]] restores the compacted state — so
-    * a full-range replay is idempotent in outcome.)
-    */
-  private def retireFineSlices(spark: SparkSession, outDir: String,
-      fromMs: Long, toMs: Long, keepMs: Long): Unit = {
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return
-    fs.listStatus(path).toSeq.foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("slice_ms=")) {
-        scala.util.Try(n.stripPrefix("slice_ms=").toLong).toOption.foreach { ms =>
-          if (ms >= fromMs && ms < toMs && ms != keepMs) fs.delete(s.getPath, true)
-        }
-      }
-    }
+    SqlBatchView.updateSlice(spark, v, outDir, b, e, force = true)
   }
 
   /** Deterministic scheduler replay over [fromMs, toMs): every fine
     * tick in time order, then every coarse compaction whose slice is
     * fully closed by `toMs`. One call == what the two daemon loops
-    * would have run across that span. Fine ticks whose slice lies in
-    * an already-compacted window are skipped outright — the coarse
-    * partition IS their data; rewriting its begin-fragment would tear
-    * a hole until the coarse pass re-fired. Tiers must nest
+    * would have run across that span. Tiers must nest
     * (coarse = k·fine): a straddling fine slice would otherwise be
     * retired by a compaction that doesn't cover its tail.
     */
@@ -155,17 +104,10 @@ object NrtCadence {
       fromMs: Long, toMs: Long, fineMs: Long, coarseMs: Long): CadenceStats = {
     require(fineMs > 0 && coarseMs > 0 && coarseMs % fineMs == 0,
       s"tiers must nest: coarseMs=$coarseMs must be a positive multiple of fineMs=$fineMs")
-    val compacted = compactedWindows(spark, outDir)
-    def inCompacted(sliceBegin: Long): Boolean =
-      compacted.exists { case (b, e) => sliceBegin >= b && sliceBegin < e }
     var run = 0L; var skip = 0L; var comp = 0L; var rows = 0L
     tickTimes(fromMs, toMs, fineMs).foreach { t =>
-      val (b, _) = tickSlice(t, fineMs)
-      if (inCompacted(b)) skip += 1
-      else {
-        val w = tick(spark, v, outDir, t, fineMs)
-        if (w < 0) skip += 1 else { run += 1; rows += w }
-      }
+      val w = tick(spark, v, outDir, t, fineMs)
+      if (w < 0) skip += 1 else { run += 1; rows += w }
     }
     tickTimes(fromMs, toMs, coarseMs).foreach { t =>
       val w = compact(spark, v, outDir, t, coarseMs)

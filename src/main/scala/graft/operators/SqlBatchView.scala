@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** User-defined incrementally-materialized SQL views — the Spark analog
   * of the reference's generic SQL batch view (rust/analytics/src/
@@ -21,12 +20,20 @@ import org.apache.spark.sql.functions._
   *    compared on the next update, so unchanged closed slices are
   *    skipped without reading their data.
   *
-  * The lake is partitioned by `slice_ms` (slice begin). Re-running a
-  * slice is an atomic per-partition dynamic overwrite — the active
-  * partition of the reference's live ETL. Each slice's work is O(slice
-  * source rows); query-time merge shuffles only partition rows (the
-  * transform output is expected to be pre-aggregated, exactly like the
-  * reference's log_stats instance).
+  * Slices live in [[JitPartitions]]' insert-range store: the slice
+  * `[b, e)` is the partition `insert=b-(e-1)-0`, and its
+  * `_graft_part_meta` records the source count next to the schema hash
+  * of the transform's analyzed output ([[Materialize.schemaHash]]:
+  * analysis only, no Spark job). A slice is up to date under
+  * [[JitPartitions.isPartUpToDate]]'s exact-range rule. Writing a slice
+  * replaces its partition and then retires every other partition its
+  * range overlaps — the reference's write_partition.rs `RetireMatch`
+  * — so a re-cut or a wider (compacting) slice supersedes what it
+  * covers; write before retire means a crash in between serves
+  * duplicates, never a gap. Each slice's work is O(slice source rows);
+  * query-time merge shuffles only partition rows (the transform output
+  * is expected to be pre-aggregated, exactly like the reference's
+  * log_stats instance).
   */
 object SqlBatchView {
 
@@ -50,7 +57,7 @@ object SqlBatchView {
     countSrcSql = """SELECT count(*) AS n FROM log_entries
       WHERE time_ms >= {begin} AND time_ms < {end}""",
     transformSql = """
-      SELECT time_ms - time_ms % 60000 AS time_bin_ms, process_id, level, target,
+      SELECT time_ms - pmod(time_ms, 60000) AS time_bin_ms, process_id, level, target,
         count(*) AS count
       FROM log_entries
       WHERE time_ms >= {begin} AND time_ms < {end}
@@ -95,67 +102,48 @@ object SqlBatchView {
   private def subst(sql: String, beginMs: Long, endMs: Long): String =
     sql.replace("{begin}", beginMs.toString).replace("{end}", endMs.toString)
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def metaPath(outDir: String, beginMs: Long) =
-    new org.apache.hadoop.fs.Path(s"$outDir/_slice_$beginMs.count")
-
-  /** Recorded source count for a slice, if it was ever materialized. */
-  private def recordedCount(spark: SparkSession, outDir: String, beginMs: Long): Option[Long] = {
-    val f = fs(spark, outDir)
-    val p = metaPath(outDir, beginMs)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong)
-      finally in.close()
-    }
+  /** The slice's source count (the count SQL, one Spark job) and the
+    * transform over it, whose schema hash costs analysis only.
+    */
+  private def probe(spark: SparkSession, v: Def, beginMs: Long,
+      endMs: Long): (Long, DataFrame, String) = {
+    val src = spark.sql(subst(v.countSrcSql, beginMs, endMs)).head().getLong(0)
+    val slice = spark.sql(subst(v.transformSql, beginMs, endMs))
+    (src, slice, Materialize.schemaHash(slice.schema))
   }
 
+  private def fresh(spark: SparkSession, outDir: String, beginMs: Long, endMs: Long,
+      hash: String, src: Long): Boolean =
+    JitPartitions.isPartUpToDate(spark, outDir, beginMs, endMs - 1,
+      JitPartitions.EventTime, hash, src)
+
   /** The count_src_query probe: is the materialized slice up to date
-    * with the source? Runs ONLY the cheap count SQL — never the
-    * transform — mirroring fetch_sql_partition_spec's use of
-    * count_src_query in the reference.
+    * with the source? Runs ONLY the cheap count SQL — the transform is
+    * analyzed for its schema hash, never run — mirroring
+    * fetch_sql_partition_spec's use of count_src_query in the reference.
     */
   def isUpToDate(spark: SparkSession, v: Def, outDir: String,
       beginMs: Long, endMs: Long): Boolean = {
-    val src = spark.sql(subst(v.countSrcSql, beginMs, endMs)).head().getLong(0)
-    recordedCount(spark, outDir, beginMs).contains(src)
+    val (src, _, hash) = probe(spark, v, beginMs, endMs)
+    fresh(spark, outDir, beginMs, endMs, hash, src)
   }
 
   /** Materialize (or refresh) one [beginMs, endMs) slice. Skips the
     * transform entirely when the recorded source count matches; pass
-    * `force = true` to rewrite regardless (regeneration path).
-    * Returns the rows written, or -1 when skipped as fresh.
+    * `force = true` to rewrite regardless (regeneration path). A slice
+    * with no rows still gets its partition and count record, so it
+    * replaces what it covers and then probes fresh. Returns the rows
+    * written, or -1 when skipped as fresh.
     */
   def updateSlice(spark: SparkSession, v: Def, outDir: String,
       beginMs: Long, endMs: Long, force: Boolean = false): Long = {
-    val srcCount = spark.sql(subst(v.countSrcSql, beginMs, endMs)).head().getLong(0)
-    if (!force && recordedCount(spark, outDir, beginMs).contains(srcCount)) return -1L
-    val slice = spark.sql(subst(v.transformSql, beginMs, endMs))
-      .withColumn("slice_ms", lit(beginMs))
-      .persist() // written AND counted — don't run the transform twice
-    try {
-      val written = slice.count()
-      if (written > 0)
-        slice.write.option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").partitionBy("slice_ms").parquet(outDir)
-      else {
-        // dynamic overwrite of an EMPTY frame touches no partitions —
-        // without an explicit delete the previous materialization of
-        // this slice would keep being served while the freshness probe
-        // (srcCount recorded below) reports up-to-date forever
-        val stale = new org.apache.hadoop.fs.Path(s"$outDir/slice_ms=$beginMs")
-        val f0 = fs(spark, outDir)
-        if (f0.exists(stale)) f0.delete(stale, true)
-      }
-      val f = fs(spark, outDir)
-      val out = f.create(metaPath(outDir, beginMs), true)
-      try out.write(srcCount.toString.getBytes("UTF-8")) finally out.close()
-      written
-    } finally slice.unpersist()
+    val (src, slice, hash) = probe(spark, v, beginMs, endMs)
+    if (!force && fresh(spark, outDir, beginMs, endMs, hash, src)) return -1L
+    val part = JitPartitions.writePart(spark, slice, outDir, beginMs, endMs - 1,
+      meta = Some((hash, src)))
+    JitPartitions.retireParts(spark, outDir, beginMs, endMs - 1, JitPartitions.Overlap,
+      sameRun = Set((beginMs, endMs - 1)))
+    JitPartitions.rowCount(spark, part) // the transform runs once, in the write
   }
 
   /** Answer the view WITHOUT materializing: run the transform per
@@ -181,7 +169,7 @@ object SqlBatchView {
     */
   def query(spark: SparkSession, v: Def, outDir: String): DataFrame = {
     val tmp = s"__sqlbatch_${v.name}_source"
-    spark.read.parquet(outDir).drop("slice_ms").createOrReplaceTempView(tmp)
+    spark.read.parquet(outDir).drop("insert").createOrReplaceTempView(tmp)
     spark.sql(v.mergeSql.replace("{source}", tmp))
   }
 }

@@ -491,7 +491,7 @@ object CoreSqlExt3 {
       r AS (
         SELECT user_id, CAST(NULL AS BIGINT) AS event_id, epoch_ms(ts) AS t, 0 AS side,
           event_id AS seq, {'v': value, 'mid': event_id} AS r
-        FROM events WHERE event_type = 'purchase'),
+        FROM events WHERE event_type = 'purchase' AND user_id IS NOT NULL),
       u AS (SELECT * FROM l UNION ALL SELECT * FROM r),
       c AS (
         SELECT user_id, event_id, t, side,

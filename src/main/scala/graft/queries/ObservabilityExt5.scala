@@ -229,7 +229,7 @@ object ObservabilityExt5 {
           graft.operators.SqlBatchView.logStats, Seq((lo, c1), (c1, c2), (c2, hi)))
         .orderBy("time_bin_ms", "process_id", "level", "target")
     }, Some("""
-      SELECT epoch_ms(ts) - epoch_ms(ts) % 60000 AS time_bin_ms,
+      SELECT epoch_ms(ts) - (epoch_ms(ts) % 60000 + 60000) % 60000 AS time_bin_ms,
         CAST(user_id AS VARCHAR) AS process_id,
         CASE WHEN event_type = 'error' THEN 2
              WHEN event_type IN ('signup','purchase') THEN 4

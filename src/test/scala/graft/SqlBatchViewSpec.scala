@@ -234,4 +234,39 @@ class SqlBatchViewSpec extends SparkSpec with TmpDirSupport {
     val direct = Graft.query(spark, sfDir, "SELECT time_ms, event_id, level, msg FROM log_entries")
     assert(out.exceptAll(direct).isEmpty && direct.exceptAll(out).isEmpty)
   }
+
+  test("a slice overlapping a partition with a different begin replaces it") {
+    Graft.registerViews(spark, sfDir)
+    val (lo, hi) = bounds
+    val mid = lo + (hi - lo) / 3
+    val dir = tmpDir("sqlbatch-overlap") + "/v"
+    assert(SqlBatchView.updateSlice(spark, logStatsView, dir, mid, hi) > 0)
+    // re-cut from an earlier begin: the new range covers the old one,
+    // so the old partition must go, not be served a second time
+    assert(SqlBatchView.updateSlice(spark, logStatsView, dir, lo, hi) > 0)
+    assert(sortedRows(SqlBatchView.query(spark, logStatsView, dir)) ===
+      sortedRows(new Lakehouse(spark, sfDir).logStats))
+  }
+
+  test("log_stats bins a pre-epoch event into the same minute as Lakehouse.logStats") {
+    // 90 s before the epoch: truncating toward zero would bin it at
+    // -60000, the floor (Lakehouse's pmod) at -120000
+    val lakeDir = tmpDir("sqlbatch-pre-epoch")
+    val events = Tables.df(spark, sfDir, "events")
+    val early = events.limit(1).withColumn("event_type", lit("error"))
+      .withColumn("ts", timestamp_millis(lit(-90000L)))
+    events.unionByName(early).write.parquet(s"$lakeDir/events.parquet")
+    // the view's only source, log_entries, read from the temp lake
+    new Lakehouse(spark, lakeDir).logEntries.createOrReplaceTempView("log_entries")
+    try {
+      val r = spark.sql("SELECT min(time_ms), max(time_ms) FROM log_entries").head()
+      val (lo, hi) = (r.getLong(0), r.getLong(1) + 1)
+      assert(lo === -90000L)
+      val dir = tmpDir("sqlbatch-pre-epoch-lake") + "/v"
+      assert(SqlBatchView.updateSlice(spark, logStatsView, dir, lo, hi) > 0)
+      val want = sortedRows(new Lakehouse(spark, lakeDir).logStats)
+      assert(want.head.startsWith("[-120000,"))
+      assert(sortedRows(SqlBatchView.query(spark, logStatsView, dir)) === want)
+    } finally new Lakehouse(spark, sfDir).logEntries.createOrReplaceTempView("log_entries")
+  }
 }
