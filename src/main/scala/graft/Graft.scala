@@ -89,25 +89,32 @@ object Graft {
 
   def query(spark: SparkSession, dir: String, sql: String,
       beginMicros: Option[Long] = None, endMicros: Option[Long] = None): DataFrame = {
-    if (beginMicros.nonEmpty || endMicros.nonEmpty) requireRangeRule(spark)
     ensureViews(spark, dir)
-    // The range travels to the analyzer rule through a THREAD-LOCAL
-    // ([[graft.plans.QueryRange]]), not session conf: Spark re-runs the
-    // analyzer whenever a derived Dataset is built (head() wraps the
-    // plan in a limit, count() in an aggregate, ...), on whatever
-    // thread does it — session-conf state at those moments belongs to
-    // whoever queries concurrently, and no lock around the original
-    // analysis can cover the later re-analyses. With a thread-local,
-    // only this thread between set/clear sees the range; re-analyses
-    // elsewhere see none, and the rewrite's structural idempotency
-    // keeps the already-injected filter intact.
+    analyzedInRange(spark, beginMicros, endMicros)(spark.sql(sql))
+  }
+
+  /** Builds `df` with `[beginMicros, endMicros)` in scope and forces
+    * its analysis there. The range travels to the analyzer rule through
+    * a THREAD-LOCAL ([[graft.plans.QueryRange]]), not session conf:
+    * Spark re-runs the analyzer whenever a derived Dataset is built
+    * (head() wraps the plan in a limit, count() in an aggregate, ...),
+    * on whatever thread does it — session-conf state at those moments
+    * belongs to whoever queries concurrently, and no lock around the
+    * original analysis can cover the later re-analyses. With a
+    * thread-local, only this thread between set/clear sees the range;
+    * re-analyses elsewhere see none, and the rewrite's structural
+    * idempotency keeps the already-injected filter intact. Spark 4
+    * analyzes lazily (QueryExecution.lazyAnalyzed), hence the forced
+    * analysis while the thread-local is still set.
+    */
+  private def analyzedInRange(spark: SparkSession, beginMicros: Option[Long],
+      endMicros: Option[Long])(df: => DataFrame): DataFrame = {
+    if (beginMicros.nonEmpty || endMicros.nonEmpty) requireRangeRule(spark)
     plans.QueryRange.set(beginMicros, endMicros)
     try {
-      val df = spark.sql(sql)
-      // Spark 4 analyzes lazily (QueryExecution.lazyAnalyzed): force it
-      // while the thread-local is still set.
-      df.queryExecution.analyzed
-      df
+      val d = df
+      d.queryExecution.analyzed
+      d
     } finally plans.QueryRange.clear()
   }
 
@@ -148,13 +155,8 @@ object Graft {
 
     def run(beginMicros: Option[Long] = None,
         endMicros: Option[Long] = None): DataFrame = {
-      if (beginMicros.nonEmpty || endMicros.nonEmpty) requireRangeRule(spark)
-      plans.QueryRange.set(beginMicros, endMicros)
-      try {
-        val df = org.apache.spark.sql.graftshim.Shim.ofRows(spark, parsed)
-        df.queryExecution.analyzed // force analysis inside the range scope
-        df
-      } finally plans.QueryRange.clear()
+      analyzedInRange(spark, beginMicros, endMicros)(
+        org.apache.spark.sql.graftshim.Shim.ofRows(spark, parsed))
     }
 
     /** The prepared_statement_stream shape: batched partition-at-a-time
@@ -345,9 +347,9 @@ object Graft {
     import org.apache.spark.sql.functions._
     // the same span derivations the distributed m_perfetto_* queries
     // use — the process filter pushes through them to the scan
-    val thread = queries.ObservabilityExt6.perfettoThreadSpans(spark, dir)
+    val thread = Lakehouse.perfettoThreadSpans(spark, dir)
       .where(col("user_id") === processKey)
-    val async = queries.ObservabilityExt6.perfettoAsyncSpans(spark, dir)
+    val async = Lakehouse.perfettoAsyncSpans(spark, dir)
       .where(col("user_id") === processKey)
     val chunks = operators.Perfetto.traceChunksDf(spark, thread, "user_id", Some(async))
       .orderBy("chunk_id")

@@ -23,10 +23,7 @@ final class Lakehouse(spark: SparkSession, dir: String) {
 
   def table(name: String): DataFrame = Tables.df(spark, dir, name)
 
-  /** Severity mapping for the log view: errors are level 2, business
-    * events informational (4), views debug-ish (5). Reference level
-    * semantics: 1=Fatal .. 6=Trace, lower = more severe.
-    */
+  /** The log view: one row per event, its level from [[Lakehouse.logLevel]]. */
   def logEntries: DataFrame = logEntriesFrom(table("events"))
 
   private def logEntriesFrom(e: DataFrame): DataFrame =
@@ -34,9 +31,7 @@ final class Lakehouse(spark: SparkSession, dir: String) {
       epochMs(col("ts")).as("time_ms"),
       col("event_id"),
       col("user_id").cast("string").as("process_id"),
-      when(col("event_type") === "error", 2)
-        .when(col("event_type") === "signup" || col("event_type") === "purchase", 4)
-        .otherwise(5).as("level"),
+      Lakehouse.logLevel(col("event_type")).as("level"),
       col("event_type").as("target"),
       concat(lit("event "), col("event_id").cast("string")).as("msg"),
       col("props").as("properties"))
@@ -209,9 +204,7 @@ final class Lakehouse(spark: SparkSession, dir: String) {
   def asyncEvents: DataFrame = asyncEventsFrom(table("events"))
 
   private def asyncEventsFrom(e: DataFrame): DataFrame = {
-    val base = graft.operators.SpanAssembly.beginEndSpans(
-      e, "user_id", epochMs(col("ts")), "event_id", "event_type",
-      col("event_type").isin("signup", "view"))
+    val base = Lakehouse.userSpans(e)
     val sp = graft.operators.SpanAssembly.withParents(base, "user_id")
     sp.select(col("user_id"), col("span_id"), col("parent_id"), col("name"), col("depth"),
         explode(array(
@@ -248,9 +241,7 @@ final class Lakehouse(spark: SparkSession, dir: String) {
   // transform. The status branch reads the PRE-parents assembly so the
   // costlier parent-linkage self-join isn't replayed for it.
   private def otelSpansFrom(e: DataFrame): DataFrame = {
-    val base = graft.operators.SpanAssembly.beginEndSpans(
-      e, "user_id", epochMs(col("ts")), "event_id", "event_type",
-      col("event_type").isin("signup", "view"))
+    val base = Lakehouse.userSpans(e)
     val sp = graft.operators.SpanAssembly.withParents(base, "user_id")
     // error events inside the span window decide status (OTLP status
     // code vocabulary: spans_block_processor.rs proto_status_code_str)
@@ -300,16 +291,8 @@ final class Lakehouse(spark: SparkSession, dir: String) {
       case Some(id) => table("events").where(col("user_id").cast("long") === id)
       case None     => table("events").where(lit(false)) // non-canonical: empty
     }
-    view match {
-      case "log_entries"  => logEntriesFrom(scoped)
-      case "measures"     => measuresFrom(scoped)
-      case "log_stats"    => logStatsFrom(scoped)
-      case "thread_spans" => threadSpansFrom(scoped)
-      case "images"       => imagesFrom(scoped)
-      case "otel_spans"   => otelSpansFrom(scoped)
-      case "async_events" => asyncEventsFrom(scoped)
-      case other => throw new IllegalArgumentException(s"unknown view set: $other")
-    }
+    views.collectFirst { case (`view`, from) => from(scoped) }
+      .getOrElse(throw new IllegalArgumentException(s"unknown view set: $view"))
   }
 
   /** Registered view sets (list_view_sets analog). Note the reference's
@@ -317,7 +300,70 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * "global") — `images` here is still listed, but m_images queries it
     * through viewInstance, matching that contract.
     */
-  def viewSets: Seq[String] =
-    Seq("log_entries", "measures", "log_stats", "thread_spans", "images",
-      "otel_spans", "async_events")
+  def viewSets: Seq[String] = views.map(_._1)
+
+  /** Every view set with its derivation from an events frame — the one
+    * list [[viewInstance]] and [[viewSets]] read.
+    */
+  private def views: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "log_entries" -> logEntriesFrom,
+    "measures" -> measuresFrom,
+    "log_stats" -> logStatsFrom,
+    "thread_spans" -> threadSpansFrom,
+    "images" -> imagesFrom,
+    "otel_spans" -> otelSpansFrom,
+    "async_events" -> asyncEventsFrom)
+}
+
+object Lakehouse {
+
+  /** Severity mapping for the log views: errors are level 2, business
+    * events informational (4), views debug-ish (5). Reference level
+    * semantics: 1=Fatal .. 6=Trace, lower = more severe.
+    */
+  def logLevel(eventType: Column): Column =
+    when(eventType === "error", 2)
+      .when(eventType === "signup" || eventType === "purchase", 4)
+      .otherwise(5)
+
+  /** Begin/end span assembly of an events frame: `signup` and `view`
+    * open a span on their process (`user_id`), every other event closes
+    * the innermost open one. The one definition behind the span views
+    * (otel_spans, async_events), the perfetto export and the span
+    * queries; callers pass the frame, so the perfetto path keeps its
+    * key-partitioned input.
+    */
+  def userSpans(events: DataFrame): DataFrame =
+    graft.operators.SpanAssembly.beginEndSpans(events, "user_id", epochMs(col("ts")),
+      "event_id", "event_type", col("event_type").isin("signup", "view"))
+
+  /** Events hash-repartitioned by process for the perfetto export
+    * ([[Tables.keyed]]). The whole span-assembly pipeline (both
+    * windows + the pairing aggregate) rides ONE hashpartitioning(user_id)
+    * exchange; an AQE exchange there coalesces by BYTES (the default
+    * 1 MB floor packed the CPU-dense window-pairing stage onto 2-3 of 32
+    * cores at sf0.1 — r15 StageProfile), while a user-specified
+    * partition count is exempt from coalescing, so the stage keeps
+    * workPartitions-many tasks at every scale. Targeted here rather than
+    * a session-wide minPartitionSize floor, which the r15 driver bench
+    * showed costs 15-35% on ~20 untouched queries.
+    */
+  private def perfettoEvents(s: SparkSession, dir: String): DataFrame =
+    Tables.keyed(s, dir, "events", "user_id")
+
+  /** The thread spans of the perfetto export. The export trio
+    * (m_perfetto_packets, m_perfetto_chunks, Graft.writeProcessTrace)
+    * and the process_spans/perfetto_trace_chunks table functions must
+    * all derive spans identically or their cross-checks (GraftApiSpec,
+    * PerfettoSpec) mean nothing.
+    */
+  def perfettoThreadSpans(s: SparkSession, dir: String): DataFrame =
+    userSpans(perfettoEvents(s, dir))
+
+  /** The async-track operation spans for the perfetto export. */
+  def perfettoAsyncSpans(s: SparkSession, dir: String): DataFrame =
+    graft.operators.SpanAssembly
+      .consecutiveSpans(perfettoEvents(s, dir), "user_id", epochMs(col("ts")), "event_id", "event_type")
+      .withColumn("span_id", col("event_id"))
+      .withColumn("depth", lit(0L))
 }

@@ -13,3 +13,8 @@ final case class GraftQuery(
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String],
     headline: Boolean = false)
+
+/** A domain suite of [[GraftQuery]]s; [[SparkEntry]] lists every suite once. */
+trait QuerySuite {
+  def queries: Seq[GraftQuery]
+}

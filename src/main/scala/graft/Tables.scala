@@ -128,6 +128,15 @@ object Tables {
     math.max(spark.sparkContext.defaultParallelism, (bytes / (4L << 20)).toInt)
   }
 
+  /** Table `name` hash-repartitioned by `key` into
+    * [[workPartitions]]-many partitions: the one key-partitioned read
+    * the CPU-heavy queries and the perfetto span export start from. A
+    * user-specified partition count is exempt from AQE coalescing, so
+    * the stages after it keep that many tasks at every scale.
+    */
+  def keyed(spark: SparkSession, dir: String, name: String, key: String): DataFrame =
+    df(spark, dir, name).repartition(workPartitions(spark, dir, name), col(key))
+
   /** Initial post-shuffle partition count for AQE, derived from lake
     * size: one partition per 2 MB of raw parquet input, clamped to
     * [cores, 1024]. Feeds `spark.sql.adaptive.coalescePartitions.

@@ -1,7 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.graftshim.Shim
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Runs on
   * [[GraftRun.session]], so the oracle checks the plans the bench times. */
@@ -34,14 +33,20 @@ object Verify {
       Files.walk(stale).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     }
     // per-query resource profile (reference #1406's audit applied to
-    // the gate itself): peak memory / spill / wall duration from the
-    // executed plans' Tungsten metrics, written next to the forensics
-    val audit = QueryAudit.attach(spark, maxRecords = 16)
+    // the gate itself): peak memory / spill from the Tungsten metrics
+    // of the executions the oracle write ran, duration from its wall
+    // time — the forensics re-read below stays out of it
     val profile = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Double)]()
-    var lastAuditId = 0L
     SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
       try {
-        write(fn(spark, sfDir), s"$outDir/$name")
+        val df = fn(spark, sfDir)
+        val (ms, execs) = GraftRun.capture(spark) {
+          val t0 = System.nanoTime()
+          write(df, s"$outDir/$name")
+          (System.nanoTime() - t0) / 1e6
+        }
+        val metrics = execs.map(e => QueryAudit.planMetrics(e.qe.executedPlan))
+        profile(name) = (metrics.map(_._1).maxOption.getOrElse(0L), metrics.map(_._2).sum, ms)
         // hash decomposition of the EXACT bytes the driver will read
         // (re-read from the written file, not the live plan) — see
         // Forensics; a driver-side hash mismatch diffs against this.
@@ -56,16 +61,6 @@ object Verify {
               Forensics.report(written))
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name forensics skipped: ${e.getMessage}")
-        }
-        // listener delivery is async: drain the bus, then attribute
-        // everything newer than the previous query's high-water id to
-        // this query
-        Shim.drainListenerBus(spark)
-        val recs = audit.recordsRaw().filter(_.query_id > lastAuditId)
-        if (recs.nonEmpty) {
-          lastAuditId = recs.map(_.query_id).max
-          profile(name) = (recs.map(_.peak_memory_bytes).max,
-            recs.map(_.spilled_bytes).sum, recs.map(_.duration_ms).sum)
         }
       }
       catch { case e: Throwable =>

@@ -426,7 +426,7 @@ object ReferenceNames {
     * process_spans_table_function.rs: one process's spans, thread
     * and/or async ('thread' default; 'async'; 'both'), served from the
     * same span assemblies the perfetto export encodes
-    * (ObservabilityExt6.perfettoThreadSpans / perfettoAsyncSpans — the
+    * (Lakehouse.perfettoThreadSpans / perfettoAsyncSpans — the
     * decoder-closed m_perfetto_* family). The process filter pushes
     * through the assembly to the raw scan like view_instance. The
     * reference's stream_id/thread_name dictionary columns have no
@@ -448,8 +448,8 @@ object ReferenceNames {
           col("begin_ms").cast("long").as("begin_ms"),
           col("end_ms").cast("long").as("end_ms"),
           (col("end_ms") - col("begin_ms")).cast("long").as("duration_ms"))
-    val thread = scoped(graft.queries.ObservabilityExt6.perfettoThreadSpans(spark, dir), "thread")
-    val async = scoped(graft.queries.ObservabilityExt6.perfettoAsyncSpans(spark, dir), "async")
+    val thread = scoped(graft.Lakehouse.perfettoThreadSpans(spark, dir), "thread")
+    val async = scoped(graft.Lakehouse.perfettoAsyncSpans(spark, dir), "async")
     (types match {
       case "thread" => thread
       case "async" => async
@@ -508,8 +508,8 @@ object ReferenceNames {
     def scoped(df: org.apache.spark.sql.DataFrame) =
       df.where(col("user_id").cast("string") === pid &&
         col("end_ms") >= begin && col("begin_ms") < end)
-    val thread = scoped(graft.queries.ObservabilityExt6.perfettoThreadSpans(spark, dir))
-    val async = scoped(graft.queries.ObservabilityExt6.perfettoAsyncSpans(spark, dir))
+    val thread = scoped(graft.Lakehouse.perfettoThreadSpans(spark, dir))
+    val async = scoped(graft.Lakehouse.perfettoAsyncSpans(spark, dir))
     (types match {
       case "thread" => graft.operators.Perfetto.traceChunksDf(spark, thread, "user_id")
       case "async" =>

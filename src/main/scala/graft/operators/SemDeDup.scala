@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540) over int8-quantized
   * embeddings, parameterized by cluster count K — the scale knob the
-  * fixed-K oracle variant in LlmPipelineExt4 pins for determinism.
+  * fixed-K oracle variant in the Embeddings suite pins for determinism.
   *
   * The within-cluster pairwise term is O(Σ cluster_size²): K must grow
   * with the corpus (K ≈ n / target_cluster_size) for the quadratic

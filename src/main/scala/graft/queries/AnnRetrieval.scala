@@ -1,25 +1,16 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import graft.operators.{Pq, TextAnalysis}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.operators.{Ann, Pq}
+import graft.{GraftQuery, QuerySuite}
+import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Curation-pipeline tranche 6: product quantization (PQ) for
-  * embedding retrieval — the compression layer every billion-vector
-  * ANN index rests on (Jégou et al. 2011, "Product Quantization for
-  * Nearest Neighbor Search"; the IVFADC structure FAISS popularized).
-  *
-  *  - `l_ann_pq`: the full PQ retrieval path. Vectors are split into
-  *    M=8 subspaces of 8 dims; each subspace gets a K=16-entry
-  *    codebook (deterministic vec_id-sample, the same convention as
-  *    `l_ann_ivf`'s coarse centroids); every vector is encoded as its
-  *    per-subspace nearest-codeword ids — 8 small ints, a 64-byte
-  *    float vector compressed 32×. Queries score candidates with
-  *    asymmetric distance computation (ADC): one K×M distance table
-  *    per query, then a table-lookup sum per candidate — no original
-  *    vectors touched at scan time.
+/** Approximate nearest neighbours (SURVEY §2 LLM pipeline): exact top-k,
+  * random-hyperplane LSH, IVF, int8, Hamming and product-quantized
+  * (PQ, IVFADC, trained codebooks) retrieval, each with its recall or
+  * tuning check.
   *
   * Exactness: vectors ride as scaled integers (round(x·1000) BIGINT,
   * the shared-space analog of `l_embed_quantize`'s per-vector int8),
@@ -41,18 +32,40 @@ import org.apache.spark.sql.functions._
   * model-based quality gate, fasttext-linear shape — hashed-unigram
   * features against a broadcast weight vector, exact integer scoring)
   * and `l_bigram_lm` (Kneser-Ney n-gram count tables).
+  *
+  * Scale shape: hamming codes are 16 B/vector and the corpus never
+  * shuffles (queries broadcast); substring windows shuffle as
+  * (doc_id, md5) pairs — window text never crosses the wire — with one
+  * count-over-hash pass and one per-doc agg; the report is a single
+  * partial-agg rollup.
   */
-object LlmPipelineExt6 {
+object AnnRetrieval extends QuerySuite {
+
+  /** The LSH hyperplanes are md5-derived constants (Ann.lshSignature),
+    * so the oracle can carry the SAME constants as SQL literals — the
+    * whole bucketed ANN pipeline becomes cross-engine checkable.
+    * Sign decisions have >=1e-6 margin on this corpus vs ~1e-16 FP
+    * divergence between engines' fold orders, so bucket membership is
+    * deterministic across engines.
+    */
+  private def lshPlaneValues(nPlanes: Int, dim: Int): String =
+    (0 until nPlanes).map { p =>
+      val comps = (0 until dim).map { j =>
+        ((java.lang.Long.parseLong(
+          org.apache.commons.codec.digest.DigestUtils.md5Hex(s"plane-$p-$j").substring(0, 15), 16)
+          .toDouble / math.pow(16, 15)) - 0.5).toString
+      }.mkString("[", ", ", "]")
+      s"($p, $comps)"
+    }.mkString(", ")
 
   // memoized trained codebooks for l_ann_pq_trained — see its comment
   private val trainedCb =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  private def embs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "embeddings")
-
   // the PQ machinery lives in [[Pq]] (shared with PqSpec's trained-
   // codebook path); these aliases keep the query bodies readable
   private def l2sq(a: Column, b: Column): Column = Pq.l2sq(a, b)
+
   private def scaledVecs(s: SparkSession, dir: String): DataFrame = Pq.scaled(embs(s, dir))
 
   /** The PQ index + ADC top-5 per query — shared by `l_ann_pq` and
@@ -148,8 +161,214 @@ object LlmPipelineExt6 {
       ORDER BY query_id, rk"""
   }
 
+  /** 2^0..2^31 as literals: variable-shift-free bit packing keeps the
+    * expression a pure zip_with fold (whole-stage codegen).
+    */
+  private val powers32: Column = array((0 until 32).map(i => lit(1L << i)): _*)
+
+  /** Sign bits of dims [lo, lo+32) packed little-endian into a LONG. */
+  private def signWord(e: Column, lo: Int): Column =
+    aggregate(
+      zip_with(slice(e, lo + 1, 32), powers32,
+        (x, p) => when(x > 0d, p).otherwise(lit(0L))),
+      lit(0L), (acc, x) => acc + x)
+
+  /** (vec_id, code_lo, code_hi): the 16-byte binary signature table. */
+  private def signCodes(e: DataFrame): DataFrame =
+    e.select(col("vec_id"),
+      col("embedding").cast("array<double>").as("e"))
+      .select(col("vec_id"),
+        signWord(col("e"), 0).as("code_lo"),
+        signWord(col("e"), 32).as("code_hi"))
+
   val queries: Seq[GraftQuery] = Seq(
 
+    GraftQuery("l_ann_topk", (s, dir) => {
+      val e = keyedEmbs(s, dir)
+      val q = e.where(col("vec_id") < 5)
+      Ann.bruteForceTopK(e, q, k = 10)
+        .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
+        .orderBy("query_id", "rk")
+    }, Some("""
+      WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id < 5),
+      c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      sim AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, list_cosine_similarity(q.e, c.e) AS cos
+        FROM q CROSS JOIN c WHERE q.vec_id <> c.vec_id),
+      r AS (
+        SELECT query_id, neighbor_id, cos,
+          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        FROM sim)
+      SELECT query_id, rk, neighbor_id, round(cos, 4) AS cos FROM r WHERE rk <= 10
+      ORDER BY query_id, rk"""), headline = true),
+
+    GraftQuery("l_ann_lsh", (s, dir) => {
+      // bucketed scale path; planes are md5-derived constants, so the
+      // oracle replays the same constants as SQL literals
+      val e = keyedEmbs(s, dir)
+      val q = e.where(col("vec_id") < 5)
+      Ann.lshTopK(e, q, dim = 64, nPlanes = 6, k = 5)
+        .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
+        .orderBy("query_id", "rk")
+    }, Some(s"""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      sg AS (
+        SELECT vec_id,
+          string_agg(CASE WHEN list_dot_product(e.e, pl.v) >= 0 THEN '1' ELSE '0' END,
+                     '' ORDER BY pl.p) AS sig
+        FROM e CROSS JOIN (VALUES ${lshPlaneValues(6, 64)}) pl(p, v)
+        GROUP BY vec_id),
+      es AS (SELECT e.vec_id, e.e, sg.sig FROM e JOIN sg USING (vec_id)),
+      cand AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+          list_cosine_similarity(q.e, c.e) AS cos
+        FROM es q JOIN es c ON c.sig = q.sig AND c.vec_id <> q.vec_id
+        WHERE q.vec_id < 5),
+      r AS (
+        SELECT query_id, neighbor_id, cos,
+          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        FROM cand)
+      SELECT query_id, rk, neighbor_id, round(cos, 4) AS cos FROM r WHERE rk <= 5
+      ORDER BY query_id, rk""")),
+
+    GraftQuery("l_ann_ivf", (s, dir) => {
+      // IVF scale path: deterministic coarse centroids (vec_id-sample),
+      // inverted-list probe — fully expressible in the oracle
+      val e = keyedEmbs(s, dir)
+      val q = e.where(col("vec_id") < 5)
+      Ann.ivfTopK(e, q, nCentroids = 16, nProbe = 4, k = 5)
+        .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
+        .orderBy("query_id", "rk")
+    }, Some("""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      c AS (SELECT vec_id AS cent_id, e AS ce FROM e WHERE vec_id < 16),
+      ac AS (
+        SELECT vec_id, e, cent_id FROM (
+          SELECT n.vec_id, n.e, c.cent_id,
+            ROW_NUMBER() OVER (PARTITION BY n.vec_id
+              ORDER BY list_cosine_similarity(n.e, c.ce) DESC, c.cent_id) AS crk
+          FROM e n CROSS JOIN c) WHERE crk = 1),
+      pr AS (
+        SELECT vec_id, e, cent_id FROM (
+          SELECT n.vec_id, n.e, c.cent_id,
+            ROW_NUMBER() OVER (PARTITION BY n.vec_id
+              ORDER BY list_cosine_similarity(n.e, c.ce) DESC, c.cent_id) AS crk
+          FROM e n CROSS JOIN c WHERE n.vec_id < 5) WHERE crk <= 4),
+      cand AS (
+        SELECT p.vec_id AS query_id, a.vec_id AS neighbor_id,
+          max(list_cosine_similarity(p.e, a.e)) AS cos
+        FROM pr p JOIN ac a USING (cent_id)
+        WHERE a.vec_id <> p.vec_id
+        GROUP BY 1, 2),
+      r AS (
+        SELECT query_id, neighbor_id, cos,
+          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rk
+        FROM cand)
+      SELECT query_id, rk, neighbor_id, round(cos, 4) AS cos FROM r WHERE rk <= 5
+      ORDER BY query_id, rk""")),
+
+    GraftQuery("l_ann_int8", (s, dir) => {
+      // quantized ANN: top-k by int8×int8 dot product — the retrieval
+      // path l_embed_quantize exists for (4× less memory bandwidth,
+      // integer SIMD). The integer dot is EXACT (|term| ≤ 127², 64
+      // dims → far inside both long and double-53-bit range), so
+      // ranking is deterministic cross-engine; the descaled
+      // approximate dot idot·s_a·s_b is a product of identically-
+      // computed doubles. Queries broadcast; the corpus never
+      // shuffles.
+      val e = keyedEmbs(s, dir).select(col("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
+        .withColumn("sc", greatest(array_max(transform(col("v"), x => abs(x))) / lit(127.0),
+          lit(1e-12)))
+        .withColumn("q", transform(col("v"), x => round(x / col("sc"), 0).cast("long")))
+        .select(col("vec_id"), col("sc"), col("q"))
+      val qs = e.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("sc").as("sa"), col("q").as("qa"))
+      val scored = e.crossJoin(broadcast(qs))
+        .where(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          aggregate(zip_with(col("qa"), col("q"), (x, y) => x * y),
+            lit(0L), (acc, x) => acc + x).as("idot"),
+          col("sa"), col("sc"))
+      val w = Window.partitionBy("query_id").orderBy(col("idot").desc, col("neighbor_id"))
+      scored.withColumn("rk", row_number().over(w).cast("long")).where(col("rk") <= 10)
+        .select(col("query_id"), col("rk"), col("neighbor_id"), col("idot"),
+          round(col("idot").cast("double") * col("sa") * col("sc"), 4).as("approx_dot"))
+        .orderBy("query_id", "rk")
+    }, Some("""
+      WITH e AS (
+        SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
+          GREATEST(list_max(list_transform(CAST(embedding AS DOUBLE[]), x -> abs(x))) / 127.0,
+                   1e-12) AS sc
+        FROM embeddings),
+      z AS (
+        SELECT vec_id, sc,
+          list_transform(v, x -> CAST(round(x / sc, 0) AS DOUBLE)) AS q
+        FROM e),
+      sim AS (
+        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+          CAST(list_dot_product(a.q, b.q) AS BIGINT) AS idot,
+          a.sc AS sa, b.sc AS sb
+        FROM z a CROSS JOIN z b
+        WHERE a.vec_id < 5 AND b.vec_id <> a.vec_id),
+      r AS (
+        SELECT query_id, neighbor_id, idot, sa, sb,
+          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY idot DESC, neighbor_id) AS rk
+        FROM sim)
+      SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id, idot,
+        round(CAST(idot AS DOUBLE) * sa * sb, 4) AS approx_dot
+      FROM r WHERE rk <= 10
+      ORDER BY query_id, rk""")),
+
+    // `l_ann_hamming`: sign-bit binary quantization (64 float dims →
+    // 64 bits packed as two 32-bit words) + Hamming-distance top-k.
+    // The classic binary-code ANN (Charikar 2002 SimHash lineage,
+    // "hashing for similarity search" family): 32× smaller than the
+    // float corpus, distance = XOR + popcount — both codegen'd integer
+    // ops, no FP anywhere past quantization. Two packed words rather
+    // than one demonstrate the multi-word layout dims > 64 needs, and
+    // sidestep DuckDB's checked `1<<63` overflow in the oracle.
+    GraftQuery("l_ann_hamming", (s, dir) => {
+      val codes = signCodes(keyedEmbs(s, dir)).localCheckpoint()
+      val q = codes.where(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"),
+          col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
+      val scored = codes.join(broadcast(q), col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id"),
+          (bit_count(col("code_lo").bitwiseXOR(col("q_lo"))) +
+            bit_count(col("code_hi").bitwiseXOR(col("q_hi")))).cast("long").as("hamming"))
+      val rw = Window.partitionBy("query_id").orderBy(col("hamming"), col("neighbor_id"))
+      scored.withColumn("rk", row_number().over(rw).cast("long"))
+        .where(col("rk") <= 10)
+        .select("query_id", "rk", "neighbor_id", "hamming")
+        .orderBy("query_id", "rk")
+    }, Some("""
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      c AS (SELECT vec_id,
+        CAST(list_sum(list_transform(range(0,32),
+          i -> CASE WHEN e[i+1] > 0 THEN (1::BIGINT << i) ELSE 0::BIGINT END)) AS BIGINT) AS code_lo,
+        CAST(list_sum(list_transform(range(32,64),
+          i -> CASE WHEN e[i+1] > 0 THEN (1::BIGINT << (i-32)) ELSE 0::BIGINT END)) AS BIGINT) AS code_hi
+        FROM e),
+      s AS (
+        SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+          CAST(bit_count(xor(q.code_lo, c.code_lo))
+             + bit_count(xor(q.code_hi, c.code_hi)) AS BIGINT) AS hamming
+        FROM c q JOIN c ON q.vec_id < 5 AND q.vec_id <> c.vec_id),
+      r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY hamming, neighbor_id) AS rk
+            FROM s)
+      SELECT query_id, CAST(rk AS BIGINT) AS rk, neighbor_id, hamming
+      FROM r WHERE rk <= 10 ORDER BY query_id, rk"""), headline = true),
+
+    // `l_ann_pq`: the full PQ retrieval path. Vectors are split into
+    // M=8 subspaces of 8 dims; each subspace gets a K=16-entry
+    // codebook (deterministic vec_id-sample, the same convention as
+    // `l_ann_ivf`'s coarse centroids); every vector is encoded as its
+    // per-subspace nearest-codeword ids — 8 small ints, a 64-byte
+    // float vector compressed 32×. Queries score candidates with
+    // asymmetric distance computation (ADC): one K×M distance table
+    // per query, then a table-lookup sum per candidate — no original
+    // vectors touched at scan time.
     GraftQuery("l_ann_pq", (s, dir) =>
       pqTop5(s, dir).orderBy("query_id", "rk"),
     Some("""
@@ -460,101 +679,78 @@ object LlmPipelineExt6 {
         .orderBy("query_id", "rk")
     }, Some(trainedPqOracle(iters = 2)), headline = true),
 
-    GraftQuery("l_quality_classifier", (s, dir) => {
-      // model-based quality gate, fasttext-linear shape (the CCNet /
-      // LLaMA-pipeline "keep what a classifier likes" stage): hashed-
-      // unigram features (md5 → 256 buckets, the same hashing as
-      // l_dsir_weights) scored against a broadcast weight vector,
-      // integer per-doc sum, keep = score ≥ 0. The weights are a
-      // DECLARED md5-derived stand-in — training the classifier is out
-      // of scope (like the multimodal codec stub); what is real and
-      // load-bearing is the inference plumbing: O(buckets) weight
-      // table broadcasts at any corpus size, the per-token lookup is
-      // a map-side join, the score an exact integer sum — zero corpus
-      // shuffle beyond the per-doc agg.
-      val tok = Tables.df(s, dir, "documents")
-        .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-        .select(col("doc_id"),
-          explode(graft.operators.TextAnalysis.whitespaceTokens(col("text"))).as("w"))
-        .withColumn("b", conv(substring(md5(col("w")), 1, 8), 16, 10).cast("long") % 256L)
-      val weights = s.range(256).select(col("id").as("b"),
-        (conv(substring(md5(concat(lit("qw-"), col("id").cast("string"))), 1, 8), 16, 10)
-          .cast("long") % 2001L - 1000L).as("wt"))
-      tok.join(broadcast(weights), Seq("b"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"), sum("wt").as("score"))
-        .withColumn("keep", (col("score") >= 0L).cast("long"))
-        .orderBy("doc_id")
+    // `l_ann_nprobe_curve`: IVF recall-vs-nprobe tuning curve — for
+    // nprobe ∈ {1, 2, 4}, recall@5 of the inverted-list probe against
+    // the exact top-5 (FAISS's standard index-tuning sweep). Extends
+    // the index-honesty discipline (l_pq_recall, l_minhash_calib) from
+    // "is the estimator sane" to "which operating point to run".
+    GraftQuery("l_ann_nprobe_curve", (s, dir) => {
+      val e = keyedEmbs(s, dir)
+      val q = e.where(col("vec_id") < 5)
+      val exact = Ann.bruteForceTopK(e, q, k = 5)
+        .select("query_id", "neighbor_id")
+      val probes = Seq(1, 2, 4)
+      // one inverted-list build + one probe pass serves all three
+      // operating points (a list probed at rank r is probed by every
+      // nprobe ≥ r) — not three independent index scans
+      val ivf = Ann.ivfTopKSweep(e, q, nCentroids = 16, probes, k = 5)
+        .select("nprobe", "query_id", "neighbor_id")
+      val hits = ivf.join(exact, Seq("query_id", "neighbor_id"))
+        .groupBy("nprobe").agg(count(lit(1)).as("n_hits"))
+      // recall denominator derived from the exact result itself, NOT a
+      // hard-coded 5×5=25: with ≤5 corpus vectors the exact top-5 holds
+      // fewer than 5 neighbors per query (self excluded) and a literal
+      // 25 would silently understate full recall (ADVICE r8)
+      val den = exact.agg(count(lit(1)).as("den"))
+      val grid = s.createDataFrame(probes.map(p => Tuple1(p.toLong))).toDF("nprobe")
+      grid.join(hits, Seq("nprobe"), "left")
+        .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
+        .crossJoin(broadcast(den))
+        .withColumn("recall_e4", expr("n_hits * 10000 div den"))
+        .select("nprobe", "n_hits", "recall_e4")
+        .orderBy("nprobe")
     }, Some("""
-      WITH tok AS (
-        SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w FROM documents),
-      tb AS (
-        SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 256 AS b FROM tok),
-      wts AS (
-        SELECT b, CAST(('0x' || substr(md5('qw-' || CAST(b AS VARCHAR)), 1, 8)) AS BIGINT)
-                  % 2001 - 1000 AS wt
-        FROM (SELECT unnest(range(256)) AS b)),
-      sc AS (
-        SELECT doc_id, COUNT(*) AS n_tokens, SUM(wt) AS score
-        FROM tb JOIN wts USING (b) GROUP BY doc_id)
-      SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens, CAST(score AS BIGINT) AS score,
-        CAST(CASE WHEN score >= 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
-      FROM sc ORDER BY doc_id""")),
-
-    GraftQuery("l_bigram_lm", (s, dir) => {
-      // n-gram LM count tables (the Kneser-Ney statistics: raw bigram
-      // count, left total + right diversity per w1, continuation count
-      // per w2 — everything KN smoothing needs before the final
-      // discount arithmetic). Consecutive pairs via zip_with over two
-      // shifted slices (no index sequence — sequence(1, n-1) would
-      // DESCEND for 1-token docs and fabricate pairs). All counts
-      // integer; top-50 by count keeps the checked output bounded.
-      // Scale shape: one explode + three partial-agg groupBys keyed by
-      // word — the classic count-table pipeline; at corpus scale the
-      // (w1, w2) table shards by key and the per-word side tables are
-      // its rollups, never a re-scan of the text.
-      val t = TextAnalysis.whitespaceTokens(col("text")) // kernel == composed split
-      val pairs = Tables.df(s, dir, "documents")
-        .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-        // outer explode + null guard: keeps the token kernel out of a
-        // scan-side inferred filter (one-token docs zip to an empty
-        // array -> null row -> dropped, identical to plain explode)
-        .select(explode_outer(zip_with(
-          slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1),
-          (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-        .where(col("p").isNotNull)
-        .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-      // pc feeds three consumers (the join probe and both rollups);
-      // checkpointing materializes the count table ONCE so the
-      // tokenize+explode doesn't recompute per branch (3 scans → 1 —
-      // the same tradeoff as minhash's corpus checkpoint, and pc is
-      // the SMALL artifact: distinct bigrams, not token instances)
-      val pc = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c")).localCheckpoint()
-      val w1t = pc.groupBy("w1")
-        .agg(sum("c").as("w1_total"), count(lit(1)).as("right_div"))
-      val w2t = pc.groupBy("w2").agg(count(lit(1)).as("cont"))
-      val rw = Window.orderBy(col("c").desc, col("w1"), col("w2"))
-      pc.join(w1t, "w1").join(w2t, "w2")
-        .withColumn("rk", row_number().over(rw).cast("long"))
-        .where(col("rk") <= 50)
-        .select(col("rk"), col("w1"), col("w2"), col("c"),
-          col("w1_total"), col("right_div"), col("cont"))
-        .orderBy("rk")
-    }, Some("""
-      WITH tok AS (SELECT string_split_regex(trim(text), '\s+') AS t FROM documents),
-      bg AS (
-        SELECT t[i] AS w1, t[i+1] AS w2
-        FROM tok, LATERAL (SELECT unnest(range(1, len(t))) AS i) g),
-      pc AS (SELECT w1, w2, COUNT(*) AS c FROM bg GROUP BY 1, 2),
-      w1t AS (SELECT w1, SUM(c) AS w1_total, COUNT(*) AS right_div FROM pc GROUP BY 1),
-      w2t AS (SELECT w2, COUNT(*) AS cont FROM pc GROUP BY 1),
-      r AS (
-        SELECT pc.w1, pc.w2, c, w1_total, right_div, cont,
-          ROW_NUMBER() OVER (ORDER BY c DESC, pc.w1, pc.w2) AS rk
-        FROM pc JOIN w1t ON pc.w1 = w1t.w1 JOIN w2t ON pc.w2 = w2t.w2)
-      SELECT CAST(rk AS BIGINT) AS rk, w1, w2, CAST(c AS BIGINT) AS c,
-        CAST(w1_total AS BIGINT) AS w1_total, CAST(right_div AS BIGINT) AS right_div,
-        CAST(cont AS BIGINT) AS cont
-      FROM r WHERE rk <= 50 ORDER BY rk"""))
+      WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      c AS (SELECT vec_id AS cent_id, e AS ce FROM e WHERE vec_id < 16),
+      ac AS (
+        SELECT vec_id, e, cent_id FROM (
+          SELECT n.vec_id, n.e, c.cent_id,
+            ROW_NUMBER() OVER (PARTITION BY n.vec_id
+              ORDER BY list_cosine_similarity(n.e, c.ce) DESC, c.cent_id) AS crk
+          FROM e n CROSS JOIN c) WHERE crk = 1),
+      prq AS (
+        SELECT n.vec_id, n.e, c.cent_id,
+          ROW_NUMBER() OVER (PARTITION BY n.vec_id
+            ORDER BY list_cosine_similarity(n.e, c.ce) DESC, c.cent_id) AS crk
+        FROM e n CROSS JOIN c WHERE n.vec_id < 5),
+      np AS (SELECT CAST(unnest([1, 2, 4]) AS BIGINT) AS nprobe),
+      pr AS (SELECT np.nprobe, q.vec_id, q.e, q.cent_id
+             FROM prq q JOIN np ON q.crk <= np.nprobe),
+      cnd AS (
+        SELECT p.nprobe, p.vec_id AS query_id, a.vec_id AS neighbor_id,
+          max(list_cosine_similarity(p.e, a.e)) AS cos
+        FROM pr p JOIN ac a USING (cent_id)
+        WHERE a.vec_id <> p.vec_id
+        GROUP BY 1, 2, 3),
+      rv AS (
+        SELECT nprobe, query_id, neighbor_id,
+          ROW_NUMBER() OVER (PARTITION BY nprobe, query_id
+            ORDER BY cos DESC, neighbor_id) AS rk
+        FROM cnd),
+      ivf5 AS (SELECT nprobe, query_id, neighbor_id FROM rv WHERE rk <= 5),
+      exq AS (
+        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
+          ROW_NUMBER() OVER (PARTITION BY q.vec_id
+            ORDER BY list_cosine_similarity(q.e, n.e) DESC, n.vec_id) AS rk
+        FROM e q CROSS JOIN e n
+        WHERE q.vec_id < 5 AND n.vec_id <> q.vec_id),
+      ex5 AS (SELECT query_id, neighbor_id FROM exq WHERE rk <= 5),
+      h AS (
+        SELECT nprobe, CAST(count(*) AS BIGINT) AS n_hits
+        FROM ivf5 JOIN ex5 USING (query_id, neighbor_id)
+        GROUP BY 1)
+      SELECT np.nprobe, COALESCE(h.n_hits, 0) AS n_hits,
+        COALESCE(h.n_hits, 0) * 10000 // (SELECT count(*) FROM ex5) AS recall_e4
+      FROM np LEFT JOIN h USING (nprobe) ORDER BY nprobe"""))
   )
 }

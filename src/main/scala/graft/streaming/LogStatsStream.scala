@@ -16,9 +16,7 @@ object LogStatsStream {
     * frame with schema (ts timestamp, user_id, event_type, value).
     */
   def logStats(events: DataFrame, watermark: String = "10 minutes"): DataFrame = {
-    val level = when(col("event_type") === "error", 2)
-      .when(col("event_type") === "signup" || col("event_type") === "purchase", 4)
-      .otherwise(5)
+    val level = graft.Lakehouse.logLevel(col("event_type"))
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 minute"), level.as("level"))

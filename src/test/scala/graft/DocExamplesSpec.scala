@@ -293,12 +293,12 @@ class DocExamplesSpec extends SparkSpec {
 
     // process_spans(pid[, span_types]) — pinned against the same span
     // assemblies the decoder-closed perfetto family encodes
-    val pid = queries.ObservabilityExt6.perfettoThreadSpans(spark, sfDir)
+    val pid = Lakehouse.perfettoThreadSpans(spark, sfDir)
       .groupBy("user_id").count().orderBy(col("count").desc, col("user_id"))
       .head().get(0).toString
     val thr = Graft.query(spark, sfDir,
       s"SELECT * FROM process_spans('$pid') ORDER BY begin_ms, span_id").collect()
-    val wantThr = queries.ObservabilityExt6.perfettoThreadSpans(spark, sfDir)
+    val wantThr = Lakehouse.perfettoThreadSpans(spark, sfDir)
       .where(col("user_id").cast("string") === pid).count()
     assert(thr.length.toLong == wantThr && wantThr > 0)
     assert(thr.forall(r => r.getAs[String]("span_type") == "thread" &&
@@ -306,7 +306,7 @@ class DocExamplesSpec extends SparkSpec {
     val both = Graft.query(spark, sfDir,
       s"SELECT span_type, COUNT(*) AS n FROM process_spans('$pid', 'both') GROUP BY 1")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val wantAsync = queries.ObservabilityExt6.perfettoAsyncSpans(spark, sfDir)
+    val wantAsync = Lakehouse.perfettoAsyncSpans(spark, sfDir)
       .where(col("user_id").cast("string") === pid).count()
     assert(both == Map("thread" -> wantThr, "async" -> wantAsync))
 

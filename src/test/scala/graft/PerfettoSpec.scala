@@ -4,7 +4,6 @@ import scala.collection.mutable
 
 import graft.operators.Perfetto
 import graft.operators.Perfetto.{NewInterned, PSpan}
-import graft.queries.ObservabilityExt6
 
 /** Decodes the binary Perfetto chunks back into a packet stream and
   * checks them against the relational packet model
