@@ -13,7 +13,6 @@ object Graft {
 
   /** Register raw tables and lakehouse views as temp views. */
   def registerViews(spark: SparkSession, dir: String): Unit = {
-    functions.GraftFunctions.register(spark)
     Tables.all.foreach(n => Tables.df(spark, dir, n).createOrReplaceTempView(n))
     val lk = new Lakehouse(spark, dir)
     lk.logEntries.createOrReplaceTempView("log_entries")
@@ -58,7 +57,8 @@ object Graft {
   private[graft] def registeredDir(spark: SparkSession): Option[String] =
     viewsReady.synchronized { Option(viewsReady.get(spark)) }
 
-  private def ensureViews(spark: SparkSession, dir: String): Unit =
+  private def ensureViews(spark: SparkSession, dir: String): Unit = {
+    functions.GraftExtensions.requireInstalled(spark)
     // per-session monitor: the session's temp-view namespace is the
     // resource being mutated, so same-session registrations (possibly
     // for DIFFERENT dirs — interleaving those would leave a mixed-lake
@@ -71,52 +71,38 @@ object Graft {
         viewsReady.synchronized { viewsReady.put(spark, dir) }
       }
     }
+  }
 
   /** client.query(sql, begin, end) analog. Timestamps are epoch
     * microseconds UTC; either bound may be omitted.
     */
-  /** Range scoping is an analyzer rule; fail loudly rather than
-    * silently returning unscoped data on a session built without it.
-    */
-  private def requireRangeRule(spark: SparkSession): Unit = {
-    val hasRule = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.analyzer.extendedResolutionRules
-      .exists(_.isInstanceOf[graft.plans.TimeRangeRewrite])
-    require(hasRule,
-      "time-range scoping requires a session built with " +
-        ".withExtensions(new graft.functions.GraftExtensions)")
-  }
-
   def query(spark: SparkSession, dir: String, sql: String,
       beginMicros: Option[Long] = None, endMicros: Option[Long] = None): DataFrame = {
     ensureViews(spark, dir)
-    analyzedInRange(spark, beginMicros, endMicros)(spark.sql(sql))
+    analyzedInRange(beginMicros, endMicros)(spark.sql(sql))
   }
 
   /** Builds `df` with `[beginMicros, endMicros)` in scope and forces
     * its analysis there. The range travels to the analyzer rule through
-    * a THREAD-LOCAL ([[graft.plans.QueryRange]]), not session conf:
+    * a THREAD-LOCAL ([[graft.plans.QueryRange]]), its only channel:
     * Spark re-runs the analyzer whenever a derived Dataset is built
     * (head() wraps the plan in a limit, count() in an aggregate, ...),
     * on whatever thread does it — session-conf state at those moments
     * belongs to whoever queries concurrently, and no lock around the
     * original analysis can cover the later re-analyses. With a
-    * thread-local, only this thread between set/clear sees the range;
+    * thread-local, only this thread inside `within` sees the range;
     * re-analyses elsewhere see none, and the rewrite's structural
     * idempotency keeps the already-injected filter intact. Spark 4
     * analyzes lazily (QueryExecution.lazyAnalyzed), hence the forced
     * analysis while the thread-local is still set.
     */
-  private def analyzedInRange(spark: SparkSession, beginMicros: Option[Long],
-      endMicros: Option[Long])(df: => DataFrame): DataFrame = {
-    if (beginMicros.nonEmpty || endMicros.nonEmpty) requireRangeRule(spark)
-    plans.QueryRange.set(beginMicros, endMicros)
-    try {
+  private def analyzedInRange(beginMicros: Option[Long],
+      endMicros: Option[Long])(df: => DataFrame): DataFrame =
+    plans.QueryRange.within(beginMicros, endMicros) {
       val d = df
       d.queryExecution.analyzed
       d
-    } finally plans.QueryRange.clear()
-  }
+    }
 
   /** Streaming read of a query result — the reference client's
     * `query_stream` (python/micromegas/micromegas/flightsql/
@@ -155,7 +141,7 @@ object Graft {
 
     def run(beginMicros: Option[Long] = None,
         endMicros: Option[Long] = None): DataFrame = {
-      analyzedInRange(spark, beginMicros, endMicros)(
+      analyzedInRange(beginMicros, endMicros)(
         org.apache.spark.sql.graftshim.Shim.ofRows(spark, parsed))
     }
 

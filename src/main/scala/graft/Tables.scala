@@ -32,10 +32,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def df(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Driver-owned sessions may be built without GraftExtensions;
-    // register() is idempotent and cheap, and every query loads at least
-    // one table, so this guarantees graft_* functions resolve everywhere.
-    graft.functions.GraftFunctions.register(spark)
+    graft.functions.GraftExtensions.requireInstalled(spark)
     val path = s"$dir/$name.parquet"
     val raw = spark.read.schema(schemaOf(spark, path)).parquet(path)
     if (name == "events") raw.schema("ts").dataType match {

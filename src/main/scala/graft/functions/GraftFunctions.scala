@@ -3,17 +3,12 @@ package graft.functions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType}
 
-/** Registration of graft's custom Catalyst functions.
-  *
-  * Two paths:
-  *  - [[GraftExtensions]] for `SparkSession.builder.withExtensions(...)`
-  *    (the idiomatic way — used by tests/Bench);
-  *  - [[GraftFunctions.register]] for sessions we didn't build
-  *    (the driver-owned Verify session) — idempotent.
+/** graft's custom Catalyst functions, name → builder. [[GraftExtensions]]
+  * installs them, with [[ReferenceNames]]' aliases, when a session is
+  * built; there is no other installer.
   */
 object GraftFunctions {
 
@@ -125,42 +120,18 @@ object GraftFunctions {
       require(args.length == 2, "graft_property_get(props_json, key)")
       GraftPropertyGet(args(0), args(1))
     })
-
-  /** The reference's own SQL names (ReferenceNames), exposed for the
-    * extensions path so withExtensions-built sessions get them too.
-    */
-  private[functions] def ReferenceScalarNames = ReferenceNames.builders
-
-  private val registered = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
-
-  def register(spark: SparkSession): Unit = registered.synchronized {
-    // marking AFTER installation (and holding the lock throughout) so a
-    // concurrent first caller can't observe the session as registered
-    // while the functions are still being installed
-    if (!registered.containsKey(spark)) {
-      val registry =
-        spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
-      builders.foreach { case (name, b) =>
-        registry.createOrReplaceTempFunction(name, b, "scala_udf")
-      }
-      ReferenceNames.register(spark)
-      registered.put(spark, java.lang.Boolean.TRUE)
-    }
-  }
 }
 
 /** `SparkSession.builder.withExtensions(new GraftExtensions)` installs
-  * every graft function at session build time.
+  * every graft function, table function, the time-range rule and the
+  * temporal-join strategies at session build time — the one way graft
+  * gets into a session. The admin table functions are the exception:
+  * host code adds them to one session with
+  * [[ReferenceNames.registerAdmin]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, b) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        b))
-    }
-    GraftFunctions.ReferenceScalarNames.foreach { case (name, b) =>
+    (GraftFunctions.builders ++ ReferenceNames.builders).foreach { case (name, b) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name),
@@ -178,4 +149,18 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  /** Fails loudly on a session built without [[GraftExtensions]], where
+    * graft's functions would not resolve and a query range would be
+    * silently ignored. Checked at the entry points ([[graft.Tables.df]],
+    * [[graft.Graft.query]], [[graft.Graft.prepareStatement]]).
+    */
+  def requireInstalled(spark: SparkSession): Unit =
+    require(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.analyzer.extendedResolutionRules
+        .exists(_.isInstanceOf[graft.plans.TimeRangeRewrite]),
+      "graft needs a session built with .withExtensions(new graft.functions.GraftExtensions)")
 }

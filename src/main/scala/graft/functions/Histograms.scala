@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Column-level histogram API.
   *
   * `make_histogram` / `sum_histograms` are custom Catalyst aggregates
-  * (see [[HistogramAgg]]) registered by [[GraftFunctions.register]] and
-  * invoked via `call_function`, so they work from both the DataFrame API
+  * (see [[HistogramAgg]]) that the session's [[GraftExtensions]]
+  * installs; they are invoked via `call_function`, so they work from both the DataFrame API
   * and `spark.sql`. The accessors below are pure compositions of
   * built-in (codegen'd) expressions — no UDFs.
   *

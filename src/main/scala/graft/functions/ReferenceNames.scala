@@ -375,20 +375,6 @@ object ReferenceNames {
       throw new IllegalStateException(
         s"$fn: no partition lake — pass a root path argument or set $PartitionRootKey"))
 
-  /** Admin gate, reference `is_admin` (query.rs:152: the admin five are
-    * registered only for admin sessions). The decision is made at
-    * REGISTRATION time from state the SQL surface cannot mutate — the
-    * SparkConf (fixed when the context is built; `SET` only touches the
-    * runtime session conf) — so a SQL client cannot self-elevate with
-    * `SET spark.graft.admin=true`: for a non-admin session the names
-    * are simply never registered, exactly the reference's contract.
-    * Server code that has authenticated an admin out-of-band calls
-    * [[registerAdmin]] explicitly (the analog of query.rs passing
-    * is_admin=true into register_table_functions).
-    */
-  private def adminFromSparkConf(spark: SparkSession): Boolean =
-    spark.sparkContext.getConf.getBoolean("spark.graft.admin", defaultValue = false)
-
   /** `list_partitions([root])` — reference
     * list_partitions_table_function.rs: the lakehouse partition
     * inventory. Day-granular here ([[graft.operators.Materialize]]'s
@@ -605,9 +591,8 @@ object ReferenceNames {
   }
 
   /** Every non-admin table function, name → builder over its session.
-    * Both installers iterate this one list: [[register]] binds the
-    * builders to the given session, [[GraftExtensions]] to the session
-    * active when the call is resolved.
+    * [[GraftExtensions]] installs them, bound to the session active
+    * when the call is resolved.
     */
   val tableFunctions: Seq[(String, SparkSession => Seq[Expression] => LogicalPlan)] = Seq(
     "view_instance" -> (viewInstanceBuilder(_)),
@@ -621,30 +606,13 @@ object ReferenceNames {
     "parse_block" -> (parseBlockBuilder(_)),
     "perfetto_trace_chunks" -> (perfettoTraceChunksBuilder(_)))
 
-  /** Install the alias names on a session we didn't build (idempotent
-    * via createOrReplace; cheap). The extensions path registers the
-    * same builders at session build time.
-    */
-  def register(spark: SparkSession): Unit = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-    builders.foreach { case (name, b) =>
-      ss.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-    tableFunctions.foreach { case (name, b) =>
-      ss.tableFunctionRegistry.createOrReplaceTempFunction(name, b(spark), "scala_udf")
-    }
-    // The admin five exist only on sessions whose CONTEXT was built
-    // admin (SparkConf, immutable from SQL) — reference query.rs:152.
-    if (adminFromSparkConf(spark)) registerAdmin(spark)
-  }
-
   /** Register the admin five (retire/materialize/regenerate_partitions,
-    * retire_partition_by_file/by_metadata) on an ADMIN session. Callable
-    * only from host code — the SQL surface has no path to this (a
-    * `SET spark.graft.admin=true` does nothing; the flag is read from
-    * the SparkConf once, at registration). This is the analog of the
-    * reference registering the admin table functions only after its
-    * server authenticated `is_admin` (query.rs:150-176).
+    * retire_partition_by_file/by_metadata) on an ADMIN session — the
+    * reference's `is_admin` gate (query.rs:150-176: the admin table
+    * functions are registered only after its server authenticated the
+    * caller). [[GraftExtensions]] never installs them, and the SQL
+    * surface has no path to this call: a session is admin only when
+    * host code that has authenticated an admin out-of-band calls it.
     */
   def registerAdmin(spark: SparkSession): Unit = {
     val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
 object Ann {
 
 
-  /** Codegen'd dot product (graft.functions.DotProduct); sessions must
-    * have graft functions registered (GraftFunctions.register /
-    * GraftExtensions). Same left-to-right summation as the HOF fold.
+  /** Codegen'd dot product (graft.functions.DotProduct), resolved by
+    * name from the session's GraftExtensions. Same left-to-right
+    * summation as the HOF fold.
     */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 

@@ -32,12 +32,14 @@ object Materialize {
     * materializers, recording WHICH time column the `date` partition
     * column is derived from (the UTC day of that column). The name
     * starts with '_' so Spark's and DuckDB's file listings treat it as
-    * hidden metadata, never data. TimeRangeRewrite injects its derived
-    * date-partition predicate ONLY into scans whose root carries this
-    * marker for the ranged time column — a `date` column on an
-    * arbitrary table (business date, non-UTC derivation, a different
-    * base timestamp) must never be assumed to equal the UTC day of the
-    * ranged timestamp (ADVICE r9: that assumption silently drops rows).
+    * hidden metadata, never data. TimeRangeRewrite ranges a scan that
+    * carries this marker on the marker's time column, and injects its
+    * derived date-partition predicate ONLY into such scans — a `date`
+    * column on an arbitrary table (business date, non-UTC derivation, a
+    * different base timestamp) must never be assumed to equal the UTC
+    * day of the ranged timestamp (ADVICE r9: that assumption silently
+    * drops rows). A LongType time column named here holds epoch
+    * milliseconds (`time_bin_ms`), the only unit the materializers write.
     */
   val DayPartitionMarker = "_graft_day_partitioned"
 

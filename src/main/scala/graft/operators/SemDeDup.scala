@@ -31,7 +31,7 @@ object SemDeDup {
       .withColumn("sc", greatest(array_max(transform(col("v"), x => abs(x))) / lit(127.0),
         lit(1e-12)))
       .withColumn("q", transform(col("v"),
-        x => graft.queries.round(x / col("sc"), 0).cast("long")))
+        x => graft.queries.duckRound(x / col("sc"), 0).cast("long")))
       .select(col("vec_id"), col("sc"), col("q"))
   }
 

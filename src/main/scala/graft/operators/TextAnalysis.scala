@@ -119,7 +119,7 @@ object TextAnalysis {
     * reproducible in ANSI SQL for the oracle.
     */
   def qualityScore(text: Column): Column =
-    graft.queries.round(
+    graft.queries.duckRound(
       lit(0.5) * stopwordRatio(text) +
       lit(0.3) * (lit(1.0) - punctRatio(text)) +
       lit(0.2) * least(tokenCount(text).cast("double") / lit(200.0), lit(1.0)), 4)

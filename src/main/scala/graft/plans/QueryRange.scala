@@ -1,39 +1,38 @@
 package graft.plans
 
-/** Per-thread query time range — the channel [[graft.Graft.query]] uses
-  * to hand a range to [[TimeRangeRewrite]].
+/** Per-thread query time range — the one channel through which a range
+  * reaches [[TimeRangeRewrite]]. [[graft.Graft.query]] and
+  * `PreparedQuery.run` set it around their analysis; nothing else does.
   *
   * Session conf cannot carry a per-query range safely: ANY derived
   * Dataset (limit/select inside head(), count(), ...) re-runs the
   * analyzer at action time on whatever thread touches it, re-applying
-  * the rewrite under whatever conf is live right then — so a range
+  * the rewrite under whatever state is live right then — so a range
   * set by one thread leaks into plans analyzed concurrently by others,
   * and no lock around the original analysis can cover those later
   * re-analyses. A thread-local scopes the range to exactly the code
-  * between set() and clear() on the calling thread: re-analyses
-  * elsewhere see no range and leave already-scoped plans untouched
-  * (the rewrite is structurally idempotent). This mirrors the
+  * inside [[within]] on the calling thread: re-analyses elsewhere see
+  * no range and leave already-scoped plans untouched. This mirrors the
   * reference, which threads query_range through per-query context
   * (rust/analytics/src/lakehouse/query.rs) rather than mutating
   * session state.
   */
 object QueryRange {
-  private val tl = new ThreadLocal[Option[(Option[Long], Option[Long])]] {
-    override def initialValue: Option[(Option[Long], Option[Long])] = None
+  private val tl = new ThreadLocal[(Option[Long], Option[Long])] {
+    override def initialValue: (Option[Long], Option[Long]) = (None, None)
   }
 
-  /** Declare this thread's per-query range. Tri-state matters:
-    * set(None, None) means "this query is EXPLICITLY unranged" — the
-    * rule must not fall back to a static conf range for it — while an
-    * absent thread-local (no query() in flight) lets the conf apply.
+  /** Runs `body` with `[beginMicros, endMicros)` as this thread's range,
+    * restoring the previous range afterwards.
     */
-  def set(beginMicros: Option[Long], endMicros: Option[Long]): Unit =
-    tl.set(Some((beginMicros, endMicros)))
+  def within[A](beginMicros: Option[Long], endMicros: Option[Long])(body: => A): A = {
+    val outer = tl.get()
+    tl.set((beginMicros, endMicros))
+    try body finally tl.set(outer)
+  }
 
-  def clear(): Unit = tl.remove()
-
-  /** Some((begin, end)) while a query() is in flight on this thread;
-    * None otherwise.
+  /** This thread's (begin, end) in epoch micros; (None, None) outside
+    * any [[within]].
     */
-  def get: Option[(Option[Long], Option[Long])] = tl.get()
+  def get: (Option[Long], Option[Long]) = tl.get()
 }

@@ -1,31 +1,39 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DataType, DateType, LongType, TimestampNTZType, TimestampType}
 
 /** Analyzer rule mirroring the reference's TableScanRewrite
   * (reference: rust/analytics/src/lakehouse/table_scan_rewrite.rs):
-  * when a session declares a query time range, every scan exposing an
-  * event-time column is wrapped in `time >= begin AND time < end` —
-  * so ad-hoc queries are automatically range-scoped and the predicate
-  * reaches the parquet scan (row-group pruning; partition pruning on a
+  * while a query time range is live, every scan exposing an event-time
+  * column is wrapped in `time >= begin AND time < end` — so ad-hoc
+  * queries are automatically range-scoped and the predicate reaches
+  * the parquet scan (row-group pruning; partition pruning on a
   * date-partitioned layout).
   *
-  * Configure per session (microseconds since epoch, UTC):
-  *   spark.conf.set("spark.graft.queryRange.beginMicros", ...)
-  *   spark.conf.set("spark.graft.queryRange.endMicros", ...)
-  *   spark.conf.set("spark.graft.queryRange.column", "ts")  // default
+  * The range is per call, like the reference's
+  * `client.query(sql, begin, end)`: [[graft.Graft.query]] and
+  * `PreparedQuery.run` put it in [[QueryRange]] for the length of their
+  * analysis, and this rule reads it from nowhere else.
+  *
+  * The time column comes from the scan. A scan exposing a DateType
+  * `date` whose root carries Materialize's
+  * [[graft.operators.Materialize.DayPartitionMarker]] is ranged on the
+  * marker's `timeColumn` (a LongType one holds epoch ms, the unit
+  * Materialize writes), plus the implied `date` partition predicate.
+  * Any other scan is ranged on `ts`. Only a scan with a DateType `date`
+  * pays the marker lookup.
   *
   * Injected as a resolution rule (GraftExtensions) so the normal
   * optimizer batches push the added Filter into the source afterwards.
   *
   * Idempotency is two-layered. A tag on each Filter THIS RULE creates
   * marks it final — later re-analyses (derived Datasets re-run the
-  * analyzer, possibly under a different live range) must not stack a
+  * analyzer, possibly inside another query's range) must not stack a
   * second, conflicting range on top. (Tagging the scan LEAF would be
   * wrong — a self-join shares one leaf instance across both sides and
   * would lose its second wrap; each side gets its own injected Filter,
@@ -34,104 +42,51 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * the tag up for plan copies that drop tags.
   */
 case class TimeRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+  import TimeRangeRewrite.{dateLit, isTime}
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val conf = spark.conf
-    // A thread-local range (per-query, set by Graft.query) is
-    // AUTHORITATIVE while present — including the explicit
-    // "unranged query" state, which must not inherit a static conf
-    // range. The conf channel only applies when no query() is in
-    // flight on this thread. Mixing bounds from the two channels is
-    // never allowed.
-    val tlRange = QueryRange.get
-    val (begin, end) = tlRange match {
-      case Some((b, e)) => (b, e)
-      case None => (
-        conf.getOption("spark.graft.queryRange.beginMicros").map(_.toLong),
-        conf.getOption("spark.graft.queryRange.endMicros").map(_.toLong))
-    }
-    // An EXPLICITLY unranged query() must stay unranged even when its
-    // derived Datasets are re-analyzed later under a live static conf
-    // range. The decision is recorded as a tagged no-op Filter(true)
-    // above each time leaf — it must live in THIS query's plan
-    // instance, never as a tag on the leaf itself: temp views share one
-    // leaf object across queries, so a leaf tag set by an unranged
-    // query would silently unscope every later ranged query on the
-    // same view. The optimizer strips the trivial filter after
-    // analysis, so it costs nothing at execution.
-    val explicitNoRange = tlRange.isDefined && begin.isEmpty && end.isEmpty
-    if (begin.isEmpty && end.isEmpty && !explicitNoRange) return plan
-    val colName = conf.getOption("spark.graft.queryRange.column").getOrElse("ts")
-    // Unit of a LongType time column. Not every Long named `ts` is epoch
-    // nanos, so scaling is gated: explicit conf wins; otherwise nanos is
-    // assumed ONLY when the session reads ns parquet as Long
-    // (spark.sql.legacy.parquet.nanosAsLong — the one way our readers
-    // produce a Long time column), else the column is taken as epoch
-    // micros (no scaling).
-    val longUnit = conf.getOption("spark.graft.queryRange.columnUnit").getOrElse {
-      if (conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true")) "nanos"
-      else "micros"
-    }
+    val (begin, end) = QueryRange.get
+    if (begin.isEmpty && end.isEmpty) return plan
+    // A LongType `ts` is epoch nanos only when the session reads ns
+    // parquet as Long (spark.sql.legacy.parquet.nanosAsLong — the one
+    // way our readers produce a Long `ts`), else epoch micros.
+    val nanosAsLong = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true")
 
-    // The derived date predicate asserts `date = UTC day of the ranged
-    // time column` — true for lakes the day-partition materializers
-    // wrote (they derive `date` exactly so and record it in a root
-    // marker file), NOT for an arbitrary table that happens to expose a
-    // DateType 'date' (business date, non-UTC derivation — injecting
-    // there silently drops rows, ADVICE r9). So the injection is gated:
-    // an EXPLICITLY configured dateColumn is a user assertion and is
-    // trusted; otherwise the scan's root must carry the Materialize
-    // marker naming this very time column as the date's source.
-    val explicitDateCol = conf.getOption("spark.graft.queryRange.dateColumn")
-    val dateColName = explicitDateCol.getOrElse("date")
-
-    def condFor(attr: Attribute): Expression = {
-      def lit(micros: Long) = attr.dataType match {
-        case LongType => longUnit match {
-          case "nanos" => Literal(micros * 1000L, LongType)
-          case "millis" => Literal(micros / 1000L, LongType)
-          case "micros" => Literal(micros, LongType)
-          case other => throw new IllegalArgumentException(
-            s"spark.graft.queryRange.columnUnit must be nanos|micros|millis, got $other")
-        }
-        case t => Literal(micros, t)
-      }
-      val conds = begin.map(b => GreaterThanOrEqual(attr, lit(b))).toSeq ++
-        end.map(e => LessThan(attr, lit(e)))
-      conds.reduce(And)
-    }
-
-    // Derived PARTITION predicate: when the scan also exposes a
-    // DateType day column (materialized views are written
-    // partitionBy("date"), Materialize.updateByDay), the time range
-    // implies a date range — and only a predicate on the PARTITION
-    // column prunes whole directories before any IO; the ts predicate
-    // alone reaches row-group stats but still lists and opens every
-    // day's files. Day boundaries are UTC (every session here pins
-    // spark.sql.session.timeZone=UTC, and the materializers derive
-    // `date` with to_date under that zone). This is the 100 TB read
-    // path: range → date filter → partition pruning → row-group stats.
-    val MicrosPerDay = 86400000000L
-    def dateLit(micros: Long) =
-      Literal(Math.floorDiv(micros, MicrosPerDay).toInt,
-        org.apache.spark.sql.types.DateType)
-    def dateAttrOf(leaf: LeafNode): Option[Attribute] =
-      leaf.output.find(a => a.name == dateColName &&
-        a.dataType == org.apache.spark.sql.types.DateType)
-        .filter(_ => explicitDateCol.isDefined ||
-          TimeRangeRewrite.markerAssertsDerivation(spark, leaf, colName))
-
-    /** Full injected range condition for a leaf: the ts conjuncts plus,
-      * when a day partition column is present, the implied date
-      * conjuncts (end is exclusive on ts, so its last included day is
-      * floor((end−1)/day)).
+    /** The injected range condition for `leaf`, if it exposes its time
+      * column.
+      *
+      * On a marked lake the date conjuncts are the derived PARTITION
+      * predicate: the materializers write `date` as the UTC day of the
+      * marker's time column (every session here pins
+      * spark.sql.session.timeZone=UTC), and only a predicate on the
+      * partition column prunes whole directories before any IO; the
+      * time predicate alone reaches row-group stats but still lists and
+      * opens every day's files. This is the 100 TB read path: range →
+      * date filter → partition pruning → row-group stats. End is
+      * exclusive on time, so its last included day is floor((end−1)/day).
+      *
+      * An unmarked DateType `date` (business date, non-UTC derivation)
+      * gets no date conjuncts: assuming date = UTC day of the ranged
+      * time there silently drops rows (ADVICE r9).
       */
-    def rangeCond(leaf: LeafNode, attr: Attribute): Expression = {
-      val dateConds = dateAttrOf(leaf).toSeq.flatMap { da =>
-        begin.map(b => GreaterThanOrEqual(da, dateLit(b))).toSeq ++
-          end.map(e => LessThanOrEqual(da, dateLit(e - 1)))
+    def rangeCond(leaf: LeafNode): Option[Expression] = {
+      val marked = leaf.output.find(a => a.name == "date" && a.dataType == DateType)
+        .flatMap(d => TimeRangeRewrite.markedTimeColumn(spark, leaf).map(d -> _))
+      val timeCol = marked.fold("ts")(_._2)
+      leaf.output.find(a => a.name == timeCol && isTime(a.dataType)).map { t =>
+        def lit(micros: Long) = t.dataType match {
+          case LongType if marked.isDefined => Literal(micros / 1000L, LongType)
+          case LongType if nanosAsLong => Literal(micros * 1000L, LongType)
+          case dt => Literal(micros, dt)
+        }
+        val timeConds = begin.map(b => GreaterThanOrEqual(t, lit(b))).toSeq ++
+          end.map(e => LessThan(t, lit(e)))
+        val dateConds = marked.toSeq.flatMap { case (d, _) =>
+          begin.map(b => GreaterThanOrEqual(d, dateLit(b))).toSeq ++
+            end.map(e => LessThanOrEqual(d, dateLit(e - 1)))
+        }
+        (timeConds ++ dateConds).reduce(And)
       }
-      (conjuncts(condFor(attr)) ++ dateConds).reduce(And)
     }
 
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -139,38 +94,30 @@ case class TimeRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case other => Seq(other)
     }
 
-    def alreadyScoped(cond: Expression, leaf: LeafNode, attr: Attribute): Boolean = {
-      val want = conjuncts(rangeCond(leaf, attr))
-      val have = conjuncts(cond)
-      want.forall(w => have.exists(_.semanticEquals(w)))
+    def scoped(leaf: LeafNode, cond: Expression): LogicalPlan = {
+      val f = Filter(cond, leaf)
+      f.setTagValue(TimeRangeRewrite.InjectedTag, true)
+      f
     }
 
     def inject(p: LogicalPlan): LogicalPlan = p match {
       // A filter WE injected is final, whatever range is live now: a
       // derived Dataset (head's limit, count's agg) re-runs the
-      // analyzer later, possibly under a different live range (e.g. a
-      // static conf range after the per-query thread-local cleared) —
+      // analyzer later, possibly inside another query's range —
       // re-wrapping would intersect the two ranges and silently return
-      // the wrong window. The semantic check stays as well, for plan
-      // copies that drop tags.
-      case f @ Filter(cond, leaf: LeafNode)
-          if f.getTagValue(TimeRangeRewrite.InjectedTag).isDefined ||
-            (!explicitNoRange && timeAttr(leaf, colName).exists(a => alreadyScoped(cond, leaf, a))) => f
-      case leaf: LeafNode if timeAttr(leaf, colName).isDefined =>
-        val fl =
-          if (explicitNoRange) Filter(Literal.TrueLiteral, leaf)
-          else Filter(rangeCond(leaf, timeAttr(leaf, colName).get), leaf)
-        fl.setTagValue(TimeRangeRewrite.InjectedTag, true)
-        fl
+      // the wrong window. The semantic check covers plan copies that
+      // drop tags.
+      case f @ Filter(_, _: LeafNode) if f.getTagValue(TimeRangeRewrite.InjectedTag).isDefined => f
+      case f @ Filter(cond, leaf: LeafNode) => rangeCond(leaf) match {
+        case Some(want) if conjuncts(want).forall(w => conjuncts(cond).exists(_.semanticEquals(w))) => f
+        case Some(want) => f.withNewChildren(Seq(scoped(leaf, want)))
+        case None => f
+      }
+      case leaf: LeafNode => rangeCond(leaf).fold(leaf: LogicalPlan)(scoped(leaf, _))
       case other => other.mapChildren(inject)
     }
     inject(plan)
   }
-
-  private def timeAttr(leaf: LeafNode, name: String): Option[Attribute] =
-    leaf.output.find(a => a.name == name &&
-      (a.dataType == TimestampType || a.dataType == TimestampNTZType ||
-        a.dataType == LongType))
 }
 
 object TimeRangeRewrite {
@@ -198,22 +145,31 @@ object TimeRangeRewrite {
   private val markerCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, String)]()
 
-  /** True iff every root path of `leaf`'s file relation carries the
-    * [[graft.operators.Materialize.DayPartitionMarker]] declaring its
-    * `date` partition column derived from `timeCol`. Non-file leaves
-    * (views over arbitrary plans, streaming sources) never qualify.
+  private val MicrosPerDay = 86400000000L
+
+  private def dateLit(micros: Long): Expression =
+    Literal(Math.floorDiv(micros, MicrosPerDay).toInt, DateType)
+
+  private def isTime(dt: DataType): Boolean =
+    dt == TimestampType || dt == TimestampNTZType || dt == LongType
+
+  /** The time column every root path of `leaf`'s file relation declares
+    * in its [[graft.operators.Materialize.DayPartitionMarker]] as the
+    * source of its `date` partition column; None when a root has no
+    * marker or the roots disagree. Non-file leaves (views over
+    * arbitrary plans, streaming sources) never qualify.
     */
-  def markerAssertsDerivation(spark: SparkSession,
-      leaf: LeafNode, timeCol: String): Boolean = leaf match {
+  def markedTimeColumn(spark: SparkSession, leaf: LeafNode): Option[String] = leaf match {
     case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
       lr.relation match {
         case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          val roots = fs.location.rootPaths
-          roots.nonEmpty && roots.forall(r =>
-            markerTimeColumn(spark, r).contains(timeCol))
-        case _ => false
+          fs.location.rootPaths.map(markerTimeColumn(spark, _)).distinct match {
+            case Seq(tc @ Some(_)) => tc
+            case _ => None
+          }
+        case _ => None
       }
-    case _ => false
+    case _ => None
   }
 
   private def markerTimeColumn(spark: SparkSession,

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Lakehouse, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -63,7 +62,7 @@ object Alerting extends QuerySuite {
       m.withColumn("prev", lag("value", 1).over(w))
         .where(col("value") > lim && col("prev").isNotNull && col("prev") <= lim)
         .select(col("user_id"), col("t_ms"), col("event_id"),
-          round(col("prev"), 2).as("prev_value"), round(col("value"), 2).as("value"))
+          duckRound(col("prev"), 2).as("prev_value"), duckRound(col("value"), 2).as("value"))
         .orderBy("user_id", "t_ms", "event_id")
     }, Some("""
       WITH m AS (

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.operators.{Ann, Pq}
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -187,7 +186,7 @@ object AnnRetrieval extends QuerySuite {
       val e = keyedEmbs(s, dir)
       val q = e.where(col("vec_id") < 5)
       Ann.bruteForceTopK(e, q, k = 10)
-        .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
+        .select(col("query_id"), col("rk"), col("neighbor_id"), duckRound(col("cos"), 4).as("cos"))
         .orderBy("query_id", "rk")
     }, Some("""
       WITH q AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings WHERE vec_id < 5),
@@ -208,7 +207,7 @@ object AnnRetrieval extends QuerySuite {
       val e = keyedEmbs(s, dir)
       val q = e.where(col("vec_id") < 5)
       Ann.lshTopK(e, q, dim = 64, nPlanes = 6, k = 5)
-        .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
+        .select(col("query_id"), col("rk"), col("neighbor_id"), duckRound(col("cos"), 4).as("cos"))
         .orderBy("query_id", "rk")
     }, Some(s"""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
@@ -237,7 +236,7 @@ object AnnRetrieval extends QuerySuite {
       val e = keyedEmbs(s, dir)
       val q = e.where(col("vec_id") < 5)
       Ann.ivfTopK(e, q, nCentroids = 16, nProbe = 4, k = 5)
-        .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
+        .select(col("query_id"), col("rk"), col("neighbor_id"), duckRound(col("cos"), 4).as("cos"))
         .orderBy("query_id", "rk")
     }, Some("""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
@@ -280,7 +279,7 @@ object AnnRetrieval extends QuerySuite {
         col("embedding").cast("array<double>").as("v"))
         .withColumn("sc", greatest(array_max(transform(col("v"), x => abs(x))) / lit(127.0),
           lit(1e-12)))
-        .withColumn("q", transform(col("v"), x => round(x / col("sc"), 0).cast("long")))
+        .withColumn("q", transform(col("v"), x => duckRound(x / col("sc"), 0).cast("long")))
         .select(col("vec_id"), col("sc"), col("q"))
       val qs = e.where(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"), col("sc").as("sa"), col("q").as("qa"))
@@ -293,7 +292,7 @@ object AnnRetrieval extends QuerySuite {
       val w = Window.partitionBy("query_id").orderBy(col("idot").desc, col("neighbor_id"))
       scored.withColumn("rk", row_number().over(w).cast("long")).where(col("rk") <= 10)
         .select(col("query_id"), col("rk"), col("neighbor_id"), col("idot"),
-          round(col("idot").cast("double") * col("sa") * col("sc"), 4).as("approx_dot"))
+          duckRound(col("idot").cast("double") * col("sa") * col("sc"), 4).as("approx_dot"))
         .orderBy("query_id", "rk")
     }, Some("""
       WITH e AS (

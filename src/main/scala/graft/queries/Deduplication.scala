@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -155,7 +154,7 @@ object Deduplication extends QuerySuite {
       val withSets = cand
         .join(sh.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
         .join(sh.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
-      withSets.select(col("a"), col("b"), round(Dedup.jaccard(col("sa"), col("sb")), 4).as("jac"))
+      withSets.select(col("a"), col("b"), duckRound(Dedup.jaccard(col("sa"), col("sb")), 4).as("jac"))
         .orderBy("a", "b")
     }, Some(s"""
       WITH tok AS (SELECT doc_id, $oracleTokens AS t FROM documents),
@@ -248,7 +247,7 @@ object Deduplication extends QuerySuite {
       val pairs = sh.as("x").join(sh.as("y"), col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
           size(array_intersect(col("x.s"), col("y.s"))).as("inter"),
-          round(Dedup.jaccard(col("x.s"), col("y.s")), 4).as("jac"))
+          duckRound(Dedup.jaccard(col("x.s"), col("y.s")), 4).as("jac"))
       pairs.where(col("inter") > 0).select("a", "b", "jac").orderBy("a", "b")
     }, Some(s"""
       WITH tok AS (SELECT doc_id, $oracleTokens AS t FROM documents WHERE doc_id < 30),
@@ -292,7 +291,7 @@ object Deduplication extends QuerySuite {
         .agg(count(lit(1)).as("n_chunks"),
           sum((col("n_docs") > 1).cast("long")).as("n_dup_chunks"))
         .select(col("doc_id"), col("n_chunks"), col("n_dup_chunks"),
-          round(col("n_dup_chunks").cast("double") / col("n_chunks"), 4).as("dup_ratio"))
+          duckRound(col("n_dup_chunks").cast("double") / col("n_chunks"), 4).as("dup_ratio"))
         .orderBy("doc_id")
     }, Some("""
       WITH tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t
@@ -462,7 +461,7 @@ object Deduplication extends QuerySuite {
       val d = keyedDocs(s, dir)
       val comp = Dedup.connectedComponents(lshEdges(d))
       val scored = d.select(col("doc_id"),
-        round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
+        duckRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
           .cast("long").as("q10k"))
       val labeled = scored.join(comp, col("doc_id") === col("node"), "left")
         .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("cluster"),

@@ -2,10 +2,8 @@ package graft.queries
 
 import graft.operators.Ann
 import graft.{GraftQuery, QuerySuite, Tables}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.functions.{round => sparkRound} // Spark's HALF_UP round
 
 /** Embeddings (SURVEY §2 LLM pipeline): near-duplicate embeddings,
   * quantization and norm health, the Gram matrix, k-means style
@@ -94,7 +92,7 @@ object Embeddings extends QuerySuite {
         .select(col("x.vec_id").as("a"), col("y.vec_id").as("b"),
           (Ann.dot(col("x.e"), col("y.e")) / (col("x.nrm") * col("y.nrm"))).as("cos"))
         .where(col("cos") >= 0.4)
-        .select(col("a"), col("b"), round(col("cos"), 4).as("cos"))
+        .select(col("a"), col("b"), duckRound(col("cos"), 4).as("cos"))
         .orderBy("a", "b")
     }, Some("""
       WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
@@ -111,11 +109,11 @@ object Embeddings extends QuerySuite {
       // q_i = round(v_i/scale). Pure per-row array math — zero shuffle.
       val e = col("embedding").cast("array<double>")
       val sc = greatest(array_max(transform(e, v => abs(v))) / lit(127.0), lit(1e-12))
-      val q = transform(e, v => round(v / col("sc"), 0).cast("long"))
+      val q = transform(e, v => duckRound(v / col("sc"), 0).cast("long"))
       keyedEmbs(s, dir)
         .withColumn("sc", sc)
         .withColumn("q", q)
-        .select(col("vec_id"), round(col("sc"), 6).as("scale"),
+        .select(col("vec_id"), duckRound(col("sc"), 6).as("scale"),
           aggregate(col("q"), lit(0L), (acc, x) => acc + x).as("sum_q"),
           array_min(col("q")).as("min_q"), array_max(col("q")).as("max_q"),
           size(filter(col("q"), x => abs(x) === 127)).cast("long").as("n_sat"))
@@ -148,7 +146,7 @@ object Embeddings extends QuerySuite {
           col("embedding").cast("array<double>").as("v"))
         .withColumn("sc",
           greatest(array_max(transform(col("v"), x => abs(x))) / lit(127.0), lit(1e-12)))
-        .withColumn("q", transform(col("v"), x => sparkRound(x / col("sc"), 0).cast("long")))
+        .withColumn("q", transform(col("v"), x => round(x / col("sc"), 0).cast("long")))
         .withColumn("nrm2", aggregate(col("q"), lit(0L), (a, x) => a + x * x))
         .withColumn("n_sat", size(filter(col("q"), x => abs(x) === 127)).cast("long"))
       e.groupBy("label")
@@ -195,7 +193,7 @@ object Embeddings extends QuerySuite {
     GraftQuery("l_gram_matrix", (s, dir) => {
       val q = keyedEmbs(s, dir).select(
         transform(col("embedding").cast("array<double>"),
-          x => round(x * 1000, 0).cast("long")).as("qv"))
+          x => duckRound(x * 1000, 0).cast("long")).as("qv"))
       // ONE aggregate pass (graft_gram_upper, r15): each vector enters
       // the agg as a single row and the d(d+1)/2 multiply-adds run in
       // a tight primitive loop over a per-partition 2080-cell long

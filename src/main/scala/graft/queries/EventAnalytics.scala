@@ -1,10 +1,8 @@
 package graft.queries
 
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.functions.{round => sparkRound} // Spark's HALF_UP round
 
 /** Event analytics (SURVEY §2 observability): log templates and their
   * drift, funnels, retention cohorts, state transitions, label
@@ -41,7 +39,7 @@ object EventAnalytics extends QuerySuite {
       // fields to <num>, group by the surviving template. Counts are
       // integer-exact; the example line is the lexicographic min.
       val line = concat(col("event_type"), lit(" user="), col("user_id").cast("string"),
-        lit(" value="), round(col("value"), 0).cast("long").cast("string"))
+        lit(" value="), duckRound(col("value"), 0).cast("long").cast("string"))
       events(s, dir)
         .select(col("user_id"), regexp_replace(line, "[0-9]+", "<num>").as("template"),
           line.as("line"))
@@ -71,7 +69,7 @@ object EventAnalytics extends QuerySuite {
       // dense template×day grid (absent → 0) so the L1 distance sees
       // appearing AND vanishing templates
       val line = concat(col("event_type"), lit(" user="), col("user_id").cast("string"),
-        lit(" value="), sparkRound(col("value"), 0).cast("long").cast("string"))
+        lit(" value="), round(col("value"), 0).cast("long").cast("string"))
       val td = events(s, dir)
         .select(regexp_replace(line, "[0-9]+", "<num>").as("template"),
           epochMs(col("ts")).as("t_ms"))

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Lakehouse, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -96,9 +95,9 @@ object LakehouseViews extends QuerySuite {
       new Lakehouse(s, dir).measures
         .groupBy("name")
         .agg(count(lit(1)).as("n"),
-          round(min("value"), 2).as("min_value"),
-          round(max("value"), 2).as("max_value"),
-          round(avg("value"), 4).as("avg_value"),
+          duckRound(min("value"), 2).as("min_value"),
+          duckRound(max("value"), 2).as("max_value"),
+          duckRound(avg("value"), 4).as("avg_value"),
           expr(money(s"sum(${decValue})")).as("sum_value"))
         .orderBy("name")
     }, Some(s"""
@@ -382,15 +381,15 @@ object LakehouseViews extends QuerySuite {
       val gauges = e.select(ms.as("time_ms"),
         col("user_id").cast("string").as("process_id"),
         col("event_type").as("name"), lit("units").as("unit"),
-        round(col("value"), 6).as("value"))
+        duckRound(col("value"), 6).as("value"))
       val summaries = e
         .groupBy(col("user_id").cast("string").as("process_id"),
           col("event_type").as("metric"),
           (ms - pmod(ms, lit(60000L)) + lit(60000L)).as("time_ms"))
         .agg(count(lit(1)).cast("double").as("s_count"),
-          round(sum("value"), 6).as("s_sum"),
-          round(min("value"), 6).as("s_min"),
-          round(max("value"), 6).as("s_max"))
+          duckRound(sum("value"), 6).as("s_sum"),
+          duckRound(min("value"), 6).as("s_min"),
+          duckRound(max("value"), 6).as("s_max"))
         .select(col("time_ms"), col("process_id"),
           expr("""stack(4,
             concat(metric, '_count'), s_count,

@@ -2,11 +2,9 @@ package graft.queries
 
 import graft.functions.Histograms
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{round => sparkRound} // Spark's HALF_UP round
 
 /** Metrics and histograms (SURVEY §2 observability): histogram sketches
   * and their quantiles, merges and expansions, metrics derived from spans,
@@ -96,7 +94,7 @@ object Metrics extends QuerySuite {
       histoPerType(s, dir)
         .select(col("event_type"), explode(array(ratios.map(r =>
           struct(lit(r).as("ratio"),
-            round(Histograms.quantileFromHistogram(col("h"), r), 4).as("q"))): _*)).as("x"))
+            duckRound(Histograms.quantileFromHistogram(col("h"), r), 4).as("q"))): _*)).as("x"))
         .select(col("event_type"), col("x.ratio").as("ratio"), col("x.q").as("q"))
         .orderBy("event_type", "ratio")
     }, Some(s"""$oracleBins,
@@ -125,7 +123,7 @@ object Metrics extends QuerySuite {
         .groupBy(epochMs(date_trunc("hour", col("ts"))).as("hour_ms"))
         .agg(Histograms.makeHistogram(HStart, HEnd, HBins, col("value")).as("h"))
         .select(col("hour_ms"),
-          round(Histograms.quantileFromHistogram(col("h"), 0.95), 4).as("p95"),
+          duckRound(Histograms.quantileFromHistogram(col("h"), 0.95), 4).as("p95"),
           Histograms.countFromHistogram(col("h")).as("n"))
         .orderBy("hour_ms")
     }, Some("""
@@ -154,8 +152,8 @@ object Metrics extends QuerySuite {
       histoPerType(s, dir)
         .select(col("event_type"),
           Histograms.countFromHistogram(col("h")).as("cnt"),
-          round(Histograms.sumFromHistogram(col("h")), 2).as("s"),
-          round(Histograms.varianceFromHistogram(col("h")), 2).as("var"))
+          duckRound(Histograms.sumFromHistogram(col("h")), 2).as("s"),
+          duckRound(Histograms.varianceFromHistogram(col("h")), 2).as("var"))
         .orderBy("event_type")
     }, Some("""
       SELECT event_type, CAST(count(value) AS BIGINT) AS cnt,
@@ -185,7 +183,7 @@ object Metrics extends QuerySuite {
       val h = histoPerType(s, dir)
       Histograms.expand(h, col("h"), Seq(col("event_type")))
         .select(col("event_type"), col("bin_idx").cast("long").as("bin_idx"),
-          round(col("bin_center"), 4).as("bin_center"), col("count"))
+          duckRound(col("bin_center"), 4).as("bin_center"), col("count"))
         .orderBy("event_type", "bin_idx")
     }, Some(s"""$oracleBins
       SELECT et.event_type, b.bin_idx,
@@ -200,7 +198,7 @@ object Metrics extends QuerySuite {
       // shape): second-stage agg over the first-stage aggregate
       val perMinute = events(s, dir)
         .groupBy(epochMs(date_trunc("minute", col("ts"))).as("minute_ms"), col("event_type"))
-        .agg(count(lit(1)).as("cnt"), round(sum("value"), 6).as("sum_v"))
+        .agg(count(lit(1)).as("cnt"), duckRound(sum("value"), 6).as("sum_v"))
       perMinute
         .groupBy((col("minute_ms") - pmod(col("minute_ms"), lit(3600000L))).as("hour_ms"), col("event_type"))
         .agg(sum("cnt").as("cnt"))
@@ -224,10 +222,10 @@ object Metrics extends QuerySuite {
         graft.functions.Histograms.makeHistogram(0.0, 500.0, 50, col("value")).as("h"),
         percentile(col("value"), lit(0.95)).as("p95e"))
       h.select(col("event_type"),
-          sparkRound(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95), 4)
+          round(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95), 4)
             .as("p95_hist"),
-          sparkRound(col("p95e"), 4).as("p95_exact"),
-          sparkRound(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95)
+          round(col("p95e"), 4).as("p95_exact"),
+          round(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95)
             - col("p95e"), 4).as("err"))
         .orderBy("event_type")
     }, Some("""
@@ -282,7 +280,7 @@ object Metrics extends QuerySuite {
         .groupBy("event_type").agg(countDistinct("user_id").as("exact_users"))
       sk.join(broadcast(ex), "event_type")
         .select(col("event_type"), col("n_reg"), col("n_zero"),
-          sparkRound(col("hll_estimate"), 2).as("hll_estimate"), col("exact_users"))
+          round(col("hll_estimate"), 2).as("hll_estimate"), col("exact_users"))
         .orderBy("event_type")
     }, Some("""
       WITH x AS (
@@ -782,7 +780,7 @@ object Metrics extends QuerySuite {
       val tMs = epochMs(col("ts"))
       val steps = events(s, dir)
         .select(col("event_type").as("name"), col("user_id"), col("event_id"),
-          tMs.as("t_ms"), sparkRound(col("value") * 10000.0, 0).cast("long").as("v_e4"))
+          tMs.as("t_ms"), round(col("value") * 10000.0, 0).cast("long").as("v_e4"))
         .withColumn("prev", lag("v_e4", 1).over(w))
         .where(col("prev").isNotNull)
         .withColumn("reset", when(col("v_e4") < col("prev"), 1L).otherwise(0L))

@@ -3,10 +3,8 @@ package graft.queries
 import graft.operators.TextAnalysis.whitespaceTokens
 import graft.operators.{Dedup, Multimodal, TextAnalysis}
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.functions.{round => sparkRound} // Spark's HALF_UP round
 
 /** Mixtures and splits (SURVEY §2 LLM pipeline): sampling, split
   * assignment and leakage, mixture weights and epochs, DSIR, shard
@@ -104,7 +102,7 @@ object MixturesSplits extends QuerySuite {
           / col("tokens").cast("double"))
       per.crossJoin(broadcast(tot))
         .select(col("source"), col("n_docs"), col("tokens"),
-          round(raw, 6).as("weight"),
+          duckRound(raw, 6).as("weight"),
           floor(raw * col("tokens").cast("double")).cast("long").as("budget_tokens"))
         .orderBy("source")
     }, Some("""
@@ -151,7 +149,7 @@ object MixturesSplits extends QuerySuite {
           sum(col("t_cnt") + 1).as("sum_t"),
           sum(col("r_cnt") + 1).as("sum_r"))
         .select(col("doc_id"), col("n_tokens"), col("sum_t"), col("sum_r"),
-          round(col("sum_t").cast("double") / col("sum_r"), 6).as("importance"))
+          duckRound(col("sum_t").cast("double") / col("sum_r"), 6).as("importance"))
         .orderBy("doc_id")
     }, Some(s"""
       WITH tok AS (
@@ -195,7 +193,7 @@ object MixturesSplits extends QuerySuite {
       // stays green).
       val scored = d.select(col("doc_id"), col("lang"),
           TextAnalysis.langIdHeuristic(col("text")).as("pred_lang"),
-          round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
+          duckRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
             .cast("long").as("q10k"),
           TextAnalysis.tokenCount(col("text")).as("n_tokens"),
           md5(col("text")).as("h"))
@@ -621,7 +619,7 @@ object MixturesSplits extends QuerySuite {
     // the splits are distributionally exchangeable — this is the gate
     // that checks eval actually measures the training distribution.
     GraftQuery("l_split_bias", (s, dir) => {
-      val q10k = sparkRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
+      val q10k = round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
       val u = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long").cast("double") / lit(4294967296.0)
       val sb = keyedDocs(s, dir)

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.functions.Colors
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType}
 
@@ -29,7 +28,7 @@ object Properties extends QuerySuite {
         .groupBy("event_type")
         .agg(count(col("k_i")).as("n_k"),
           sum(col("k_i")).as("sum_k"),
-          round(avg(col("k_f")), 4).as("avg_k"))
+          duckRound(avg(col("k_f")), 4).as("avg_k"))
         .orderBy("event_type")
     }, Some("""
       SELECT event_type,
@@ -230,9 +229,9 @@ object Properties extends QuerySuite {
       val binIdx = least(greatest(floor(v / lit(10.0)).cast("long"), lit(0L)), lit(49L))
       val binCenter = lit(0.0) + (binIdx.cast("double") + lit(0.5)) * lit(10.0)
       e.select(col("event_id"),
-          round(lerp, 6).as("lerp_v"),
-          round(unlerp, 6).as("unlerp_v"),
-          round(binCenter, 4).as("bin_center"))
+          duckRound(lerp, 6).as("lerp_v"),
+          duckRound(unlerp, 6).as("unlerp_v"),
+          duckRound(binCenter, 4).as("bin_center"))
         .orderBy("event_id")
     }, Some("""
       SELECT event_id,

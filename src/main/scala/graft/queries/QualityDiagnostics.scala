@@ -2,10 +2,8 @@ package graft.queries
 
 import graft.operators.TextAnalysis
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.functions.{round => sparkRound} // Spark's HALF_UP round
 
 /** Quality diagnostics (SURVEY §2 LLM pipeline): per-source quantile
   * normalization, drift, length correlation, gate agreement, and the
@@ -62,7 +60,7 @@ object QualityDiagnostics extends QuerySuite {
       // under equal scores; pct = (rk-1)·10⁴ div (n-1), 0 for a
       // single-doc source.
       val scored = keyedDocs(s, dir).select(col("doc_id"), col("source"),
-        round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
+        duckRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
           .cast("long").as("q10k"))
       val w = Window.partitionBy("source").orderBy(col("q10k"), col("doc_id"))
       scored
@@ -89,7 +87,7 @@ object QualityDiagnostics extends QuerySuite {
     // crawl slice degrading" check a curation pipeline runs per
     // snapshot before mixing.
     GraftQuery("l_quality_drift", (s, dir) => {
-      val q10k = sparkRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
+      val q10k = round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
       // decile bucket 0..9 from the integer q10k (shared scorer with
       // l_curation_pipeline — same rounding, same oracle fragment)
       val sb = keyedDocs(s, dir)
@@ -157,7 +155,7 @@ object QualityDiagnostics extends QuerySuite {
       // ±1-corrected isqrt (L63's trick) on EACH variance term, so
       // the product of roots — not the root of the (overflowing)
       // product — is the shared cross-engine contract.
-      val q10k = sparkRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
+      val q10k = round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
       val d = keyedDocs(s, dir).select(col("source"),
         TextAnalysis.tokenCount(col("text")).as("x"), q10k.as("y"))
       d.groupBy("source")
@@ -328,7 +326,7 @@ object QualityDiagnostics extends QuerySuite {
       // kernel-in-filter net caught it). The cut materializes two
       // longs per doc once; the kernel runs exactly once per row.
       val scored = keyedDocs(s, dir).select(
-        sparkRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
+        round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
           .cast("long").as("q10k"),
         // n_tokens off the SAME textstats kernel the score reads —
         // codegen CSE makes the token count free; the java-regex

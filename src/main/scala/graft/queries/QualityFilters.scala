@@ -3,7 +3,6 @@ package graft.queries
 import graft.operators.TextAnalysis.whitespaceTokens
 import graft.operators.{Dedup, TextAnalysis}
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -44,9 +43,9 @@ object QualityFilters extends QuerySuite {
       val txt = col("text")
       keyedDocs(s, dir).select(col("doc_id"),
           TextAnalysis.tokenCount(txt).as("n_tokens"),
-          round(TextAnalysis.meanTokenLength(txt), 4).as("mean_token_len"),
-          round(TextAnalysis.punctRatio(txt), 4).as("punct_ratio"),
-          round(TextAnalysis.stopwordRatio(txt), 4).as("stopword_ratio"),
+          duckRound(TextAnalysis.meanTokenLength(txt), 4).as("mean_token_len"),
+          duckRound(TextAnalysis.punctRatio(txt), 4).as("punct_ratio"),
+          duckRound(TextAnalysis.stopwordRatio(txt), 4).as("stopword_ratio"),
           TextAnalysis.qualityScore(txt).as("quality"))
         .orderBy("doc_id")
     }, Some("""
@@ -83,8 +82,8 @@ object QualityFilters extends QuerySuite {
         .agg(sum("c").as("n_tokens"), max("c").as("top_count"),
           count(lit(1)).as("n_distinct"))
         .select(col("doc_id"), col("n_tokens"), col("top_count"), col("n_distinct"),
-          round(col("top_count").cast("double") / col("n_tokens"), 4).as("rep_ratio"),
-          round(col("n_distinct").cast("double") / col("n_tokens"), 4).as("diversity"))
+          duckRound(col("top_count").cast("double") / col("n_tokens"), 4).as("rep_ratio"),
+          duckRound(col("n_distinct").cast("double") / col("n_tokens"), 4).as("diversity"))
         .orderBy("doc_id")
     }, Some("""
       WITH tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS w
@@ -333,7 +332,7 @@ object QualityFilters extends QuerySuite {
         .agg(count(lit(1)).as("n_tokens"),
           sum(when(col("iv").isNull, 1L).otherwise(0L)).as("n_oov"))
         .select(col("doc_id"), col("n_tokens"), col("n_oov"),
-          round(col("n_oov").cast("double") / col("n_tokens"), 6).as("oov_rate"))
+          duckRound(col("n_oov").cast("double") / col("n_tokens"), 6).as("oov_rate"))
         .orderBy("doc_id")
     }, Some(s"""
       WITH tok AS (
@@ -564,7 +563,7 @@ object QualityFilters extends QuerySuite {
         .agg(count(lit(1)).as("n_shingles"),
           sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
         .select(col("doc_id"), col("n_shingles"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("n_shingles"), 4).as("contamination"))
+          duckRound(col("n_hits").cast("double") / col("n_shingles"), 4).as("contamination"))
         .orderBy("doc_id")
     }, Some(s"""
       WITH tok AS (SELECT doc_id, source, $oracleTokens AS t FROM documents),

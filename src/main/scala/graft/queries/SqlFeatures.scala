@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, QuerySuite, Tables}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,8 +23,8 @@ object SqlFeatures extends QuerySuite {
       l.join(p, col("l_partkey") === col("p_partkey"))
         .groupBy("p_brand")
         .agg(count(lit(1)).as("n_items"),
-          round(sum("l_quantity"), 2).as("sum_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"))
+          duckRound(sum("l_quantity"), 2).as("sum_qty"),
+          duckRound(avg("l_extendedprice"), 4).as("avg_price"))
         .orderBy("p_brand")
     }, Some("""
       SELECT p_brand, CAST(count(*) AS BIGINT) AS n_items,
@@ -41,8 +40,8 @@ object SqlFeatures extends QuerySuite {
       e.select(col("user_id"), col("event_id"), col("value"),
           row_number().over(w).as("rn"),
           rank().over(wv).as("value_rank"),
-          round(lag("value", 1).over(w), 2).as("prev_value"),
-          round(lead("value", 1).over(w), 2).as("next_value"))
+          duckRound(lag("value", 1).over(w), 2).as("prev_value"),
+          duckRound(lead("value", 1).over(w), 2).as("next_value"))
         .orderBy("user_id", "rn")
     }, Some("""
       SELECT user_id, event_id, value,
@@ -58,8 +57,8 @@ object SqlFeatures extends QuerySuite {
       e.groupBy(epochMs(date_trunc("hour", col("ts"))).as("bucket_ms"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           expr(money(s"sum($decValue)")).as("sum_value"),
-          round(min("value"), 2).as("min_value"),
-          round(max("value"), 2).as("max_value"))
+          duckRound(min("value"), 2).as("min_value"),
+          duckRound(max("value"), 2).as("max_value"))
         .orderBy("bucket_ms", "event_type")
     }, Some(s"""
       SELECT epoch_ms(date_trunc('hour', ts)) AS bucket_ms, event_type,
@@ -99,8 +98,8 @@ object SqlFeatures extends QuerySuite {
       val e = table(s, dir, "events")
       e.groupBy("event_type")
         .agg(approx_count_distinct("user_id").as("approx_users"),
-          round(element_at(percentile_approx(col("value"), array(lit(0.5), lit(0.95)), lit(10000)), 1), 2).as("p50_approx"),
-          round(element_at(percentile_approx(col("value"), array(lit(0.5), lit(0.95)), lit(10000)), 2), 2).as("p95_approx"))
+          duckRound(element_at(percentile_approx(col("value"), array(lit(0.5), lit(0.95)), lit(10000)), 1), 2).as("p50_approx"),
+          duckRound(element_at(percentile_approx(col("value"), array(lit(0.5), lit(0.95)), lit(10000)), 2), 2).as("p95_approx"))
         .orderBy("event_type")
     }, None),
 
@@ -141,10 +140,10 @@ object SqlFeatures extends QuerySuite {
     GraftQuery("q_percentiles", (s, dir) => {
       val l = table(s, dir, "lineitem")
       l.agg(
-        round(percentile(col("l_extendedprice"), lit(0.25)), 2).as("p25"),
-        round(percentile(col("l_extendedprice"), lit(0.5)), 2).as("p50"),
-        round(percentile(col("l_extendedprice"), lit(0.9)), 2).as("p90"),
-        round(percentile(col("l_extendedprice"), lit(0.99)), 2).as("p99"))
+        duckRound(percentile(col("l_extendedprice"), lit(0.25)), 2).as("p25"),
+        duckRound(percentile(col("l_extendedprice"), lit(0.5)), 2).as("p50"),
+        duckRound(percentile(col("l_extendedprice"), lit(0.9)), 2).as("p90"),
+        duckRound(percentile(col("l_extendedprice"), lit(0.99)), 2).as("p99"))
     }, Some("""
       SELECT
         round(quantile_cont(l_extendedprice, 0.25),2) AS p25,
@@ -156,7 +155,7 @@ object SqlFeatures extends QuerySuite {
     GraftQuery("q_rollup", (s, dir) => {
       table(s, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
+        .agg(count(lit(1)).as("n"), duckRound(sum("l_quantity"), 2).as("sum_qty"))
         .select(
           coalesce(col("l_returnflag"), lit("ALL")).as("l_returnflag"),
           coalesce(col("l_linestatus"), lit("ALL")).as("l_linestatus"),
@@ -178,7 +177,7 @@ object SqlFeatures extends QuerySuite {
       val o = table(s, dir, "orders").where(col("o_orderpriority") === "1-URGENT")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
         .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_customers"), round(avg("c_acctbal"), 4).as("avg_bal"))
+        .agg(count(lit(1)).as("n_customers"), duckRound(avg("c_acctbal"), 4).as("avg_bal"))
         .orderBy("c_mktsegment")
     }, Some("""
       SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_customers,
@@ -293,7 +292,7 @@ object SqlFeatures extends QuerySuite {
       table(s, dir, "part").where(col("p_partkey") <= 500)
         .select(col("p_partkey"),
           expr("stack(2, 'size', CAST(p_size AS DOUBLE), 'retail', p_retailprice) AS (metric, value)"))
-        .withColumn("value", round(col("value"), 2))
+        .withColumn("value", duckRound(col("value"), 2))
         .orderBy("p_partkey", "metric")
     }, Some("""
       SELECT p_partkey, u.metric, round(u.value, 2) AS value
@@ -321,8 +320,8 @@ object SqlFeatures extends QuerySuite {
       // exact median (interpolated) and modal category per return flag
       val l = table(s, dir, "lineitem")
       l.groupBy("l_returnflag")
-        .agg(round(median(col("l_extendedprice")), 3).as("med_price"),
-          round(median(col("l_quantity")), 3).as("med_qty"),
+        .agg(duckRound(median(col("l_extendedprice")), 3).as("med_price"),
+          duckRound(median(col("l_quantity")), 3).as("med_qty"),
           mode(col("l_linestatus")).as("mode_status"))
         .orderBy("l_returnflag")
     }, Some("""
@@ -394,9 +393,9 @@ object SqlFeatures extends QuerySuite {
       val rng = Window.partitionBy("user_id").orderBy(col("value"))
         .rangeBetween(Window.unboundedPreceding, Window.currentRow)
       e.select(col("user_id"), col("event_id"),
-          round(avg("value").over(rows5), 4).as("ma5"),
-          round(min("value").over(rows5), 2).as("min5"),
-          round(sum("value").over(rng), 2).as("running_by_value"))
+          duckRound(avg("value").over(rows5), 4).as("ma5"),
+          duckRound(min("value").over(rows5), 2).as("min5"),
+          duckRound(sum("value").over(rng), 2).as("running_by_value"))
         .orderBy("user_id", "event_id")
     }, Some("""
       SELECT user_id, event_id,
@@ -448,7 +447,7 @@ object SqlFeatures extends QuerySuite {
       val ex = e.groupBy("event_type").agg(countDistinct("user_id").as("exact_users"))
       sk.join(broadcast(ex), "event_type")
         .select(col("event_type"), col("n_reg"), col("n_zero"),
-          round(col("hll_estimate"), 2).as("hll_estimate"), col("exact_users"))
+          duckRound(col("hll_estimate"), 2).as("hll_estimate"), col("exact_users"))
         .orderBy("event_type")
     }, Some("""
       WITH x AS (
@@ -488,7 +487,7 @@ object SqlFeatures extends QuerySuite {
       val e = events(s, dir)
       val ms = epochMs(col("ts"))
       e.groupBy((ms - pmod(ms, lit(900000L))).as("bin_ms"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(avg("value"), 4).as("avg_value"))
+        .agg(count(lit(1)).as("n"), duckRound(avg("value"), 4).as("avg_value"))
         .orderBy("bin_ms", "event_type")
     }, Some("""
       SELECT epoch_ms(ts) - epoch_ms(ts) % 900000 AS bin_ms, event_type,

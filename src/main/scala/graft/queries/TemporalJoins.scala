@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -42,7 +41,7 @@ object TemporalJoins extends QuerySuite {
         tolerance = if (forward) Some(3600000L) else None,
         rightTiebreak = Seq("m_id"))
       .select(col("user_id"), col("event_id"), col("t_ms"),
-        round(col("value"), 2).as(if (forward) "next_purchase" else "last_purchase"),
+        duckRound(col("value"), 2).as(if (forward) "next_purchase" else "last_purchase"),
         col("m_id").as("purchase_id"))
       .orderBy("user_id", "t_ms", "event_id")
   }
@@ -58,7 +57,7 @@ object TemporalJoins extends QuerySuite {
         width = 1800000L)
       .select(col("user_id"), col("event_id").as("err_id"), col("m_id").as("pur_id"),
         (col("mt_ms") - col("t_ms")).as("dt_ms"),
-        round(col("value"), 2).as("value"))
+        duckRound(col("value"), 2).as("value"))
       .orderBy("user_id", "err_id", "pur_id")
   }
 
@@ -148,7 +147,7 @@ object TemporalJoins extends QuerySuite {
           lag(tMs, 1).over(w).as("prev_ms"))
         .where(col("prev_ms").isNotNull && tMs > col("prev_ms"))
         .select(col("user_id"), col("name"), col("event_id"),
-          round((col("value") - col("prev_value")) / ((col("t_ms") - col("prev_ms")) / lit(1000.0)), 6).as("rate_per_s"))
+          duckRound((col("value") - col("prev_value")) / ((col("t_ms") - col("prev_ms")) / lit(1000.0)), 6).as("rate_per_s"))
         .orderBy("user_id", "name", "event_id")
     }, Some("""
       WITH d AS (

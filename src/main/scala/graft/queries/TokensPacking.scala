@@ -3,7 +3,6 @@ package graft.queries
 import graft.operators.TextAnalysis.whitespaceTokens
 import graft.operators.{Bpe, Cms, TextAnalysis}
 import graft.{GraftQuery, QuerySuite, Tables}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -556,7 +555,7 @@ object TokensPacking extends QuerySuite {
       val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("term"))
       scored.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("doc_id"), col("term"), col("tf"), col("df"),
-          round(col("score"), 4).as("score"))
+          duckRound(col("score"), 4).as("score"))
         .orderBy("doc_id")
     }, Some("""
       WITH tok AS (SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS term

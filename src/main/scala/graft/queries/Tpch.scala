@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, QuerySuite}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,13 +31,13 @@ object Tpch extends QuerySuite {
       l.where(col("l_shipdate").cast("date") <= lit("2000-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-          round(sum("l_quantity"), 2).as("sum_qty"),
+          duckRound(sum("l_quantity"), 2).as("sum_qty"),
           expr(money(s"sum($decPrice)")).as("sum_base_price"),
           expr(money(s"sum($decPrice * $decDisc1)")).as("sum_disc_price"),
           expr(money(s"sum($decPrice * $decDisc1 * $decTax1)")).as("sum_charge"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          round(avg("l_discount"), 4).as("avg_disc"),
+          duckRound(avg("l_quantity"), 4).as("avg_qty"),
+          duckRound(avg("l_extendedprice"), 4).as("avg_price"),
+          duckRound(avg("l_discount"), 4).as("avg_disc"),
           count(lit(1)).as("count_order"))
         .orderBy("l_returnflag", "l_linestatus")
     }, Some(s"""
@@ -69,7 +68,7 @@ object Tpch extends QuerySuite {
       val w = Window.partitionBy("s_nationkey")
       su.withColumn("min_bal", min("s_acctbal").over(w))
         .where(col("s_acctbal") === col("min_bal"))
-        .select(col("s_nationkey"), col("s_suppkey"), round(col("s_acctbal"), 2).as("s_acctbal"))
+        .select(col("s_nationkey"), col("s_suppkey"), duckRound(col("s_acctbal"), 2).as("s_acctbal"))
         .orderBy("s_nationkey", "s_suppkey")
     }, Some("""
       SELECT s_nationkey, s_suppkey, round(s_acctbal,2) AS s_acctbal
@@ -238,7 +237,7 @@ object Tpch extends QuerySuite {
         .join(broadcast(n2), col("s_nationkey") === col("s_nk"))
         .select(year(col("o_orderdate").cast("date")).as("o_year"), vol.as("volume"), col("nation"))
         .groupBy("o_year")
-        .agg(round(sum(when(col("nation") === "NATION_4", col("volume")).otherwise(lit(0.0)))
+        .agg(duckRound(sum(when(col("nation") === "NATION_4", col("volume")).otherwise(lit(0.0)))
             / sum(col("volume")), 4).as("mkt_share"),
           count(lit(1)).as("n_items"))
         .orderBy("o_year")
@@ -391,7 +390,7 @@ object Tpch extends QuerySuite {
       val p = table(s, dir, "part")
       val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       l.join(p, col("l_partkey") === col("p_partkey"))
-        .agg(round(lit(100.0) *
+        .agg(duckRound(lit(100.0) *
             sum(when(col("p_type") === "PROMO", rev).otherwise(lit(0.0))) / sum(rev), 4)
           .as("promo_share"))
     }, Some("""
@@ -465,7 +464,7 @@ object Tpch extends QuerySuite {
       l.join(p, col("l_partkey") === col("p_partkey"))
         .join(avgQ, col("l_partkey") === col("a_partkey"))
         .where(col("l_quantity") < col("avg_qty") * 0.5)
-        .agg(round(expr(s"cast(sum(${decPrice}) as double)") / lit(7.0), 2).as("avg_yearly"),
+        .agg(duckRound(expr(s"cast(sum(${decPrice}) as double)") / lit(7.0), 2).as("avg_yearly"),
           count(lit(1)).as("n_items"))
     }, Some(s"""
       WITH a AS (SELECT l_partkey AS a_partkey, avg(l_quantity) AS avg_qty
@@ -490,7 +489,7 @@ object Tpch extends QuerySuite {
         .join(c, col("o_custkey") === col("c_custkey"))
         .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
           epochMs(col("o_orderdate").cast("timestamp")).as("odate_ms"),
-          round(col("total_qty"), 2).as("total_qty"))
+          duckRound(col("total_qty"), 2).as("total_qty"))
         .orderBy(col("total_qty").desc, col("o_orderkey"))
         .limit(50)
     }, Some("""
@@ -597,7 +596,7 @@ object Tpch extends QuerySuite {
       // (nationkey stands in for the phone prefix). Balances go through
       // integer cents so the avg threshold is bit-identical across
       // engines (sum of BIGINT / count, one double division).
-      val cents = round(col("c_acctbal") * 100, 0).cast("long")
+      val cents = duckRound(col("c_acctbal") * 100, 0).cast("long")
       val pos = table(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), cents.as("cents"))
       val thr = pos.where(col("cents") > 0)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col => _, round => sparkRound, _}
+import org.apache.spark.sql.functions.{col => _, _}
 
 /** What the query suites share: the table reads, the span assembly,
   * the time constants and the SQL fragments every suite interpolates
@@ -15,26 +15,21 @@ package object queries {
     */
   def epochMs(c: Column): Column = unix_millis(c.cast("timestamp"))
 
-  /** DuckDB-compatible rounding. A suite that wants it imports it
-    * explicitly (`import graft.queries.{round => round}`): a package
-    * member ranks below the `functions._` wildcard, so without that
-    * import `round` is Spark's, which the suites then call
-    * `sparkRound`. Spark's builtin rounds the decimal expansion of the
-    * double (BigDecimal HALF_UP) while DuckDB computes
-    * `std::round(x * 10^k) / 10^k` in doubles — near .xxx5 boundaries
-    * the two disagree, which breaks exact hash comparison against the
-    * oracle. Delegates to the native [[graft.functions.DuckRound]]
-    * expression (sign-of-zero preserving; a floor()-based column
-    * emulation routes through BIGINT and turns DuckDB's -0.0 into +0.0,
-    * breaking byte-exact hashes). Requires GraftFunctions registration —
-    * [[graft.Tables.df]] guarantees it for every query.
+  /** DuckDB-compatible rounding; plain `round` is Spark's. Spark's
+    * builtin rounds the decimal expansion of the double (BigDecimal
+    * HALF_UP) while DuckDB computes `std::round(x * 10^k) / 10^k` in
+    * doubles — near .xxx5 boundaries the two disagree, which breaks
+    * exact hash comparison against the oracle. Delegates to the native
+    * [[graft.functions.DuckRound]] expression (sign-of-zero preserving;
+    * a floor()-based column emulation routes through BIGINT and turns
+    * DuckDB's -0.0 into +0.0, breaking byte-exact hashes), which the
+    * session's [[graft.functions.GraftExtensions]] installs as
+    * `graft_round`.
     */
-  def round(c: Column, scale: Int): Column =
+  def duckRound(c: Column, scale: Int): Column =
     call_function("graft_round", c.cast("double"), lit(scale))
 
   // ---- table reads -------------------------------------------------
-  // Tables.df registers the graft_* functions, so no query needs its
-  // own GraftFunctions.register before reading.
 
   private[queries] def table(s: SparkSession, dir: String, n: String): DataFrame =
     Tables.df(s, dir, n)

@@ -48,13 +48,6 @@ object LogStatsStream {
       .dropDuplicatesWithinWatermark("h")
       .drop("h") // internal dedup key — output keeps the input schema
 
-  /** Streaming measures → per-minute histogram sketches. The histogram
-    * UDAF is a TypedImperativeAggregate, i.e. a mergeable sketch:
-    * partial histograms are built map-side per micro-batch and merged
-    * into the windowed state, exactly the incremental-materialization
-    * contract of the reference's histogram partitions
-    * (rust/analytics histo queries over time bins).
-    */
   /** Streaming approximate distinct users: per-minute HLL register
     * stream. Registers merge by MAX (monotone), so the windowed state
     * is 16 small ints per (window, name) — the same mergeable-sketch
@@ -73,13 +66,18 @@ object LogStatsStream {
       .agg(max("rho").as("mrho"))
       .select(col("w.start").as("time_bin"), col("event_type"), col("idx"), col("mrho"))
 
+  /** Streaming measures → per-minute histogram sketches. The histogram
+    * UDAF is a TypedImperativeAggregate, i.e. a mergeable sketch:
+    * partial histograms are built map-side per micro-batch and merged
+    * into the windowed state, exactly the incremental-materialization
+    * contract of the reference's histogram partitions
+    * (rust/analytics histo queries over time bins).
+    */
   def measuresHistogram(events: DataFrame, start: Double, end: Double, nbBins: Int,
-      watermark: String = "10 minutes"): DataFrame = {
-    graft.functions.GraftFunctions.register(events.sparkSession)
+      watermark: String = "10 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 minute"), col("event_type").as("name"))
       .agg(graft.functions.Histograms.makeHistogram(start, end, nbBins, col("value")).as("histo"))
       .select(col("window.start").as("time_bin"), col("name"), col("histo"))
-  }
 }

@@ -29,7 +29,6 @@ class BpeMergeKernelSpec extends SparkSpec with TmpDirSupport {
 
   private def kernel(docs: Seq[(Long, Seq[String])], w1: String, w2: String)
       : Map[Long, Seq[String]] = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     docs.toDF("doc_id", "toks")
       .select(col("doc_id"), Bpe.mergeTokens(col("toks"), lit(w1), lit(w2)).as("m"))

@@ -28,7 +28,6 @@ class ChunkKernelSpec extends SparkSpec {
     "café au lait noir", "😀 hi 😀 hi 😀", "éé 日本12ab")
 
   private def check(inputs: Seq[String], ns: Seq[Int] = Seq(1, 2, 3, 20)): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     ns.foreach { n =>
       val df = inputs.toDF("text").select(col("text"),
@@ -74,7 +73,6 @@ class ChunkKernelSpec extends SparkSpec {
     // where the two forms produce identical rows: [null] explodes to a
     // null chunk (dropped), null explodes_outer to a null row
     // (dropped). Pin that query-level equivalence.
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val src = Seq[(Long, Option[String])]((1L, None), (2L, Some("a b"))).toDF("doc_id", "text")
     def rows(chunks: org.apache.spark.sql.Column) = src

@@ -359,22 +359,20 @@ class DocExamplesSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft_admin_tf").toString
     try {
       // non-admin: the admin names are NOT REGISTERED (reference:
-      // registered only for is_admin sessions) — and the SQL surface
-      // cannot self-elevate: SET spark.graft.admin=true touches only
-      // the runtime conf, which the registration gate never reads
-      // (ADVICE r13: the gate keys on the SparkConf at registration).
+      // registered only for is_admin sessions) — GraftExtensions never
+      // installs them, and no conf or SQL statement elevates a session
       val denied = intercept[Exception](Graft.query(spark, sfDir,
         s"SELECT * FROM materialize_partitions('log_stats', '$root')"))
       assert(denied.getMessage.toLowerCase.contains("materialize_partitions"))
-      spark.sql("SET spark.graft.admin=true")
-      val stillDenied = intercept[Exception](Graft.query(spark, sfDir,
-        s"SELECT * FROM materialize_partitions('log_stats', '$root')"))
-      assert(stillDenied.getMessage.toLowerCase.contains("materialize_partitions"))
-      spark.conf.unset("spark.graft.admin")
 
       // host code with an authenticated admin registers explicitly —
       // the only elevation path, unreachable from SQL
       functions.ReferenceNames.registerAdmin(spark)
+      // ...and it elevates that one session: a sibling built with the
+      // same extensions still lacks the admin five
+      val stillDenied = intercept[Exception](spark.newSession().sql(
+        s"SELECT * FROM materialize_partitions('log_stats', '$root')"))
+      assert(stillDenied.getMessage.toLowerCase.contains("materialize_partitions"))
       // materialize_partitions builds the day-partitioned lake
       val mat = Graft.query(spark, sfDir,
         s"SELECT * FROM materialize_partitions('log_stats', '$root')").head()
@@ -414,7 +412,6 @@ class DocExamplesSpec extends SparkSpec {
       assert(retired.getAs[Long]("days_retired") == (listed.length - 1).toLong)
       assert(operators.Materialize.listPartitions(spark, root).count() == 1L)
     } finally {
-      spark.conf.unset("spark.graft.admin")
       spark.conf.unset(functions.ReferenceNames.PartitionRootKey)
       // de-register the admin five so the rest of the suite runs
       // against the non-admin surface again

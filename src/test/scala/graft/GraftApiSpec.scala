@@ -75,25 +75,38 @@ class GraftApiSpec extends SparkSpec {
   }
 
   test("per-query range is authoritative over a static conf range, and doesn't stack on re-analysis") {
-    val all = Graft.query(spark, sfDir, "SELECT count(*) FROM events").head().getLong(0)
     val b = Some(micros("2024-01-01T00:00:00Z"))
     val e = Some(micros("2024-01-15T00:00:00Z"))
-    val scoped = Graft.query(spark, sfDir, "SELECT count(*) FROM events", b, e).head().getLong(0)
-    // static conf range = a DIFFERENT, non-overlapping window
-    spark.conf.set("spark.graft.queryRange.beginMicros", micros("2024-03-01T00:00:00Z").toString)
-    spark.conf.set("spark.graft.queryRange.endMicros", micros("2024-03-15T00:00:00Z").toString)
-    try {
-      // head() triggers re-analysis AFTER the thread-local cleared, with
-      // the conf range live — the injected filter must stay authoritative
-      // (stacking would intersect disjoint windows → 0 rows)
-      val n = Graft.query(spark, sfDir, "SELECT count(*) FROM events", b, e).head().getLong(0)
-      assert(n === scoped, s"per-query range result changed under a static conf range: $n vs $scoped")
-      // an explicitly unranged query() must NOT inherit the conf range
-      val n2 = Graft.query(spark, sfDir, "SELECT count(*) FROM events").head().getLong(0)
-      assert(n2 === all, s"unranged query() inherited the static conf range: $n2 vs $all")
-    } finally {
-      spark.conf.unset("spark.graft.queryRange.beginMicros")
-      spark.conf.unset("spark.graft.queryRange.endMicros")
+    val ranged = Graft.query(spark, sfDir, "SELECT count(*) FROM events", b, e)
+    val scoped = ranged.head().getLong(0)
+    // head() re-analyzes the ranged frame inside another query's range —
+    // a DIFFERENT, non-overlapping window. The injected filter must stay
+    // authoritative (stacking would intersect disjoint windows → 0 rows).
+    val n = plans.QueryRange.within(
+      Some(micros("2024-03-01T00:00:00Z")), Some(micros("2024-03-15T00:00:00Z"))) {
+      ranged.head().getLong(0)
+    }
+    assert(n === scoped, s"per-query range result changed inside another range: $n vs $scoped")
+    assert(scoped > 0)
+  }
+
+  test("a session built without GraftExtensions fails loudly at Tables.df and Graft.query") {
+    // classic.SparkSession's full constructor is private to its class,
+    // so reflection builds a session on the shared context and state
+    // with NO extensions: spark.newSession() would carry the parent's,
+    // and SparkSession.builder() returns the running default session
+    import org.apache.spark.sql.{SparkSessionExtensions, classic}
+    val c = spark.asInstanceOf[classic.SparkSession]
+    val bare = classOf[classic.SparkSession].getConstructors
+      .find(_.getParameterCount == 6).get
+      .newInstance(c.sparkContext, Some(c.sharedState), None,
+        new SparkSessionExtensions, Map.empty, Map.empty)
+      .asInstanceOf[classic.SparkSession]
+    for (call <- Seq[() => Any](
+        () => Tables.df(bare, sfDir, "events"),
+        () => Graft.query(bare, sfDir, "SELECT count(*) FROM events"))) {
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("GraftExtensions"), e.getMessage)
     }
   }
 

@@ -24,7 +24,6 @@ class GramAggSpec extends SparkSpec {
       .select(col("c.i").as("i"), col("c.j").as("j"), col("c.g").as("g"))
 
   private def check(rows: Seq[Seq[Long]], parts: Int): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = rows.toDF("qv").repartition(parts)
     val want = composed(df).orderBy("i", "j").collect().toSeq
@@ -51,7 +50,6 @@ class GramAggSpec extends SparkSpec {
   }
 
   test("empty input yields zero cells, like the composed form") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq.empty[Seq[Long]].toDF("qv")
     assert(kernel(df).count() == 0L)
@@ -63,7 +61,6 @@ class GramAggSpec extends SparkSpec {
     // form emits every (i, j) group and the two agree exactly; the
     // one deliberate residual divergence (a position null in EVERY
     // vector: no group vs a g=0 cell) is documented at GramBuffer.add
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rows: Seq[Seq[java.lang.Long]] = Seq(
       Seq[java.lang.Long](1L, null, 3L),

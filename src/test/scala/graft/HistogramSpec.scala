@@ -46,7 +46,6 @@ class HistogramSpec extends SparkSpec {
   }
 
   test("histogram works via SQL through the registered function") {
-    graft.functions.GraftFunctions.register(spark)
     Seq(1.0, 2.0, 3.0).toDF("v").createOrReplaceTempView("hv")
     val bins = spark.sql("SELECT graft_make_histogram(0.0, 4.0, 4, v) AS h FROM hv")
       .select(col("h.bins")).head().getSeq[Long](0)

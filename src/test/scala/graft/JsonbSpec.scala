@@ -37,7 +37,6 @@ class JsonbSpec extends SparkSpec {
   }
 
   test("jsonb_get: keys with spaces/dots/brackets resolve; unaddressable keys rejected") {
-    graft.functions.GraftFunctions.register(spark)
     val odd = """{"plain":1,"a key":2,"a.b":3,"a[0]":4,"it's":5}"""
     Seq(odd).toDF("j").createOrReplaceTempView("jb")
     def get(k: String): Option[String] = {

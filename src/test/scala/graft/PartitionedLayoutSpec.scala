@@ -56,16 +56,13 @@ class PartitionedLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     spark.read.parquet(out).createOrReplaceTempView("log_stats_lake")
     val begin = java.time.Instant.parse("2024-01-05T00:00:00Z").toEpochMilli * 1000L
     val end = java.time.Instant.parse("2024-01-07T00:00:00Z").toEpochMilli * 1000L // 2 days
-    // count day partitions BEFORE arming the range: once the conf range
-    // is live, this probe query would itself be scoped to the 2 days
     val allDays = spark.read.parquet(out).select(countDistinct("date")).head().getLong(0)
     assert(allDays >= 29, s"expected a month of day partitions, got $allDays")
     try {
-      spark.conf.set("spark.graft.queryRange.column", "time_bin_ms")
-      spark.conf.set("spark.graft.queryRange.columnUnit", "millis")
-      spark.conf.set("spark.graft.queryRange.beginMicros", begin.toString)
-      spark.conf.set("spark.graft.queryRange.endMicros", end.toString)
-      val df = spark.sql("SELECT sum(count) AS n FROM log_stats_lake")
+      // no conf: the marker names time_bin_ms (epoch ms) as the lake's
+      // time column, so the call's range alone scopes the scan
+      val df = Graft.query(spark, sfDir, "SELECT sum(count) AS n FROM log_stats_lake",
+        Some(begin), Some(end))
       val scans = collectWithSubqueries(df.queryExecution.executedPlan) {
         case s: FileSourceScanExec => s
       }
@@ -76,18 +73,11 @@ class PartitionedLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         s"expected the 2 ranged day partitions of $allDays, got ${selected.size}")
       // and the ranged answer equals the explicit-filter answer
       val n = df.head().getLong(0)
-      spark.conf.unset("spark.graft.queryRange.beginMicros")
-      spark.conf.unset("spark.graft.queryRange.endMicros")
       val expected = spark.read.parquet(out)
         .where(col("time_bin_ms") >= begin / 1000L && col("time_bin_ms") < end / 1000L)
         .agg(sum("count")).head().getLong(0)
       assert(n === expected && n > 0)
-    } finally {
-      Seq("spark.graft.queryRange.beginMicros", "spark.graft.queryRange.endMicros",
-        "spark.graft.queryRange.column", "spark.graft.queryRange.columnUnit")
-        .foreach(spark.conf.unset)
-      spark.catalog.dropTempView("log_stats_lake")
-    }
+    } finally spark.catalog.dropTempView("log_stats_lake")
   }
 
   test("a 'date' column NOT written by the materializer gets NO derived date predicate") {
@@ -96,32 +86,27 @@ class PartitionedLayoutSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // 'date' next to the time column — here `date` is the day AFTER the
     // timestamp (a business date), so assuming date = UTC day of ts
     // would silently drop every row at a day boundary. Only lakes
-    // carrying the Materialize marker (or an explicit conf assertion)
-    // qualify.
+    // carrying the Materialize marker qualify.
     import spark.implicits._
     val out = java.nio.file.Files.createTempDirectory("graft-bizdate").toString
     val dayMs = 86400000L
     Seq.tabulate(10)(i => (i.toLong * dayMs + 1000L, i.toLong))
-      .toDF("time_bin_ms", "v")
-      // business date: one day LATER than the UTC day of time_bin_ms
-      .withColumn("date", date_add(to_date(timestamp_millis(col("time_bin_ms"))), 1))
+      .toDF("time_ms", "v")
+      .withColumn("ts", timestamp_millis(col("time_ms")))
+      // business date: one day LATER than the UTC day of ts
+      .withColumn("date", date_add(to_date(col("ts")), 1))
+      .drop("time_ms")
       .write.mode("overwrite").partitionBy("date").parquet(out)
     val begin = 2L * dayMs * 1000L // micros: days [2, 5)
     val end = 5L * dayMs * 1000L
+    spark.read.parquet(out).createOrReplaceTempView("bizdate_lake")
     try {
-      spark.conf.set("spark.graft.queryRange.column", "time_bin_ms")
-      spark.conf.set("spark.graft.queryRange.columnUnit", "millis")
-      spark.conf.set("spark.graft.queryRange.beginMicros", begin.toString)
-      spark.conf.set("spark.graft.queryRange.endMicros", end.toString)
-      val got = spark.read.parquet(out).agg(sum("v")).head().getLong(0)
+      val got = Graft.query(spark, sfDir, "SELECT sum(v) FROM bizdate_lake",
+        Some(begin), Some(end)).head().getLong(0)
       // rows of ts-days 2,3,4 (business dates 3,4,5): a wrongly-injected
       // date∈[2,4] predicate would drop the ts-day-4 row (business date 5)
       assert(got === (2L + 3L + 4L),
         s"date predicate wrongly injected into an unmarked lake (sum=$got)")
-    } finally {
-      Seq("spark.graft.queryRange.beginMicros", "spark.graft.queryRange.endMicros",
-        "spark.graft.queryRange.column", "spark.graft.queryRange.columnUnit")
-        .foreach(spark.conf.unset)
-    }
+    } finally spark.catalog.dropTempView("bizdate_lake")
   }
 }

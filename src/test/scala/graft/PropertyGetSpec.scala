@@ -6,7 +6,6 @@ class PropertyGetSpec extends SparkSpec {
   import spark.implicits._
 
   private def get(json: String, key: String): String = {
-    graft.functions.GraftFunctions.register(spark)
     Seq(json).toDF("j")
       .select(call_function("graft_property_get", col("j"), lit(key)))
       .head().getString(0)
@@ -53,7 +52,6 @@ class PropertyGetSpec extends SparkSpec {
   }
 
   test("matches get_json_object over the events table") {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.df(spark, sfDir, "events")
     val diff = e.select(
         call_function("graft_property_get", col("props"), lit("k")).as("a"),

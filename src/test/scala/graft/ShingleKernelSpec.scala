@@ -12,7 +12,6 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 class ShingleKernelSpec extends SparkSpec {
 
   private def checkShingles(inputs: Seq[String], n: Int): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = inputs.toDF("s")
       .select(col("s"), Dedup.wordShinglesComposed(col("s"), n).as("want"),
@@ -50,7 +49,6 @@ class ShingleKernelSpec extends SparkSpec {
   }
 
   test("minhash kernel signatures equal the explode+agg path") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "x", "yy", "zzz", "0", "é", "日本")
@@ -71,7 +69,6 @@ class ShingleKernelSpec extends SparkSpec {
   }
 
   test("empty shingle arrays are dropped, matching the explode+agg contract") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val sh = Seq((1L, Seq("a", "b")), (2L, Seq.empty[String]), (3L, Seq("c")))
       .toDF("doc_id", "shingles")
@@ -85,7 +82,6 @@ class ShingleKernelSpec extends SparkSpec {
   }
 
   test("hash56 kernel equals the composed conv(md5) form, sets equal under intersect/union") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(13)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "x", "yy", "zzz", "0", "é", "日本")
@@ -116,7 +112,6 @@ class ShingleKernelSpec extends SparkSpec {
   }
 
   test("fused minhash+h56 kernel equals both separate kernels (r13 item 2)") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(17)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "x", "yy", "zzz", "0", "é", "日本")
@@ -165,7 +160,6 @@ class ShingleKernelSpec extends SparkSpec {
   }
 
   test("minhash kernel matches the array-local HOF form too") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val sh = Seq((1L, "the quick brown fox jumps over the lazy dog"),
         (2L, "a b"), (3L, "solo"))

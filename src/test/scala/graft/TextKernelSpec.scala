@@ -14,7 +14,6 @@ class TextKernelSpec extends SparkSpec {
     regexp_replace(lower(col("s")), "[^a-z0-9\\s]", ""), "\\s+", " "))
 
   private def check(inputs: Seq[String]): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = inputs.toDF("s")
       .select(col("s"), regexForm.as("want"),

@@ -38,7 +38,6 @@ class TextStatsKernelSpec extends SparkSpec {
   }
 
   private def check(inputs: Seq[String]): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val base = inputs.toDF("s")
     val forms = composedForms(col("s"))
@@ -76,7 +75,6 @@ class TextStatsKernelSpec extends SparkSpec {
   }
 
   test("md5min equals the array_min(transform(md5)) fold") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq("the quick brown fox jumps over the lazy dog",
         "a b c d e f", "solo", "x y", "日本語 テキスト です ね さ")

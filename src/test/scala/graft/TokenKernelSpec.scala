@@ -27,7 +27,6 @@ class TokenKernelSpec extends SparkSpec {
     "café au lait noir", "😀 hi 😀 hi 😀", "éé 日本12ab")
 
   private def checkBoth(inputs: Seq[String]): Unit = {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = inputs.toDF("s").select(col("s"),
       TextAnalysis.whitespaceTokensComposed(col("s")).as("tok_want"),
@@ -58,7 +57,6 @@ class TokenKernelSpec extends SparkSpec {
   }
 
   test("null propagation matches composed forms") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq[Option[String]](None, Some("a b")).toDF("s").select(
       TextAnalysis.whitespaceTokens(col("s")).as("tok"),

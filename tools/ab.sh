@@ -15,9 +15,13 @@
 #
 # Prints one line per run (side, seed, correct, failed, the host's CPU
 # steal during the run, every end-to-end metric), then per end-to-end
-# metric of BENCHMARK.json: A's median, B's median, A's interquartile
-# range and the number of pairs B wins (better in the metric's
-# direction). Raw result objects go to .bench_work/ab-<time>.jsonl.
+# metric of BENCHMARK.json: A's median, B's median, B/A, a 90% paired
+# bootstrap interval of median(B)/median(A) (pairs resampled with
+# replacement, 2000 draws, fixed seed), A's interquartile range and the
+# number of pairs B wins (better in the metric's direction). A metric is
+# marked `over bound` only when its whole interval lies past its
+# BENCHMARK.json bound in the worse direction. Raw result objects go to
+# .bench_work/ab-<time>.jsonl.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -77,7 +81,7 @@ for i in $(seq 1 "$pairs"); do
 done
 
 python3 - "$log" BENCHMARK.json <<'EOF'
-import json, statistics, sys
+import json, random, statistics, sys
 recs = [json.loads(l) for l in open(sys.argv[1])]
 metrics = json.load(open(sys.argv[2]))["end_to_end"]
 def quartiles(xs):
@@ -85,9 +89,24 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+def ratio_interval(got, draws=2000, level=0.90):
+    """Paired bootstrap of median(B)/median(A): resample whole pairs."""
+    rng = random.Random(7)
+    ratios = []
+    for _ in range(draws):
+        s = [got[rng.randrange(len(got))] for _ in got]
+        ma = statistics.median(x for x, _ in s)
+        if ma:
+            ratios.append(statistics.median(y for _, y in s) / ma)
+    if not ratios:
+        return float("nan"), float("nan")
+    ratios.sort()
+    tail = (1 - level) / 2
+    return ratios[int(tail * (len(ratios) - 1))], ratios[int((1 - tail) * (len(ratios) - 1))]
 by = {(r["pair"], r["side"]): r for r in recs}
 pairs = sorted({r["pair"] for r in recs})
-print(f"[ab] {'metric':<16} {'A median':>10} {'B median':>10} {'B/A':>6} {'A IQR':>9} {'B wins':>7}")
+print(f"[ab] {'metric':<16} {'A median':>10} {'B median':>10} {'B/A':>6} {'90% interval':>15} "
+      f"{'A IQR':>9} {'B wins':>7}")
 for m in metrics:
     name, lower = m["name"], m["better"] == "lower"
     got = [(by[(p, "A")]["metrics"].get(name, {}).get("value"),
@@ -101,8 +120,11 @@ for m in metrics:
     ma, mb = statistics.median(a), statistics.median(b)
     q1, q3 = quartiles(sorted(a))
     wins = sum(1 for x, y in got if (y < x if lower else y > x))
+    lo, hi = ratio_interval(got)
+    over = lo > 1 + m["bound"] if lower else hi < 1 - m["bound"]
     print(f"[ab] {name:<16} {ma:>10.4g} {mb:>10.4g} {mb / ma if ma else float('nan'):>6.3f} "
-          f"{q3 - q1:>9.4g} {wins:>4}/{len(got)}")
+          f"{f'[{lo:.3f}, {hi:.3f}]':>15} {q3 - q1:>9.4g} {wins:>4}/{len(got)}"
+          f"{'  over bound' if over else ''}")
 bad = [r for r in recs if not r["correct"] or r["failed"] != 0]
 print(f"[ab] runs: {len(recs)}, not correct or failed > 0: {len(bad)}")
 EOF

@@ -5,7 +5,8 @@
 # before the end-of-round snapshot.
 #
 #   tools/gate.sh          # sbt -batch compile (fast, ~10 s incremental), then
-#                          # print the Scala line count under src/main
+#                          # print the Scala line count under src/main and
+#                          # the number of graft confs it reads
 #   tools/gate.sh smoke    # compile + Verify on sf0.001 + oracle compare, then
 #                          # one Bench rep and one Profile run on sf0.001 (~5 min)
 #
@@ -19,6 +20,8 @@ sbt -batch compile >/tmp/gate_compile.log 2>&1 || {
 echo "[gate] compile OK"
 # ROADMAP aim 2 tracks main-source size next to the bench total
 echo "[gate] main-source LOC: $(find src/main -name '*.scala' -exec cat {} + | wc -l)"
+# ...and the graft confs main source reads: distinct "spark.graft.* literals
+echo "[gate] graft confs read by main source: $(grep -rhoE '"spark\.graft\.[A-Za-z0-9_.]+' src/main | sort -u | wc -l)"
 
 if [[ "${1:-}" == "smoke" ]]; then
   rm -rf /tmp/gate_vout
