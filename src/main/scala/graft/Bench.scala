@@ -1,11 +1,18 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Headline-query benchmark: times a noop-sink write of each query's
   * full result through [[GraftRun.execute]]. Positional query names
   * time only those queries (the isolated re-run that adjudicates one
   * query's regression without 35 noisy neighbors). Prints TWO JSON lines:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
-  * and the compact bests-only "best_total" line.
+  * and the compact bests-only "best_total" line. The full report also
+  * carries the classes Spark's codegen compiled during the timed
+  * reps and the milliseconds it spent on them (`codegen_classes`,
+  * `codegen_compile_ms`): after the warm-up both read 0 unless a plan
+  * missed the codegen cache.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<sfDir> runMain graft.Bench [query ...]
   */
@@ -40,6 +47,8 @@ object Bench {
     // interference reads as a fake 2x regression of the victim (round-8
     // verdict adjudicated four of those). Shuffling decorrelates the
     // neighbor noise so the median converges to the isolated time.
+    val classes0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     for (rep <- 1 to reps) {
       val order = new scala.util.Random(rep).shuffle(headliners)
       order.foreach { q =>
@@ -57,6 +66,8 @@ object Bench {
         times(q.name) = t :: times.getOrElse(q.name, Nil)
       }
     }
+    val codegenClasses = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - classes0
+    val codegenMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     val results = headliners.map { q =>
       val ts = times(q.name)
       val ok = !ts.exists(_ < 0)
@@ -72,7 +83,7 @@ object Bench {
     val spills = results.map { case (k, _, _, _, s) => "\"" + k + "\":" + s }.mkString("{", ",", "}")
     val failed = results.count(_._2 < 0)
     val total = if (failed > 0) "null" else results.map(_._2).sum.toString
-    val report = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"failed":$failed,"queries":$qs,"medians":$meds,"peak_mem_mb":$peaks,"spill_mb":$spills,"spill_hw_mb":${budget.outstandingHighWater.get() >> 20},"spill_cancels":${budget.cancelCount.get()},"sf":"$sfDir"}"""
+    val report = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"failed":$failed,"queries":$qs,"medians":$meds,"peak_mem_mb":$peaks,"spill_mb":$spills,"spill_hw_mb":${budget.outstandingHighWater.get() >> 20},"spill_cancels":${budget.cancelCount.get()},"codegen_classes":$codegenClasses,"codegen_compile_ms":${math.rint(codegenMs * 10) / 10},"sf":"$sfDir"}"""
     println(report)
     // ALSO persist the report: the driver keeps only the tail of stdout,
     // which truncated BENCH_r08 into an unparseable artifact (round-8

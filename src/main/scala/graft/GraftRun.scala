@@ -92,9 +92,13 @@ object GraftRun {
 
   /** Runs each query once on the `sf0.001` lake beside `sfDir` (on
     * `sfDir` itself when there is none), ignoring failures, so timed
-    * runs measure steady state rather than codegen and JIT warm-up:
-    * plans are identical across scale factors, so the codegen cache
-    * carries over. Drops what the runs cached.
+    * runs measure steady state rather than codegen and JIT warm-up.
+    * Generated code does not depend on the lake's size, so the classes
+    * compiled here serve the timed runs, on two conditions: the codegen
+    * cache holds all of them, which at Spark's default of 100 entries
+    * it does not for the 36 headliners; and AQE re-plans no join at the
+    * larger scale. [[GraftSession.base]] sizes the cache for the whole
+    * registry. Drops what the runs cached.
     */
   def warmUp(spark: SparkSession, qs: Seq[GraftQuery], sfDir: String): Unit = {
     val small = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001")

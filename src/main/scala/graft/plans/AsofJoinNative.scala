@@ -66,7 +66,6 @@ object AsofJoinNative {
     require(direction == "backward" || direction == "forward",
       s"direction must be backward|forward, got $direction")
     require(tolerance.forall(_ >= 0), "tolerance must be >= 0")
-    Shim.addStrategy(spark, AsofJoinStrategy)
     val r = TemporalJoinResolution.resolve(left, right, key, leftTime, rightTime,
       rightSuffix, rightTiebreak)
     if (tolerance.isDefined) AsofJoinExec.timeExtractor(r.leftTime.dataType) // fail fast

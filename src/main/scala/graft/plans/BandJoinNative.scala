@@ -34,7 +34,6 @@ object BandJoinNative {
       rightSuffix: String = "_r"): DataFrame = {
     require(width > 0, "width must be positive")
     val spark = left.sparkSession
-    Shim.addStrategy(spark, BandJoinStrategy)
     val r = TemporalJoinResolution.resolve(left, right, key, leftTime, rightTime, rightSuffix)
     AsofJoinExec.timeExtractor(r.leftTime.dataType) // integral time required; fail fast
     Shim.ofRows(spark,

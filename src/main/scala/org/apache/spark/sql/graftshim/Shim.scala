@@ -39,16 +39,4 @@ object Shim {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
-
-  /** Idempotently append a planner strategy to a session we didn't
-    * build (driver-owned sessions can't go through withExtensions).
-    */
-  def addStrategy(spark: SparkSession, strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val exp = spark.asInstanceOf[classic.SparkSession].experimental
-    exp.synchronized {
-      if (!exp.extraStrategies.contains(strategy)) {
-        exp.extraStrategies = exp.extraStrategies :+ strategy
-      }
-    }
-  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.{AsofJoinExec, AsofJoinNative}
+import graft.plans.{AsofJoinExec, AsofJoinNative, AsofJoinStrategy, BandJoinNative, BandJoinStrategy}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
@@ -204,5 +204,14 @@ class AsofJoinNativeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(shuffles.size === 2, "both children hash-partitioned by key")
     // output ordering is declared, so a downstream per-key sort is free
     assert(execs.head.outputOrdering.nonEmpty)
+  }
+
+  test("a temporal join plans with each native strategy once: GraftExtensions is its only installer") {
+    AsofJoinNative.join(left, right, Seq("k"), "lt", "rt").collect()
+    BandJoinNative.join(left, right, Seq("k"), "lt", "rt", width = 50L).collect()
+    val strategies = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.planner.strategies
+    assert(strategies.count(_ == AsofJoinStrategy) === 1)
+    assert(strategies.count(_ == BandJoinStrategy) === 1)
   }
 }

@@ -64,11 +64,11 @@ class BroadcastBudgetSpec extends SparkSpec {
     *    customer side and q13/m_otel_spans fact sides all
     *    demote by sf10). The estimate lies by a bounded compression ×
     *    pruning factor (~14× worst measured), so the allowance is
-    *    16 × the session's autoBroadcastJoinThreshold — scale-invariant
-    *    by construction, tolerated at every audit SF. An explicit
-    *    broadcast() hint voids this argument entirely (a hint never
-    *    demotes) — the r12 sf10 audit caught four 192 MB hinted dims
-    *    and the hints were removed, not allowed for.
+    *    16 × the adjudicated 10 MB threshold (160 MB), tolerated at
+    *    every audit SF. An explicit broadcast() hint voids this
+    *    argument entirely (a hint never demotes) — the r12 sf10 audit
+    *    caught four 192 MB hinted dims and the hints were removed, not
+    *    allowed for.
     *
     *  - RUNTIME-CONVERTED sides (the exchange sits DIRECTLY on an
     *    AQEShuffleRead / shuffle stage): AQE turned a planned shuffle
@@ -78,8 +78,8 @@ class BroadcastBudgetSpec extends SparkSpec {
     *    this class cannot be the never-demoting defect. Built size
     *    exceeds the compressed bytes AQE gated on by decompression +
     *    row overhead (≤2.4× measured at sf10: l_bigram_lm and
-    *    m_flame_collapse, both 24 MB); allowance 4 × the adaptive
-    *    threshold.
+    *    m_flame_collapse, both 24 MB); allowance 4 × the adjudicated
+    *    10 MB threshold (40 MB).
     *
     *  - STATIC DERIVED sides (anything else containing an Aggregate /
     *    Window / Generate / checkpoint scan): their estimates DON'T
@@ -94,13 +94,16 @@ class BroadcastBudgetSpec extends SparkSpec {
     case _ => false
   }
 
-  private lazy val convertedSideBudget: Long = {
-    val conf = SparkSpec.session.sessionState.conf
-    val adaptive = conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.ADAPTIVE_AUTO_BROADCASTJOIN_THRESHOLD)
-      .getOrElse(conf.autoBroadcastJoinThreshold)
-    4L * adaptive
-  }
+  /** The class allowances are fixed bytes, not multiples of the
+    * session's threshold: they were adjudicated at Spark's 10 MB
+    * threshold, and the 64 MB of [[GraftSession.base]], which the
+    * shared session runs, would scale them 6.4×, to 256 MB and 1 GiB,
+    * letting a ~30 MB corpus-proportional side through unflagged at
+    * sf0.1.
+    */
+  private val AdjudicatedThreshold = 10L * 1024 * 1024
+  private val scanSideBudget: Long = 16L * AdjudicatedThreshold
+  private val convertedSideBudget: Long = 4L * AdjudicatedThreshold
 
   private def isScanBacked(b: BroadcastExchangeExec): Boolean = {
     var scan = false
@@ -115,9 +118,6 @@ class BroadcastBudgetSpec extends SparkSpec {
     }
     scan && !derived
   }
-
-  private lazy val scanSideBudget: Long =
-    16L * SparkSpec.session.sessionState.conf.autoBroadcastJoinThreshold
 
   private def walk(p: SparkPlan)(f: SparkPlan => Unit): Unit = {
     f(p)
@@ -202,7 +202,7 @@ class BroadcastBudgetSpec extends SparkSpec {
 
   test("every registered query's executed broadcasts sit under the budget") {
     val violations = Seq.newBuilder[String]
-    val largest = Seq.newBuilder[(Long, String)]
+    val largest = Seq.newBuilder[(Long, String, String)]
     SparkEntry.allQueries.foreach { q =>
       val sizes =
         try broadcastSizes(q.fn(spark, auditDir))
@@ -210,7 +210,7 @@ class BroadcastBudgetSpec extends SparkSpec {
           violations += s"${q.name}: failed to execute for audit: ${e.getMessage}"
           Nil
         }
-      sizes.headOption.foreach { case (s, _, _) => largest += ((s, q.name)) }
+      sizes.headOption.foreach { case (s, cls, _) => largest += ((s, q.name, cls)) }
       sizes.foreach { case (s, cls, side) =>
         val budget = cls match {
           case "scan-backed" => math.max(budgetFor(q.name), scanSideBudget)
@@ -225,8 +225,8 @@ class BroadcastBudgetSpec extends SparkSpec {
       }
     }
     // the high-water marks that back the budget choice (visible via -oI)
-    largest.result().sorted.reverse.take(5).foreach { case (s, n) =>
-      info(f"$n: largest broadcast ${s / 1024.0 / 1024.0}%.2f MB")
+    largest.result().sorted.reverse.take(5).foreach { case (s, n, cls) =>
+      info(f"$n: largest broadcast ${s / 1024.0 / 1024.0}%.2f MB ($cls)")
     }
     assert(violations.result().isEmpty,
       "broadcast budget violations:\n" + violations.result().mkString("\n"))

@@ -18,6 +18,9 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .option("path", s"$wh/orders_b").saveAsTable("orders_b")
     l.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .option("path", s"$wh/lineitem_b").saveAsTable("lineitem_b")
+    // the shared session's own threshold comes back afterwards: unset
+    // would drop it to Spark's default, not to the session's value
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
       val joined = spark.table("orders_b")
@@ -32,7 +35,7 @@ class BucketingSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(shufflesBeforeAgg.size <= 1,
         s"expected bucketed join without shuffle, got ${shufflesBeforeAgg.size} exchanges")
     } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
     }

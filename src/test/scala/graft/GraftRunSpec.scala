@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 
@@ -32,20 +33,47 @@ class GraftRunSpec extends SparkSpec with TmpDirSupport {
 
   private def query(name: String): GraftQuery = SparkEntry.allQueries.find(_.name == name).get
 
+  /** One noop write of every headliner, in registry order: each
+    * query's timed work. The parity and the codegen-cache tests share
+    * it, so the suite runs one first pass, not two.
+    */
+  private lazy val firstNoopPass: Map[String, Map[String, Int]] =
+    SparkEntry.headlineQueries.map(q => q.name -> timedWork(q)).toMap
+
   test("every headliner's timed plan keeps the verify write's kernels, md5s and joins") {
     val out = tmpDir("graftrun_verify")
+    val timed = firstNoopPass
     val checked = SparkEntry.headlineQueries.map { q =>
       val (_, execs) = GraftRun.capture(spark)(Verify.write(q.fn(spark, sfDir), s"$out/${q.name}"))
       val writes = execs.filter(_.qe.analyzed.isInstanceOf[InsertIntoHadoopFsRelationCommand])
       assert(writes.size == 1, s"${q.name}: expected one parquet write among " +
         execs.map(e => s"${e.funcName}:${e.qe.analyzed.nodeName}").mkString(", "))
       val reference = work(writes.head.qe.executedPlan)
-      (q.name, reference, lost(reference, timedWork(q)))
+      (q.name, reference, lost(reference, timed(q.name)))
     }
     assert(checked.count(_._2.nonEmpty) >= checked.size / 2,
       "most verify plans show no kernels, md5s or joins: the walk misses the write's plan")
     val failures = checked.collect { case (n, _, m) if m.nonEmpty => s"$n: ${m.mkString(", ")}" }
     assert(failures.isEmpty, "timed plans lost work:\n" + failures.mkString("\n"))
+  }
+
+  /** Classes a headliner may compile on its second run. One plan of
+    * `l_dedup_incremental` has two generated sources: its first run in
+    * a JVM hands the new×existing band join's two sides to the distinct
+    * in one order, later runs in the other, under the same executed plan
+    * (build side and stage sizes included). Each source compiles once.
+    */
+  private val secondRunClasses = Map("l_dedup_incremental" -> 2L)
+
+  test("a second noop write of every headliner compiles no class: the codegen cache holds a pass") {
+    firstNoopPass // the first pass, if the parity test has not run it
+    val compiled = SparkEntry.headlineQueries.map { q =>
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      GraftRun.execute(spark)(q.fn(spark, sfDir))
+      q.name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }.filter { case (n, c) => c > secondRunClasses.getOrElse(n, 0L) }
+    assert(compiled.isEmpty, "classes compiled on the second pass: " +
+      compiled.map { case (n, c) => s"$n=$c" }.mkString(", "))
   }
 
   test("the parity check fires: a count() of l_bpe_merge loses work the noop write keeps") {

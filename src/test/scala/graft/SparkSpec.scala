@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for specs (one JVM, reused via getOrCreate). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
-  def sfDir: String = "/root/testdata/sf0.001"
+  def sfDir: String = SparkSpec.SfDir
 
   /** `body`'s value and the number of Spark jobs it launched from this
     * thread. Jobs are tagged with a fresh local property, so work left
@@ -39,25 +39,19 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   private val JobTag = "graft.test.jobTag"
+  val SfDir = "/root/testdata/sf0.001"
 
+  /** The mains' builder ([[GraftSession.base]]) on the [[SfDir]] lake,
+    * so specs plan under graft's config, its codegen cache size
+    * included: the cache is sized once per JVM, and every suite runs in
+    * this one.
+    */
   lazy val session: SparkSession = {
     // Overridable so plan-audit specs (BroadcastBudgetSpec) can run
     // against generated decade lakes at full width:
     //   GRAFT_TEST_CPUS=32 GRAFT_BCAST_SF=target/sf1 sbt "testOnly ..."
     val cpus = sys.env.getOrElse("GRAFT_TEST_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Scan size estimates are FILE bytes x column fraction, but
-      // snappy parquet expands 24-31x in memory (sf10 audit: the
-      // customer/part dims hid a decade of growth under the broadcast
-      // threshold and statically built 192 MB hash relations). 16x
-      // keeps the estimate within ~2x of built size, so scan-backed
-      // broadcast picks demote on schedule while AQE still re-converts
-      // genuinely small sides from ACTUAL compressed bytes.
-      .config("spark.sql.sources.fileCompressionFactor", "16")
+    val s = GraftSession.base(SfDir, cpus)
       // Tungsten page size scales with heap/cores (64 MB in this 8 GB
       // local[4] JVM), and HashedRelation.estimatedSize — what the
       // BroadcastExchange dataSize metric reports — is ALLOCATED pages,
@@ -66,8 +60,6 @@ object SparkSpec {
       // (BroadcastBudgetSpec) can't discriminate. 1 MB pages make the
       // metric meaningful at MB granularity; perf impact on tests is nil.
       .config("spark.buffer.pageSize", "1m")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

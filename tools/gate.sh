@@ -43,6 +43,8 @@ if [[ "${1:-}" == "smoke" ]]; then
     echo "[gate] BENCH FAILED"; tail -20 /tmp/gate_bench.log; exit 1; }
   grep -q '"failed":0,' /tmp/gate_bench.json || {
     echo "[gate] BENCH QUERIES FAILED"; grep -a '\[bench\]' /tmp/gate_bench.log | tail -20; exit 1; }
+  # compile work of the timed rep: a warm codegen cache reads 0 classes
+  echo "[gate] Bench timed rep: $(grep -oE '"codegen_(classes|compile_ms)":[0-9.]+' /tmp/gate_bench.json | tr '\n' ' ')"
   echo "[gate] Profile sf0.001 l_paragraph_scrub"
   rm -rf /tmp/gate_profile
   sbt -batch "runMain graft.Profile $lake /tmp/gate_profile smoke l_paragraph_scrub" \
