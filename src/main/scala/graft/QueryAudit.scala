@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-query audit log + error classification — the Spark analog of
@@ -300,15 +301,14 @@ object QueryAudit {
     def recordsRaw(): Seq[Record] = buf.asScala.toSeq
 
     /** Listener-bus dispatch is async; tests and read-your-writes
-      * clients wait until a record with query_id ≥ `n` has landed
-      * (ids are monotonic and survive ring eviction, so this works
-      * regardless of maxRecords).
+      * clients drain the bus, after which a record with query_id ≥ `n`
+      * must have landed (ids are monotonic and survive ring eviction,
+      * so this works regardless of maxRecords).
       */
-    def awaitQuiesce(n: Long, timeoutMs: Long = 30000): Unit = {
-      val deadline = System.nanoTime() + timeoutMs * 1000000L
-      while (highWaterId.get() < n && System.nanoTime() < deadline) Thread.sleep(10)
+    def awaitQuiesce(n: Long): Unit = {
+      Shim.drainListenerBus(spark)
       require(highWaterId.get() >= n,
-        s"audit quiesce timeout: high-water id ${highWaterId.get()} < $n")
+        s"audit quiesce: high-water id ${highWaterId.get()} < $n after draining the listener bus")
     }
 
     def recordCount: Long = size.get()

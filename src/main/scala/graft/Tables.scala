@@ -2,10 +2,12 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
+
+import graft.operators.LakeFs
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -73,11 +75,10 @@ object Tables {
     * misses, and the inference raises Spark's own error.
     */
   private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, p) = LakeFs(spark, path)
     val qualified = fs.makeQualified(p).toString
     val listing: Listing =
-      try files(fs, fs.getFileStatus(p)).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+      try LakeFs.files(fs, p).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
       catch { case _: java.io.FileNotFoundException => Nil }
     val confs = inferenceConfs.map(spark.conf.getOption)
     def memoFor(m: Memo) =
@@ -92,11 +93,6 @@ object Tables {
       schema
     }
   }
-
-  /** Every file beneath `st`, recursively (`st` itself if it is one). */
-  private def files(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
-    if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files(fs, _))
-    else Seq(st)
 
   /** Partition count for corpus-wide text/vector work repartitioned off
     * a driver single-file table: the cores floor, raised so no task
@@ -113,15 +109,8 @@ object Tables {
     * documented as droppable entirely.
     */
   def workPartitions(spark: SparkSession, dir: String, name: String): Int = {
-    val p = new Path(s"$dir/$name.parquet")
-    val bytes =
-      try p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"graft: workPartitions: size listing failed for $p " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}); using the cores floor")
-        0L
-      }
+    val bytes = LakeFs.bytes(spark.sparkContext.hadoopConfiguration,
+      new Path(s"$dir/$name.parquet"))
     math.max(spark.sparkContext.defaultParallelism, (bytes / (4L << 20)).toInt)
   }
 
@@ -150,19 +139,8 @@ object Tables {
     */
   def initialShufflePartitions(dir: String, cores: Int): Int = {
     val conf = new org.apache.hadoop.conf.Configuration()
-    val bytes = all.map { name =>
-      val p = new Path(s"$dir/$name.parquet")
-      try p.getFileSystem(conf).getContentSummary(p).getLength
-      catch { case scala.util.control.NonFatal(e) =>
-        // ADVICE r11: swallowing Throwable masked a wrong/missing dir as
-        // a silent degrade to the cores floor; fatal errors now propagate
-        // and non-fatal ones are logged (absent OPTIONAL tables still sum
-        // as 0 — a lake is not required to carry all ten tables).
-        System.err.println(s"graft: initialShufflePartitions: size listing " +
-          s"failed for $p (${e.getClass.getSimpleName}: ${e.getMessage})")
-        0L
-      }
-    }.sum
+    // a lake is not required to carry all ten tables: absent ones sum as 0
+    val bytes = all.map(name => LakeFs.bytes(conf, new Path(s"$dir/$name.parquet"))).sum
     math.min(1024, math.max(cores, (bytes / (2L << 20)).toInt))
   }
 
@@ -174,17 +152,8 @@ object Tables {
     * row-group counts); on a catalog-backed lake (Delta/Iceberg) the
     * same number is one metadata lookup. O(files) footer reads on the
     * driver — the same cost class as the file listing the scan already
-    * does. Hidden files (`_` markers, crc) are skipped by the `.parquet`
-    * suffix filter, matching what the scan would read.
+    * does ([[LakeFs.footerRows]]).
     */
-  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new Path(s"$dir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    files(fs, fs.getFileStatus(root)).filter(_.getPath.getName.endsWith(".parquet")).map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    LakeFs.footerRows(spark, s"$dir/$name.parquet")
 }

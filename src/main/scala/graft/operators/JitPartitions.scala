@@ -289,18 +289,6 @@ object JitPartitions {
     PartitionRef(path, beginInsertMs, endInsertMs)
   }
 
-  /** Rows in a written partition, from its parquet footers: metadata
-    * reads only, no Spark job.
-    */
-  def rowCount(spark: SparkSession, ref: PartitionRef): Long = {
-    val (f, p) = LakeFs(spark, ref.path)
-    f.listStatus(p).toSeq.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(org.apache.parquet.hadoop.util
-        .HadoopInputFile.fromStatus(st, spark.sparkContext.hadoopConfiguration))
-      try r.getRecordCount finally r.close()
-    }.sum
-  }
-
   /** Hidden partition-metadata marker ('_' prefix: invisible to Spark
     * and DuckDB file listings): line 1 the file schema hash (M49's
     * [[Materialize.schemaHash]]), line 2 the source object count.

@@ -29,26 +29,32 @@ object Materialize {
   final case class UpdateStats(daysRecomputed: Long, rowsWritten: Long)
 
   /** Marker file written at the lake root by the day-partition
-    * materializers, recording WHICH time column the `date` partition
-    * column is derived from (the UTC day of that column). The name
+    * materializers: its presence says the lake's `date` partition column
+    * is the UTC day of its `time_bin_ms` (epoch ms) column. The name
     * starts with '_' so Spark's and DuckDB's file listings treat it as
     * hidden metadata, never data. TimeRangeRewrite ranges a scan that
-    * carries this marker on the marker's time column, and injects its
-    * derived date-partition predicate ONLY into such scans — a `date`
-    * column on an arbitrary table (business date, non-UTC derivation, a
-    * different base timestamp) must never be assumed to equal the UTC
-    * day of the ranged timestamp (ADVICE r9: that assumption silently
-    * drops rows). A LongType time column named here holds epoch
-    * milliseconds (`time_bin_ms`), the only unit the materializers write.
+    * carries this marker on `time_bin_ms`, and injects its derived
+    * date-partition predicate ONLY into such scans — a `date` column on
+    * an arbitrary table (business date, non-UTC derivation, a different
+    * base timestamp) must never be assumed to equal the UTC day of the
+    * ranged timestamp (ADVICE r9: that assumption silently drops rows).
+    * The text is informational and never parsed; it is the same for
+    * every lake written, so older lakes read the same way.
     */
   val DayPartitionMarker = "_graft_day_partitioned"
 
-  private def writeDayMarker(spark: SparkSession, outDir: String,
-      timeColumn: String): Unit = {
+  private def writeDayMarker(spark: SparkSession, outDir: String): Unit = {
     val (fs, root) = LakeFs(spark, outDir)
     LakeFs.writeText(fs, new Path(root, DayPartitionMarker),
-      s"timeColumn=$timeColumn\ndateColumn=date\n")
+      "timeColumn=time_bin_ms\ndateColumn=date\n")
   }
+
+  /** Whether the lake at `root` carries [[DayPartitionMarker]]: one
+    * existence call, false when the filesystem cannot answer.
+    */
+  private[graft] def isDayPartitioned(spark: SparkSession, root: Path): Boolean =
+    try { val (fs, r) = LakeFs(spark, root.toString); fs.exists(new Path(r, DayPartitionMarker)) }
+    catch { case scala.util.control.NonFatal(_) => false }
 
   private val IsoDate = "\\d{4}-\\d{2}-\\d{2}"
 
@@ -152,7 +158,7 @@ object Materialize {
       if (rows > 0) {
         day.write.option("partitionOverwriteMode", "dynamic")
           .mode("overwrite").partitionBy("date").parquet(outDir)
-        writeDayMarker(spark, outDir, "time_bin_ms")
+        writeDayMarker(spark, outDir)
       }
       else {
         // dynamic overwrite of an empty frame touches nothing — the
@@ -334,7 +340,7 @@ object Materialize {
       // concurrent writers on the same session
       fresh.write.option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").partitionBy("date").parquet(outDir)
-      writeDayMarker(spark, outDir, "time_bin_ms")
+      writeDayMarker(spark, outDir)
       val agg = fresh.agg(countDistinct("date"), count(lit(1))).head()
       UpdateStats(agg.getLong(0), agg.getLong(1))
     } finally fresh.unpersist()

@@ -143,7 +143,7 @@ object SqlBatchView {
       meta = Some((hash, src)))
     JitPartitions.retireParts(spark, outDir, beginMs, endMs - 1, JitPartitions.Overlap,
       sameRun = Set((beginMs, endMs - 1)))
-    JitPartitions.rowCount(spark, part) // the transform runs once, in the write
+    LakeFs.footerRows(spark, part.path) // the transform runs once, in the write
   }
 
   /** Answer the view WITHOUT materializing: run the transform per

@@ -22,11 +22,11 @@ import org.apache.spark.sql.types.{DataType, DateType, LongType, TimestampNTZTyp
   *
   * The time column comes from the scan. A scan exposing a DateType
   * `date` whose root carries Materialize's
-  * [[graft.operators.Materialize.DayPartitionMarker]] is ranged on the
-  * marker's `timeColumn` (a LongType one holds epoch ms, the unit
-  * Materialize writes), plus the implied `date` partition predicate.
-  * Any other scan is ranged on `ts`. Only a scan with a DateType `date`
-  * pays the marker lookup.
+  * [[graft.operators.Materialize.DayPartitionMarker]] is ranged on
+  * `time_bin_ms` (epoch ms, the column the materializers derive `date`
+  * from), plus the implied `date` partition predicate. Any other scan
+  * is ranged on `ts`. Only a scan with a DateType `date` pays the
+  * marker's existence check.
   *
   * Injected as a resolution rule (GraftExtensions) so the normal
   * optimizer batches push the added Filter into the source afterwards.
@@ -56,8 +56,8 @@ case class TimeRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       * column.
       *
       * On a marked lake the date conjuncts are the derived PARTITION
-      * predicate: the materializers write `date` as the UTC day of the
-      * marker's time column (every session here pins
+      * predicate: the materializers write `date` as the UTC day of
+      * `time_bin_ms` (every session here pins
       * spark.sql.session.timeZone=UTC), and only a predicate on the
       * partition column prunes whole directories before any IO; the
       * time predicate alone reaches row-group stats but still lists and
@@ -70,18 +70,18 @@ case class TimeRangeRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       * time there silently drops rows (ADVICE r9).
       */
     def rangeCond(leaf: LeafNode): Option[Expression] = {
-      val marked = leaf.output.find(a => a.name == "date" && a.dataType == DateType)
-        .flatMap(d => TimeRangeRewrite.markedTimeColumn(spark, leaf).map(d -> _))
-      val timeCol = marked.fold("ts")(_._2)
+      val date = leaf.output.find(a => a.name == "date" && a.dataType == DateType)
+        .filter(_ => TimeRangeRewrite.dayPartitioned(spark, leaf))
+      val timeCol = if (date.isDefined) "time_bin_ms" else "ts"
       leaf.output.find(a => a.name == timeCol && isTime(a.dataType)).map { t =>
         def lit(micros: Long) = t.dataType match {
-          case LongType if marked.isDefined => Literal(micros / 1000L, LongType)
+          case LongType if date.isDefined => Literal(micros / 1000L, LongType)
           case LongType if nanosAsLong => Literal(micros * 1000L, LongType)
           case dt => Literal(micros, dt)
         }
         val timeConds = begin.map(b => GreaterThanOrEqual(t, lit(b))).toSeq ++
           end.map(e => LessThan(t, lit(e)))
-        val dateConds = marked.toSeq.flatMap { case (d, _) =>
+        val dateConds = date.toSeq.flatMap { d =>
           begin.map(b => GreaterThanOrEqual(d, dateLit(b))).toSeq ++
             end.map(e => LessThanOrEqual(d, dateLit(e - 1)))
         }
@@ -124,27 +124,6 @@ object TimeRangeRewrite {
   /** Marks Filters injected by this rule as final across re-analyses. */
   val InjectedTag: TreeNodeTag[Boolean] = TreeNodeTag[Boolean]("graft.queryRange.injected")
 
-  /** Cache of root-path → (marker mtime, marker length, declared time
-    * column), validated against the marker file's CURRENT modification
-    * time AND length on every lookup (ADVICE r10: a positive-only,
-    * path-keyed-for-the-JVM cache kept qualifying a lake that was
-    * deleted and re-materialized with a different source time column —
-    * silently dropping rows, the exact failure class this gate exists
-    * to prevent; ADVICE r11: mtime alone has 1 s granularity on many
-    * filesystems, so a delete + re-materialize within the same second
-    * could still serve the stale column — the length check closes the
-    * common case, since a different timeColumn value almost always
-    * changes the marker's byte length). The validation is one
-    * getFileStatus per analysis per qualified scan — the same cheap FS
-    * metadata call class as the existence probe it replaces, and it
-    * doubles as that probe (a deleted marker evicts the entry). What
-    * the cache still saves is opening and parsing the file body.
-    * NEGATIVE results stay uncached — the materializer may write the
-    * marker after a first unmarked read of the same path in this JVM.
-    */
-  private val markerCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, String)]()
-
   private val MicrosPerDay = 86400000000L
 
   private def dateLit(micros: Long): Expression =
@@ -153,54 +132,20 @@ object TimeRangeRewrite {
   private def isTime(dt: DataType): Boolean =
     dt == TimestampType || dt == TimestampNTZType || dt == LongType
 
-  /** The time column every root path of `leaf`'s file relation declares
-    * in its [[graft.operators.Materialize.DayPartitionMarker]] as the
-    * source of its `date` partition column; None when a root has no
-    * marker or the roots disagree. Non-file leaves (views over
-    * arbitrary plans, streaming sources) never qualify.
+  /** Whether every root path of `leaf`'s file relation carries
+    * [[graft.operators.Materialize.DayPartitionMarker]]. The marker's
+    * presence alone qualifies the scan; its text is never read.
+    * Non-file leaves (views over arbitrary plans, streaming sources)
+    * never qualify.
     */
-  def markedTimeColumn(spark: SparkSession, leaf: LeafNode): Option[String] = leaf match {
+  private def dayPartitioned(spark: SparkSession, leaf: LeafNode): Boolean = leaf match {
     case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
       lr.relation match {
         case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          fs.location.rootPaths.map(markerTimeColumn(spark, _)).distinct match {
-            case Seq(tc @ Some(_)) => tc
-            case _ => None
-          }
-        case _ => None
+          val roots = fs.location.rootPaths
+          roots.nonEmpty && roots.forall(graft.operators.Materialize.isDayPartitioned(spark, _))
+        case _ => false
       }
-    case _ => None
-  }
-
-  private def markerTimeColumn(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path): Option[String] = {
-    val key = root.toString
-    try {
-      val p = new org.apache.hadoop.fs.Path(root,
-        graft.operators.Materialize.DayPartitionMarker)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st =
-        try fs.getFileStatus(p)
-        catch { case _: java.io.FileNotFoundException =>
-          markerCache.remove(key); return None }
-      val mtime = st.getModificationTime
-      val len = st.getLen
-      markerCache.get(key) match {
-        case (t, l, tc) if t == mtime && l == len => Some(tc)
-        case _ =>
-          val in = fs.open(p)
-          val content =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          val parsed = content.linesIterator
-            .collectFirst { case l if l.startsWith("timeColumn=") =>
-              l.stripPrefix("timeColumn=").trim }
-          parsed match {
-            case Some(tc) => markerCache.put(key, (mtime, len, tc))
-            case None => markerCache.remove(key) // marker lost its declaration
-          }
-          parsed
-      }
-    } catch { case _: Throwable => None }
+    case _ => false
   }
 }

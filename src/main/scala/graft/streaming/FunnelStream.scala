@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Streaming ordered-sequence funnel — the live leg of `m_funnel`
   * (M67): per user, steps achieve strictly in order — step k+1's event
@@ -15,19 +14,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * Equivalence with the batch query's chained min-aggregates (s1 =
   * min signup, s2 = min view in (t1, t1+w], …) holds because events
-  * drain in EVENT-TIME order: the first qualifying event of the next
-  * step type encountered in that order IS the minimum qualifying time
-  * (pinned by FunnelPropSpec on random inputs/splits/arrival orders).
-  *
-  * State per user is O(pending-within-watermark + steps): the usual
-  * watermark buffer (same event-time discipline as
-  * [[TransitionStream]] — arrival order is noise, event order is the
-  * contract; size the watermark delay above the source's timestamp
-  * granularity) plus the achieved-step time list. A completed or
-  * stalled user carries only that list, retained forever by default —
-  * re-achieving is not allowed, so dropping it would double-count; for
-  * churning user spaces add an idle TTL as [[HysteresisStream.edges]]
-  * does.
+  * drain in EVENT-TIME order through [[EventTimeFold]]: the first
+  * qualifying event of the next step type encountered in that order IS
+  * the minimum qualifying time (pinned by FunnelPropSpec on random
+  * inputs/splits/arrival orders). The carry is the achieved-step time
+  * list; re-achieving is not allowed, so dropping it would
+  * double-count.
   */
 object FunnelStream {
 
@@ -36,42 +28,20 @@ object FunnelStream {
   /** `step` is 1-based into the configured step list. */
   case class StepFact(userId: Long, step: Int, tMs: Long)
 
-  case class FunnelState(pending: List[(Long, Long, String)], stepTimes: List[Long])
-
   /** `events` must already carry a watermark on `ts`. */
   def steps(events: Dataset[UserEvent], stepTypes: Seq[String],
       windowMs: Long): Dataset[StepFact] = {
     require(stepTypes.nonEmpty, "stepTypes must be non-empty")
     require(stepTypes.distinct == stepTypes, s"step types must be distinct: $stepTypes")
     require(windowMs > 0, s"windowMs must be positive: $windowMs")
-    implicit val outEnc = Encoders.product[StepFact]
-    implicit val stateEnc = Encoders.product[FunnelState]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[FunnelState, StepFact](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, batch, state: GroupState[FunnelState]) =>
-          val old = state.getOption.getOrElse(FunnelState(Nil, Nil))
-          val wm = state.getCurrentWatermarkMs()
-          val all = old.pending ++ batch.map(e => (e.ts.getTime, e.id, e.eventType))
-          val (ready, pending) = all.partition(_._1 <= wm)
-          var achieved = old.stepTimes
-          val out = List.newBuilder[StepFact]
-          ready.sortBy(e => (e._1, e._2)).foreach { case (t, _, tpe) =>
-            val k = achieved.length
-            if (k < stepTypes.length && tpe == stepTypes(k) &&
-                (k == 0 || (t > achieved.last && t <= achieved.last + windowMs))) {
-              achieved = achieved :+ t
-              out += StepFact(key, k + 1, t)
-            }
-          }
-          state.update(FunnelState(pending, achieved))
-          // wake when the watermark reaches the next buffered event,
-          // even if this user goes quiet
-          if (pending.nonEmpty) {
-            state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
-          }
-          out.result().iterator
-      }
+    EventTimeFold(events, (e: UserEvent) => e.userId,
+      (e: UserEvent) => (e.ts.getTime, e.id, e.eventType), List.empty[Long]) {
+      (key, achieved, t, tpe) =>
+        val k = achieved.length
+        if (k < stepTypes.length && tpe == stepTypes(k) &&
+            (k == 0 || (t > achieved.last && t <= achieved.last + windowMs))) {
+          (achieved :+ t, Some(StepFact(key, k + 1, t)))
+        } else (achieved, None)
+    }
   }
 }

@@ -2,31 +2,15 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Streaming hysteresis (Schmitt-trigger) alerting — the live leg of
   * `m_hysteresis_alerts` (M105): per series, fire when the value
   * crosses HI, clear only below LO, emitting ONLY the edges (a page on
   * rising, a resolve on falling); oscillation inside the band emits
-  * nothing. State per series is O(pending-within-watermark + 1): the
-  * watermark buffer (same event-time discipline as [[TransitionStream]]
-  * — arrival order is noise, event order is the contract, and a row AT
-  * the watermark is dropped by Spark's late filter, so size the delay
-  * above the source's timestamp granularity) plus one carried alert
-  * bit. This is what an alerting pipeline actually pages from: edges,
-  * not levels — downstream needs no dedup.
-  *
-  * State retention: by default the carried alert bit lives FOREVER once
-  * a series is seen — the right design for a stable fleet (dropping it
-  * would mis-state the edge on the series' next sample), but unbounded
-  * for a churning/ephemeral key space (ADVICE r8; the same holds for
-  * [[RateStream]]/[[TransitionStream]]'s carried last-row). For those,
-  * pass `idleTtlMs`: a series with no pending rows re-arms an event-time
-  * timeout at watermark+TTL and is dropped when it fires with nothing
-  * buffered. Documented trade: a series that re-appears after expiry
-  * restarts from alert=false, so its first above-HI sample pages again
-  * even if it was already firing before it went quiet.
+  * nothing. The carry through [[EventTimeFold]] is one alert bit. This
+  * is what an alerting pipeline actually pages from: edges, not levels
+  * — downstream needs no dedup.
   */
 object HysteresisStream {
 
@@ -35,52 +19,22 @@ object HysteresisStream {
   /** firing=true is the page (rising edge), false the resolve. */
   case class AlertEdge(key: Long, tMs: Long, value: Double, firing: Boolean)
 
-  case class HystState(pending: List[(Long, Long, Double)], alert: Boolean)
-
   /** `samples` must already carry a watermark on `ts`.
     * `idleTtlMs`: optional idle expiry for high-cardinality ephemeral
-    * key spaces (see object doc for the re-page trade).
+    * key spaces. The trade: a series that re-appears after expiry
+    * restarts from alert=false, so its first above-HI sample pages
+    * again even if it was already firing before it went quiet.
     */
   def edges(samples: Dataset[Sample], hi: Double, lo: Double,
       idleTtlMs: Option[Long] = None): Dataset[AlertEdge] = {
     require(hi > lo, s"hysteresis band requires hi > lo (got hi=$hi, lo=$lo)")
     require(idleTtlMs.forall(_ > 0), s"idleTtlMs must be positive (got $idleTtlMs)")
-    implicit val outEnc = Encoders.product[AlertEdge]
-    implicit val stateEnc = Encoders.product[HystState]
-    implicit val keyEnc = Encoders.scalaLong
-    samples.groupByKey(_.key)
-      .flatMapGroupsWithState[HystState, AlertEdge](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, batch, state: GroupState[HystState]) =>
-          val old = state.getOption.getOrElse(HystState(Nil, alert = false))
-          val wm = state.getCurrentWatermarkMs()
-          val rows = batch.map(s => (s.ts.getTime, s.id, s.value)).toList
-          if (state.hasTimedOut && rows.isEmpty && old.pending.isEmpty &&
-              idleTtlMs.isDefined) {
-            // idle-TTL expiry: nothing buffered since the TTL was armed —
-            // drop the series (and its alert bit) entirely
-            state.remove()
-            Iterator.empty
-          } else {
-            val all = old.pending ++ rows
-            val (ready, pending) = all.partition(_._1 <= wm)
-            var alert = old.alert
-            val out = List.newBuilder[AlertEdge]
-            ready.sortBy(s => (s._1, s._2)).foreach { case (t, _, v) =>
-              if (!alert && v > hi) { alert = true; out += AlertEdge(key, t, v, firing = true) }
-              else if (alert && v < lo) { alert = false; out += AlertEdge(key, t, v, firing = false) }
-              // inside the band (lo ≤ v ≤ hi): state holds, nothing emits
-            }
-            state.update(HystState(pending, alert))
-            if (pending.nonEmpty) {
-              state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
-            } else {
-              // empty-pending path: without a TTL no timeout is armed and
-              // the alert bit is retained forever (stable-fleet default)
-              idleTtlMs.foreach(ttl => state.setTimeoutTimestamp(math.max(wm, 0L) + ttl))
-            }
-            out.result().iterator
-          }
-      }
+    EventTimeFold(samples, (s: Sample) => s.key,
+      (s: Sample) => (s.ts.getTime, s.id, s.value), false, idleTtlMs) {
+      (key, alert, t, v) =>
+        if (!alert && v > hi) (true, Some(AlertEdge(key, t, v, firing = true)))
+        else if (alert && v < lo) (false, Some(AlertEdge(key, t, v, firing = false)))
+        else (alert, None) // inside the band (lo ≤ v ≤ hi): state holds
+    }
   }
 }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Streaming reset-aware counter increments — the live leg of
   * `m_rate_resets` (M101, PromQL increase()/rate() semantics): per
@@ -13,13 +12,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * downstream is then the live `increase()` over any window, with no
   * further stateful operator. Values are e4-quantized integers
   * upstream (the batch query's contract) so window sums stay exact.
-  *
-  * State per series is O(pending-within-watermark + 1): the event-time
-  * buffer (same discipline as [[TransitionStream]]) plus one carried
-  * last value. The carried value is retained forever once a series is
-  * seen (stable-fleet design: dropping it would turn the next sample
-  * into a spurious restart) — for churning/ephemeral key spaces add an
-  * idle TTL as [[HysteresisStream.edges]] does (ADVICE r8).
+  * The carry through [[EventTimeFold]] is the series' last value.
   */
 object RateStream {
 
@@ -28,35 +21,13 @@ object RateStream {
   /** One closed step: increment (≥ 0) + whether it was a restart. */
   case class Increment(key: Long, tMs: Long, incE4: Long, reset: Boolean)
 
-  case class RateState(pending: List[(Long, Long, Long)], last: Option[Long])
-
   /** `samples` must already carry a watermark on `ts`. */
-  def increments(samples: Dataset[CounterSample]): Dataset[Increment] = {
-    implicit val outEnc = Encoders.product[Increment]
-    implicit val stateEnc = Encoders.product[RateState]
-    implicit val keyEnc = Encoders.scalaLong
-    samples.groupByKey(_.key)
-      .flatMapGroupsWithState[RateState, Increment](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, batch, state: GroupState[RateState]) =>
-          val old = state.getOption.getOrElse(RateState(Nil, None))
-          val wm = state.getCurrentWatermarkMs()
-          val all = old.pending ++ batch.map(s => (s.ts.getTime, s.id, s.vE4))
-          val (ready, pending) = all.partition(_._1 <= wm)
-          var last = old.last
-          val out = List.newBuilder[Increment]
-          ready.sortBy(s => (s._1, s._2)).foreach { case (t, _, v) =>
-            last.foreach { prev =>
-              val reset = v < prev
-              out += Increment(key, t, if (reset) v else v - prev, reset)
-            }
-            last = Some(v)
-          }
-          state.update(RateState(pending, last))
-          if (pending.nonEmpty) {
-            state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
-          }
-          out.result().iterator
-      }
-  }
+  def increments(samples: Dataset[CounterSample]): Dataset[Increment] =
+    EventTimeFold(samples, (s: CounterSample) => s.key,
+      (s: CounterSample) => (s.ts.getTime, s.id, s.vE4), Option.empty[Long]) {
+      (key, last, t, v) => (Some(v), last.map { prev =>
+        val reset = v < prev
+        Increment(key, t, if (reset) v else v - prev, reset)
+      })
+    }
 }

@@ -2,34 +2,16 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.Dataset
 
 /** Streaming per-user event-type transitions — the live leg of
   * `m_transition_matrix` (M99): each user's stream is reduced to
   * (from_state → to_state) steps as the watermark closes over events,
-  * with O(pending-within-watermark + 1) state per user.
-  *
-  * Event-time correctness is the same crux as [[AsofStream]]: arrival
-  * order is not time order, and a transition (a → b) is only known once
-  * no event can still arrive BETWEEN a and b — i.e. once the watermark
-  * passes b. Events buffer per user until the watermark passes them,
-  * then drain in (t, id) order against a single carried "last state"
-  * row. Downstream, a plain windowed groupBy over the emitted steps
-  * yields the live transition-count matrix — steps are append-mode
-  * facts, so counting them needs no extra stateful operator.
-  *
-  * Late-filter caveat (measured, pinned by TransitionPropSpec): Spark's
-  * stateful late filter drops an input row whose event time is AT the
-  * current watermark, not only behind it — so with a 0-delay watermark
-  * an event sharing its timestamp with the previous batch's maximum is
-  * silently dropped. Size the watermark delay above the source's
-  * timestamp granularity.
-  *
-  * The carried last-state row is retained forever once a user is seen
-  * (dropping it would fabricate a session-start on the next event);
-  * for unbounded/churning user spaces add an idle TTL as
-  * [[HysteresisStream.edges]] does (ADVICE r8).
+  * carrying only the newest drained event's type (the `lag(1)` row)
+  * through [[EventTimeFold]]. Downstream, a plain windowed groupBy over
+  * the emitted steps yields the live transition-count matrix — steps
+  * are append-mode facts, so counting them needs no extra stateful
+  * operator.
   */
 object TransitionStream {
 
@@ -37,37 +19,10 @@ object TransitionStream {
 
   case class Transition(userId: Long, fromState: String, toState: String, tMs: Long)
 
-  /** pending = (tMs, id, type) ahead of the watermark; last = the
-    * newest drained event, the `lag(1)` carry.
-    */
-  case class TransState(pending: List[(Long, Long, String)], last: Option[(Long, Long, String)])
-
   /** `events` must already carry a watermark on `ts`. */
-  def transitions(events: Dataset[UserEvent]): Dataset[Transition] = {
-    implicit val outEnc = Encoders.product[Transition]
-    implicit val stateEnc = Encoders.product[TransState]
-    implicit val keyEnc = Encoders.scalaLong
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[TransState, Transition](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (key, batch, state: GroupState[TransState]) =>
-          val old = state.getOption.getOrElse(TransState(Nil, None))
-          val wm = state.getCurrentWatermarkMs()
-          val all = old.pending ++ batch.map(e => (e.ts.getTime, e.id, e.eventType))
-          val (ready, pending) = all.partition(_._1 <= wm)
-          var last = old.last
-          val out = List.newBuilder[Transition]
-          ready.sortBy(e => (e._1, e._2)).foreach { e =>
-            last.foreach(l => out += Transition(key, l._3, e._3, e._1))
-            last = Some(e)
-          }
-          state.update(TransState(pending, last))
-          // wake when the watermark reaches the next buffered event,
-          // even if this user goes quiet
-          if (pending.nonEmpty) {
-            state.setTimeoutTimestamp(math.max(pending.map(_._1).min, wm + 1))
-          }
-          out.result().iterator
-      }
-  }
+  def transitions(events: Dataset[UserEvent]): Dataset[Transition] =
+    EventTimeFold(events, (e: UserEvent) => e.userId,
+      (e: UserEvent) => (e.ts.getTime, e.id, e.eventType), Option.empty[String]) {
+      (key, last, t, tpe) => (Some(tpe), last.map(Transition(key, _, tpe, t)))
+    }
 }

@@ -1,6 +1,9 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Repo hygiene gates that have bitten rounds before.
@@ -18,10 +21,30 @@ class RepoHygieneSpec extends AnyFunSuite {
   private val textExtensions =
     Set(".md", ".scala", ".java", ".py", ".sh", ".sbt", ".json", ".jsonl", ".txt", ".properties")
 
+  /** The repo's files relative to `root`: git's tracked files in a
+    * checkout; in an export without `.git` (`git archive`), every file
+    * outside build output (`target/`) and dot-directories.
+    */
+  private def repoFiles(root: Path): Seq[String] =
+    if (Files.exists(root.resolve(".git"))) {
+      import scala.sys.process._
+      Process(Seq("git", "ls-files"), root.toFile).!!.linesIterator.toSeq
+    } else {
+      def walk(dir: Path): Seq[Path] = {
+        val s = Files.list(dir)
+        try s.iterator.asScala.toSeq.flatMap { p =>
+          val name = p.getFileName.toString
+          if (!Files.isDirectory(p)) Seq(p)
+          else if (name == "target" || name.startsWith(".")) Nil
+          else walk(p)
+        } finally s.close()
+      }
+      walk(root).map(root.relativize(_).toString)
+    }
+
   test("no tracked text file contains a NUL byte") {
-    import scala.sys.process._
     val root = Paths.get(".").toAbsolutePath.normalize
-    val files = Process(Seq("git", "ls-files"), root.toFile).!!.linesIterator.toSeq
+    val files = repoFiles(root)
     val offenders = files.filter { f =>
       textExtensions.exists(f.endsWith) && {
         val p = root.resolve(f)

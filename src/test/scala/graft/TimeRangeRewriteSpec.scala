@@ -6,39 +6,39 @@ import org.apache.spark.sql.functions._
 
 class TimeRangeRewriteSpec extends SparkSpec with TmpDirSupport with AdaptiveSparkPlanHelper {
 
-  test("marker cache invalidates when the marker file changes or disappears") {
-    import graft.plans.TimeRangeRewrite
-    import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+  test("the day-partition marker's presence alone decides the ranged scan") {
+    import spark.implicits._
     val dir = tmpDir("trr_marker")
-    spark.sql(
-      "select timestamp'2024-01-02 03:04:05' as ts, date'2024-01-02' as date, 1 as v")
-      .write.mode("overwrite").parquet(dir)
-    def leaf: LeafNode = spark.read.parquet(dir)
-      .queryExecution.analyzed.collectLeaves().head.asInstanceOf[LeafNode]
+    val dayMs = 86400000L
+    // ten days, one row each, `date` the UTC day of `time_bin_ms`: the
+    // materializers' layout, without the marker until written below
+    Seq.tabulate(10)(i => (i * dayMs + 1000L, i.toLong))
+      .toDF("time_bin_ms", "v")
+      .withColumn("date", to_date(timestamp_millis(col("time_bin_ms"))))
+      .write.mode("overwrite").partitionBy("date").parquet(dir)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val marker = new org.apache.hadoop.fs.Path(dir,
       graft.operators.Materialize.DayPartitionMarker)
-    def writeMarker(timeCol: String, mtime: Long): Unit = {
+    def writeMarker(text: String): Unit = {
       val os = fs.create(marker, true)
-      try os.write(s"timeColumn=$timeCol\ndateColumn=date\n".getBytes("UTF-8"))
-      finally os.close()
-      // pin mtime explicitly: two writes within the same FS timestamp
-      // granularity would otherwise be indistinguishable
-      fs.setTimes(marker, mtime, -1)
+      try os.write(text.getBytes("UTF-8")) finally os.close()
     }
-    writeMarker("ts", 1000000L)
-    assert(TimeRangeRewrite.markedTimeColumn(spark, leaf) === Some("ts"))
-    // lake re-materialized with a DIFFERENT source time column: the
-    // stale cached 'ts' must not keep qualifying the scan (ADVICE r10)
-    writeMarker("other_ts", 2000000L)
-    assert(TimeRangeRewrite.markedTimeColumn(spark, leaf) === Some("other_ts"))
-    // marker deleted (path reused by a non-materializer table): no injection
+    // sum of v over days [2, 5) when ranged, over all ten days when not
+    def rangedSum(): Long = {
+      spark.read.parquet(dir).createOrReplaceTempView("trr_marker_lake")
+      try Graft.query(spark, sfDir, "SELECT sum(v) FROM trr_marker_lake",
+        Some(2L * dayMs * 1000L), Some(5L * dayMs * 1000L)).head().getLong(0)
+      finally spark.catalog.dropTempView("trr_marker_lake")
+    }
+    writeMarker("timeColumn=time_bin_ms\ndateColumn=date\n")
+    assert(rangedSum() === 2L + 3L + 4L)
+    // marker deleted (path reused by a non-materializer table): no range
     fs.delete(marker, false)
-    assert(TimeRangeRewrite.markedTimeColumn(spark, leaf) === None)
-    // and a fresh marker re-qualifies (negative results are never cached)
-    writeMarker("ts", 3000000L)
-    assert(TimeRangeRewrite.markedTimeColumn(spark, leaf) === Some("ts"))
+    assert(rangedSum() === (0L to 9L).sum)
+    // rewritten, even empty: presence alone qualifies the scan again
+    writeMarker("")
+    assert(rangedSum() === 2L + 3L + 4L)
   }
 
   test("session query range is injected into scans and pushed down") {
