@@ -46,7 +46,7 @@ object GraftRun {
     val spark = conf.foldLeft(GraftSession.base(sfDir, cores)) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    (spark, SpillBudget.fromConfOrDefault(spark))
+    (spark, SpillBudget.fromConf(spark))
   }
 
   /** Runs `action` and returns its value with every execution it

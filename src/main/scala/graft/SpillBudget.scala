@@ -51,7 +51,7 @@ object SpillBudget {
   val CancelReason = "GRAFT_SPILL_BUDGET_EXCEEDED"
 
   /** Session conf key (MB, like the reference's env var); unset or
-    * non-positive = disabled.
+    * non-positive = the 100 GB default ([[fromConf]]).
     */
   val ConfKey = "spark.graft.query.maxSpillMb"
 
@@ -62,26 +62,17 @@ object SpillBudget {
     b
   }
 
-  /** Conf-driven attach: returns None when the knob is unset —
-    * "default: DataFusion's own 100 GB, unchanged if unset" maps to
-    * "no listener, Spark's own spill behavior unchanged".
+  /** Attaches the cap [[ConfKey]] sets, or 100 GB when it is unset or
+    * non-positive — the reference's cap is likewise always on (100 GB
+    * when its env var is unset). The mains attach this, so the
+    * accounting path runs under every full sweep and the spill
+    * high-water is observable, while the generous default never
+    * cancels honest work.
     */
-  def fromConf(spark: SparkSession): Option[SpillBudget] = {
+  def fromConf(spark: SparkSession): SpillBudget = {
     val mb = spark.conf.get(ConfKey, "0").toLong
-    if (mb > 0) Some(attach(spark, mb << 20)) else None
+    attach(spark, if (mb > 0) mb << 20 else 100L << 30)
   }
-
-  /** [[fromConf]] with a fallback cap when the knob is unset: the
-    * bench/verify drivers attach this so the accounting path runs
-    * under every full sweep and the spill high-water is observable,
-    * while the generous default never cancels honest work. The
-    * reference's cap is likewise always on (100 GB when the env var
-    * is unset) — fromConf alone left the knob inert in every
-    * production entrypoint (ADVICE r12).
-    */
-  def fromConfOrDefault(spark: SparkSession,
-      defaultBytes: Long = 100L << 30): SpillBudget =
-    fromConf(spark).getOrElse(attach(spark, defaultBytes))
 }
 
 final class SpillBudget private (spark: SparkSession, val maxSpillBytes: Long)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, GetJsonObject, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 
 /** The reference engine's OWN SQL names, registered over graft's
   * expressions — so a user migrating from the reference can paste the
@@ -47,21 +47,12 @@ object ReferenceNames {
       args: Seq[Expression]): Expression =
     Shim.expression(f(args.map(Shim.column)))
 
+  private val graftBuilders = GraftFunctions.builders.toMap
+
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "property_get" -> { args =>
-      require(args.length == 2, "property_get(properties, key)")
-      GraftPropertyGet(args(0), args(1))
-    },
-    "make_histogram" -> { args =>
-      require(args.length == 4, "make_histogram(start, end, nb_bins, values)")
-      HistogramAgg(
-        Cast(args(0), DoubleType), Cast(args(1), DoubleType),
-        Cast(args(2), IntegerType), Cast(args(3), DoubleType)).toAggregateExpression()
-    },
-    "sum_histograms" -> { args =>
-      require(args.length == 1, "sum_histograms(histogram)")
-      SumHistogramsAgg(args(0)).toAggregateExpression()
-    },
+    "property_get" -> graftBuilders("graft_property_get"),
+    "make_histogram" -> graftBuilders("graft_make_histogram"),
+    "sum_histograms" -> graftBuilders("graft_sum_histograms"),
     "quantile_from_histogram" -> { args =>
       require(args.length == 2, "quantile_from_histogram(histogram, quantile)")
       val q = litDouble(args(1), "quantile_from_histogram")

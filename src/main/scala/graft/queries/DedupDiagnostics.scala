@@ -41,29 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupDiagnostics extends QuerySuite {
 
-  /** The L2 minhash→LSH→candidate chain as DuckDB CTEs (lock-step with
-    * Dedup.minhashSignatureExploded/lshBands/candidatePairs at 8
-    * hashes × 4 bands).
-    */
-  private val oracleCandidates = s"""
-      WITH tok AS (SELECT doc_id, $oracleTokens AS t FROM documents),
-      sh AS (SELECT doc_id, ${oracleShingles(3)} AS s FROM tok),
-      ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-      dg AS (SELECT doc_id, md5(shingle) AS d0, md5('x|' || shingle) AS d1 FROM ex),
-      mh AS (
-        SELECT doc_id, seed.seed,
-          min(substring(CASE WHEN seed.seed < 4 THEN d0 ELSE d1 END,
-                        1 + 8 * (seed.seed % 4), 8)) AS mh
-        FROM dg CROSS JOIN (SELECT CAST(range AS INTEGER) AS seed FROM range(0, 8)) seed
-        GROUP BY doc_id, seed.seed),
-      sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, b.b AS band, md5(sig[2*b.b + 1] || '|' || sig[2*b.b + 2]) AS key
-        FROM sig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(0, 4)) b),
-      cand AS (
-        SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-        FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id)"""
-
   /** 1 − (1 − s^r)^b in truncating e4 fixed point, as DuckDB SQL over
     * columns rows_per_band / n_bands — the EXACT multiply-div schedule
     * the Spark side runs (squaring chain q→q²→q⁴→q⁸).
@@ -89,24 +66,17 @@ object DedupDiagnostics extends QuerySuite {
     // be trusted to gate (Broder 1997's resemblance estimator is
     // unbiased, but at 8 hashes the variance is what this surfaces).
     GraftQuery("l_minhash_calib", (s, dir) => {
-      // fused signature + 56-bit verify sets, one digest pass, one
-      // string-free checkpoint (r13 item 2; attach longs per r12 item 1)
-      val sig = Dedup.signatureAndHash56(
-          keyedDocs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
-          "shingles", numHashes = 8)
-        .localCheckpoint()
-      val sh = sig
+      val sig = Dedup.lshSignatures(keyedDocs(s, dir))
+      // the bands stay uncut here, unlike in Dedup.lshCandidates
       val cand = Dedup.candidatePairs(
-        Dedup.lshBands(sig, "doc_id", numHashes = 8, rowsPerBand = 2), "doc_id")
-      val mhCols = (0 until 8).map(i => s"mh$i")
+        Dedup.lshBands(sig, "doc_id", Dedup.lshHashes, Dedup.lshRowsPerBand), "doc_id")
+      val mhCols = (0 until Dedup.lshHashes).map(i => s"mh$i")
       val sigA = sig.select(col("doc_id").as("a") +: mhCols.map(c => col(c).as(s"a_$c")): _*)
       val sigB = sig.select(col("doc_id").as("b") +: mhCols.map(c => col(c).as(s"b_$c")): _*)
       val matches = mhCols.map(c => when(col(s"a_$c") === col(s"b_$c"), 1L).otherwise(0L))
         .reduce(_ + _)
-      cand.join(sigA, "a").join(sigB, "b")
-        .withColumn("n_sig_match", matches)
-        .join(sh.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
-        .join(sh.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
+      Dedup.withVerifySets(cand.join(sigA, "a").join(sigB, "b")
+          .withColumn("n_sig_match", matches), sig)
         .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
         .withColumn("uni", size(array_union(col("sa"), col("sb"))).cast("long"))
         // estimate = matches/8 (Broder's unbiased resemblance estimator);
@@ -119,29 +89,13 @@ object DedupDiagnostics extends QuerySuite {
     }, Some(s"""
       WITH tok AS (SELECT doc_id, $oracleTokens AS t FROM documents),
       sh AS (SELECT doc_id, ${oracleShingles(3)} AS s FROM tok),
-      ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-      dg AS (SELECT doc_id, md5(shingle) AS d0, md5('x|' || shingle) AS d1 FROM ex),
-      mh AS (
-        SELECT doc_id, seed.seed,
-          min(substring(CASE WHEN seed.seed < 4 THEN d0 ELSE d1 END,
-                        1 + 8 * (seed.seed % 4), 8)) AS mh
-        FROM dg CROSS JOIN (SELECT CAST(range AS INTEGER) AS seed FROM range(0, 8)) seed
-        GROUP BY doc_id, seed.seed),
-      sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, b.b AS band, md5(sig[2*b.b + 1] || '|' || sig[2*b.b + 2]) AS key
-        FROM sig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(0, 4)) b),
-      cand AS (
-        SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-        FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id),
+      ${oracleSignatures("sh")},
+      ${oracleLshCandidates("sig")},
       m AS (
         SELECT c.a, c.b,
           CAST(len(list_filter(range(1, 9), i -> sa.sig[i] = sb.sig[i])) AS BIGINT) AS n_sig_match
         FROM cand c JOIN sig sa ON sa.doc_id = c.a JOIN sig sb ON sb.doc_id = c.b),
-      shl AS (
-        SELECT doc_id, list_distinct(list_transform(s,
-          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
-        FROM sh),
+      ${oracleHash56Sets("sh")},
       j AS (
         SELECT m.*, CAST(len(list_intersect(ha.hs, hb.hs)) AS BIGINT) AS inter,
           CAST(len(list_distinct(ha.hs || hb.hs)) AS BIGINT) AS uni
@@ -345,20 +299,8 @@ object DedupDiagnostics extends QuerySuite {
     // pairs, this prices what each threshold would delete. Exact
     // integer qualification (inter·100 ≥ t·union — no float compare).
     GraftQuery("l_dedup_threshold_curve", (s, dir) => {
-      // fused signature + 56-bit verify sets, one digest pass (r13
-      // item 2), and the checkpoint is string-free: the r12 sf100sub
-      // profile put ~1/3 of wall in the 8.4 GB shingle-STRING-array
-      // exchange feeding the sa/sb verify joins (PLANS.md item 3);
-      // longs carry the same sets at 8 B/shingle
-      val sh = Dedup.signatureAndHash56(
-          keyedDocs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
-          "shingles", numHashes = 8)
-        .localCheckpoint()
-      val bands = Dedup.lshBands(sh, "doc_id", numHashes = 8, rowsPerBand = 2)
-        .localCheckpoint()
-      val j = Dedup.candidatePairs(bands, "doc_id")
-        .join(sh.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
-        .join(sh.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
+      val sh = Dedup.lshSignatures(keyedDocs(s, dir))
+      val j = Dedup.withVerifySets(Dedup.lshCandidates(sh), sh)
         .select(col("a"), col("b"),
           size(array_intersect(col("sa"), col("sb"))).cast("long").as("inter"),
           size(array_union(col("sa"), col("sb"))).cast("long").as("uni"))
@@ -372,11 +314,7 @@ object DedupDiagnostics extends QuerySuite {
         .agg(expr("count(1) div 2").as("n_pairs"),
           countDistinct("doc").as("n_docs"))
         .orderBy("threshold_e2")
-    }, Some(s"""$oracleCandidates,
-      shl AS (
-        SELECT doc_id, list_distinct(list_transform(s,
-          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
-        FROM sh),
+    }, Some(s"""$oracleLshChain,
       j AS (
         SELECT c.a, c.b,
           CAST(len(list_intersect(sa.hs, sb.hs)) AS BIGINT) AS inter,
@@ -453,18 +391,12 @@ object DedupDiagnostics extends QuerySuite {
       // normalization hash, shingle set), cut once — each rung then
       // works off the checkpoint instead of re-scanning and
       // re-shuffling the text table (measured 5.5s → see PLANS.md)
-      // fused signature + 56-bit verify sets (r13 item 2): the
-      // signature is computed for ALL docs here, not just rung-2
+      // the signature is computed for ALL docs here, not just rung-2
       // survivors — the exact/norm rungs remove a few percent, so one
       // fused pass over everything costs less than hash56-everything
-      // plus minhash-over-survivors did, and the checkpoint drops the
-      // shingle strings entirely
-      val d = Dedup.signatureAndHash56(
-          keyedDocs(s, dir)
-            .select(col("doc_id"), md5(col("text")).as("raw_h"), md5(norm).as("norm_h"),
-              Dedup.wordShingles(col("text"), 3).as("shingles")),
-          "shingles", numHashes = 8)
-        .localCheckpoint()
+      // plus minhash-over-survivors did
+      val d = Dedup.lshSignatures(keyedDocs(s, dir),
+        md5(col("text")).as("raw_h"), md5(norm).as("norm_h"))
       // rung 1: exact
       val s1 = d.groupBy("raw_h").agg(min("doc_id").as("doc_id")).select("doc_id")
       // rung 2: normalization fingerprint over rung-1 survivors.
@@ -480,17 +412,7 @@ object DedupDiagnostics extends QuerySuite {
       // signature columns ride along from the checkpoint)
       val sh2 = d.join(s2.hint("shuffle_hash"), "doc_id")
         .drop("raw_h", "norm_h")
-      // materialized: the candidate self-join reads bands twice (same
-      // reason l_dedup_minhash cuts here)
-      val bands = Dedup.lshBands(sh2, "doc_id", numHashes = 8, rowsPerBand = 2)
-        .localCheckpoint()
-      val cand = Dedup.candidatePairs(bands, "doc_id")
-      val removed3 = cand
-        .join(sh2.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
-        .join(sh2.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
-        .where(size(array_intersect(col("sa"), col("sb"))) * 2
-          >= size(array_union(col("sa"), col("sb")))) // jac ≥ 0.5, integer
-        .select(col("b").as("doc_id")).distinct()
+      val removed3 = Dedup.lshEdges(sh2).select(col("b").as("doc_id")).distinct()
       val s3 = s2.join(removed3, Seq("doc_id"), "left_anti")
       val stages = Seq(("0_input", d.select("doc_id")), ("1_exact", s1),
         ("2_norm", s2), ("3_neardup", s3))
@@ -512,25 +434,9 @@ object DedupDiagnostics extends QuerySuite {
       s2 AS (SELECT min(doc_id) AS doc_id FROM n2 GROUP BY norm_h),
       tok2 AS (SELECT d.doc_id, $oracleTokens AS t FROM documents d JOIN s2 USING (doc_id)),
       sh2 AS (SELECT doc_id, ${oracleShingles(3)} AS s FROM tok2),
-      ex2 AS (SELECT doc_id, unnest(s) AS shingle FROM sh2),
-      dg AS (SELECT doc_id, md5(shingle) AS d0, md5('x|' || shingle) AS d1 FROM ex2),
-      mh AS (
-        SELECT doc_id, seed.seed,
-          min(substring(CASE WHEN seed.seed < 4 THEN d0 ELSE d1 END,
-                        1 + 8 * (seed.seed % 4), 8)) AS mh
-        FROM dg CROSS JOIN (SELECT CAST(range AS INTEGER) AS seed FROM range(0, 8)) seed
-        GROUP BY doc_id, seed.seed),
-      sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, b.b AS band, md5(sig[2*b.b + 1] || '|' || sig[2*b.b + 2]) AS key
-        FROM sig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(0, 4)) b),
-      cand AS (
-        SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-        FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id),
-      shl AS (
-        SELECT doc_id, list_distinct(list_transform(s,
-          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
-        FROM sh2),
+      ${oracleSignatures("sh2")},
+      ${oracleLshCandidates("sig")},
+      ${oracleHash56Sets("sh2")},
       rem AS (
         SELECT DISTINCT c.b AS doc_id
         FROM cand c JOIN shl sa ON sa.doc_id = c.a JOIN shl sb ON sb.doc_id = c.b
@@ -557,17 +463,8 @@ object DedupDiagnostics extends QuerySuite {
       // config. All probability arithmetic is truncating e4
       // fixed-point (identical multiply-div schedules both engines) —
       // no float pow, so the table is cross-engine exact.
-      // fused signature + 56-bit verify sets, one digest pass, one
-      // string-free checkpoint (r13 item 2; attach longs per r12 item 1)
-      val sh = Dedup.signatureAndHash56(
-          keyedDocs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
-          "shingles", numHashes = 8)
-        .localCheckpoint()
-      val bands = Dedup.lshBands(sh, "doc_id", numHashes = 8, rowsPerBand = 2)
-        .localCheckpoint()
-      val hist = Dedup.candidatePairs(bands, "doc_id")
-        .join(sh.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
-        .join(sh.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
+      val sh = Dedup.lshSignatures(keyedDocs(s, dir))
+      val hist = Dedup.withVerifySets(Dedup.lshCandidates(sh), sh)
         .select(size(array_intersect(col("sa"), col("sb"))).cast("long").as("inter"),
           size(array_union(col("sa"), col("sb"))).cast("long").as("uni"))
         .select(least(expr("(inter * 10000 div uni) div 1000"), lit(9L)).as("bucket"))
@@ -597,11 +494,7 @@ object DedupDiagnostics extends QuerySuite {
         .select("rows_per_band", "n_bands", "p50_e4", "p80_e4",
           "expected_candidates", "observed_pairs")
         .orderBy("rows_per_band")
-    }, Some(s"""$oracleCandidates,
-      shl AS (
-        SELECT doc_id, list_distinct(list_transform(s,
-          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
-        FROM sh),
+    }, Some(s"""$oracleLshChain,
       j AS (
         SELECT CAST(len(list_intersect(sa.hs, sb.hs)) AS BIGINT) * 10000
                // CAST(len(list_distinct(sa.hs || sb.hs)) AS BIGINT) AS jac_e4

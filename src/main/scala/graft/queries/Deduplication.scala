@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.operators.{Dedup, TextAnalysis}
 import graft.{GraftQuery, QuerySuite}
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,84 +26,6 @@ object Deduplication extends QuerySuite {
 
   private val substrW = 20 // window length in tokens (Lee et al. use 50 BPE tokens; 20 words ≈ same span)
 
-  /** The MinHash-LSH near-dup edge chain (→ CTE `e`(a, b), Jaccard
-    * ≥ 0.5) shared by l_canonical_select and l_split_leakage.
-    */
-  private[queries] val oracleLshEdges: String = """tok AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS t FROM documents),
-      shl AS (
-        SELECT doc_id, list_distinct(list_transform(range(1, GREATEST(len(t) - 2, 1) + 1),
-          i -> array_to_string(t[i:i+2], ' '))) AS s
-        FROM tok),
-      ex AS (SELECT doc_id, unnest(s) AS shingle FROM shl),
-      dg AS (SELECT doc_id, md5(shingle) AS d0, md5('x|' || shingle) AS d1 FROM ex),
-      mh AS (
-        SELECT doc_id, seed.seed,
-          min(substring(CASE WHEN seed.seed < 4 THEN d0 ELSE d1 END,
-                        1 + 8 * (seed.seed % 4), 8)) AS mh
-        FROM dg CROSS JOIN (SELECT CAST(range AS INTEGER) AS seed FROM range(0, 8)) seed
-        GROUP BY doc_id, seed.seed),
-      sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, b.b AS band, md5(sig[2*b.b + 1] || '|' || sig[2*b.b + 2]) AS key
-        FROM sig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(0, 4)) b),
-      cand AS (
-        SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-        FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id),
-      hs AS (
-        SELECT doc_id, list_distinct(list_transform(s,
-          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
-        FROM shl),
-      e AS (
-        SELECT cand.a, cand.b
-        FROM cand JOIN hs sa ON sa.doc_id = cand.a JOIN hs sb ON sb.doc_id = cand.b
-        WHERE len(list_intersect(sa.hs, sb.hs)) * 2
-                >= len(list_distinct(sa.hs || sb.hs)))"""
-
-  /** The Spark-side LSH near-dup edges (a, b) at Jaccard ≥ 0.5 —
-    * shared by l_canonical_select and l_split_leakage.
-    */
-  private[queries] def lshEdges(d: DataFrame): DataFrame = {
-    // fused signature + 56-bit verify sets (r13 item 2): one digest
-    // pass, a string-free checkpoint, and the verify joins attach
-    // 8 B/shingle longs — this helper was the last LSH site still
-    // exchanging shingle STRING arrays (r12 item 1's 860 B/row shape).
-    // Jaccard ≥ 0.5 over the hashed sets is integer-exact and lands
-    // identically in the DuckDB oracle (md5 is standardized).
-    val sh = Dedup.signatureAndHash56(
-        d.select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
-        "shingles", numHashes = 8)
-      .localCheckpoint()
-    val bands = Dedup.lshBands(sh, "doc_id", numHashes = 8, rowsPerBand = 2)
-      .localCheckpoint()
-    val cand = Dedup.candidatePairs(bands, "doc_id")
-    cand
-      // shuffle_hash: same statistics blind spot as every LSH-family
-      // attach join (see l_dedup_minhash) — without it the corpus-sized
-      // shingle table was statically broadcast (130 MB at sf1)
-      .join(sh.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
-      .join(sh.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
-      .where(size(array_intersect(col("sa"), col("sb"))) * 2
-        >= size(array_union(col("sa"), col("sb")))) // jac ≥ 0.5, integer
-      .select("a", "b")
-  }
-
-  /** The l_curation_pipeline quality CTE (q10k BIGINT per doc). */
-  private val oracleQ10k = """
-      qf AS (
-        SELECT doc_id, string_split_regex(trim(text), '\s+') AS t,
-          CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-            / GREATEST(length(text), 1) AS punct_ratio,
-          CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-              x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS DOUBLE)
-            / GREATEST(len(string_split_regex(trim(text), '\s+')), 1) AS stop_ratio
-        FROM documents),
-      q AS (
-        SELECT doc_id,
-          CAST(round(round(0.5 * stop_ratio + 0.3 * (1.0 - punct_ratio)
-                + 0.2 * LEAST(CAST(len(t) AS DOUBLE) / 200.0, 1.0), 4)
-               * 10000.0, 0) AS BIGINT) AS q10k
-        FROM qf)"""
-
   private val prefixTokens = 10
 
   // 3 on the synthetic corpus: its duplicate mass is prefix-heavy and
@@ -123,61 +44,11 @@ object Deduplication extends QuerySuite {
       FROM documents GROUP BY 1 ORDER BY h"""), headline = true),
 
     GraftQuery("l_dedup_minhash", (s, dir) => {
-      // Fused signature + 56-bit verify sets in ONE digest pass
-      // (r13 verdict item 2: the separate graft_minhash/graft_hash56
-      // kernels both md5'd the bare shingle — one redundant digest per
-      // shingle), and the cut materializes ONLY longs/hex chunks —
-      // the shingle strings never reach the checkpoint (the verify
-      // joins attach the longs; r12 item 1). localCheckpoint (not
-      // persist) so the materialization is GC-cleaned with the plan
-      // instead of pinned in the CacheManager across later queries.
-      val sh = Dedup.signatureAndHash56(
-          keyedDocs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
-          "shingles", numHashes = 8)
-        .localCheckpoint()
-      // materialized: the candidate self-join reads bands TWICE, and
-      // without a cut Spark re-runs the signature pipeline for each
-      // side (the broadcast side can't reuse the shuffle stage)
-      val bands = Dedup.lshBands(sh, "doc_id", numHashes = 8, rowsPerBand = 2)
-        .localCheckpoint()
-      val cand = Dedup.candidatePairs(bands, "doc_id")
-      // shuffle_hash pins the shingle-set attach joins to SHUFFLED
-      // hash joins (here and at every sibling site in the LSH family):
-      // the shingle-set side is corpus-proportional, but its size
-      // ESTIMATE is blind twice over — ArrayType projections are
-      // estimated at near-constant width, and localCheckpoint's
-      // LogicalRDD carries those origin stats forward — so Catalyst
-      // statically broadcast the 130 MB (at sf1, growing linearly)
-      // corpus side, which AQE never demotes. Measured by
-      // BroadcastBudgetSpec; the hint keeps the join keyed by doc_id
-      // with a per-partition build bounded by AQE partition sizing.
-      val withSets = cand
-        .join(sh.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
-        .join(sh.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
-      withSets.select(col("a"), col("b"), duckRound(Dedup.jaccard(col("sa"), col("sb")), 4).as("jac"))
+      val sh = Dedup.lshSignatures(keyedDocs(s, dir))
+      Dedup.withVerifySets(Dedup.lshCandidates(sh), sh)
+        .select(col("a"), col("b"), duckRound(Dedup.jaccard(col("sa"), col("sb")), 4).as("jac"))
         .orderBy("a", "b")
-    }, Some(s"""
-      WITH tok AS (SELECT doc_id, $oracleTokens AS t FROM documents),
-      sh AS (SELECT doc_id, ${oracleShingles(3)} AS s FROM tok),
-      ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-      dg AS (SELECT doc_id, md5(shingle) AS d0, md5('x|' || shingle) AS d1 FROM ex),
-      mh AS (
-        SELECT doc_id, seed.seed,
-          min(substring(CASE WHEN seed.seed < 4 THEN d0 ELSE d1 END,
-                        1 + 8 * (seed.seed % 4), 8)) AS mh
-        FROM dg CROSS JOIN (SELECT CAST(range AS INTEGER) AS seed FROM range(0, 8)) seed
-        GROUP BY doc_id, seed.seed),
-      sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
-      bands AS (
-        SELECT doc_id, b.b AS band, md5(sig[2*b.b + 1] || '|' || sig[2*b.b + 2]) AS key
-        FROM sig CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(0, 4)) b),
-      cand AS (
-        SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
-        FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id),
-      shl AS (
-        SELECT doc_id, list_distinct(list_transform(s,
-          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
-        FROM sh)
+    }, Some(s"""$oracleLshChain
       SELECT cand.a, cand.b,
         round(CAST(len(list_intersect(sa.hs, sb.hs)) AS DOUBLE) / len(list_distinct(sa.hs || sb.hs)), 4) AS jac
       FROM cand JOIN shl sa ON sa.doc_id = cand.a JOIN shl sb ON sb.doc_id = cand.b
@@ -459,7 +330,7 @@ object Deduplication extends QuerySuite {
       // own canonical. Output: every doc labeled (cluster, quality,
       // survives?).
       val d = keyedDocs(s, dir)
-      val comp = Dedup.connectedComponents(lshEdges(d))
+      val comp = Dedup.connectedComponents(Dedup.lshEdges(Dedup.lshSignatures(d)))
       val scored = d.select(col("doc_id"),
         duckRound(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
           .cast("long").as("q10k"))
@@ -471,8 +342,7 @@ object Deduplication extends QuerySuite {
         .select(col("doc_id"), col("cluster"), col("q10k").as("quality_e4"),
           (col("rk") === 1).cast("long").as("is_canonical"))
         .orderBy("doc_id")
-    }, Some(s"""
-      WITH $oracleLshEdges,
+    }, Some(s"""$oracleLshEdges,
       sym AS (SELECT a AS src, b AS dst FROM e UNION SELECT b, a FROM e),
       nodes AS (SELECT DISTINCT src AS node FROM sym),
       comp AS (
@@ -484,7 +354,7 @@ object Deduplication extends QuerySuite {
             SELECT r.a, s2.dst FROM reach r JOIN sym s2 ON r.b = s2.src)
           SELECT a, b FROM reach) r ON r.a = n.node
         GROUP BY n.node),
-      $oracleQ10k,
+      ${oracleQ10k()},
       labeled AS (
         SELECT q.doc_id, COALESCE(comp.component, q.doc_id) AS cluster, q.q10k
         FROM q LEFT JOIN comp ON q.doc_id = comp.node)
@@ -540,26 +410,18 @@ object Deduplication extends QuerySuite {
       val existingSrc = (0 to 4).map(i => s"src$i")
       val d = keyedDocs(s, dir)
       val isExisting = col("source").isin(existingSrc: _*)
-      // fused signature + 56-bit verify sets, one digest pass, one
-      // string-free checkpoint (r13 item 2; attach longs per r12 item 1)
-      val sh = Dedup.signatureAndHash56(
-          d.select(col("doc_id"), isExisting.as("old"),
-            md5(col("text")).as("h"), Dedup.wordShingles(col("text"), 3).as("shingles")),
-          "shingles", numHashes = 8)
-        .localCheckpoint()
+      val sh = Dedup.lshSignatures(d, isExisting.as("old"), md5(col("text")).as("h"))
       // exact membership: batch hashes vs the existing fingerprint set
       val oldHashes = sh.where(col("old")).select(col("h")).distinct()
         .withColumn("h_hit", lit(1L))
       // near-dup: banded LSH, but candidates are new×existing ONLY
-      val bands = Dedup.lshBands(sh, "doc_id", numHashes = 8, rowsPerBand = 2)
+      val bands = Dedup.lshBands(sh, "doc_id", Dedup.lshHashes, Dedup.lshRowsPerBand)
         .join(sh.select("doc_id", "old"), "doc_id").localCheckpoint()
       val cand = bands.where(!col("old")).select(col("band"), col("key"), col("doc_id").as("a"))
         .join(bands.where(col("old")).select(col("band"), col("key"), col("doc_id").as("b")),
           Seq("band", "key"))
         .select("a", "b").distinct()
-      val near = cand
-        .join(sh.select(col("doc_id").as("a"), col("hshingles").as("sa")).hint("shuffle_hash"), "a")
-        .join(sh.select(col("doc_id").as("b"), col("hshingles").as("sb")).hint("shuffle_hash"), "b")
+      val near = Dedup.withVerifySets(cand, sh)
         .withColumn("inter", size(array_intersect(col("sa"), col("sb"))).cast("long"))
         .withColumn("uni", size(array_union(col("sa"), col("sb"))).cast("long"))
         .where(expr("inter * 10000 div uni") >= 5000L)
@@ -584,15 +446,7 @@ object Deduplication extends QuerySuite {
         FROM documents),
       sh AS (SELECT doc_id, old, h, ${oracleShingles(3)} AS s FROM d),
       oldh AS (SELECT DISTINCT h FROM sh WHERE old),
-      ex AS (SELECT doc_id, unnest(s) AS shingle FROM sh),
-      dg AS (SELECT doc_id, md5(shingle) AS d0, md5('x|' || shingle) AS d1 FROM ex),
-      mh AS (
-        SELECT doc_id, seed.seed,
-          min(substring(CASE WHEN seed.seed < 4 THEN d0 ELSE d1 END,
-                        1 + 8 * (seed.seed % 4), 8)) AS mh
-        FROM dg CROSS JOIN (SELECT CAST(range AS INTEGER) AS seed FROM range(0, 8)) seed
-        GROUP BY doc_id, seed.seed),
-      sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id),
+      ${oracleSignatures("sh")},
       bands AS (
         SELECT s2.doc_id, sh.old, b.b AS band,
           md5(sig[2*b.b + 1] || '|' || sig[2*b.b + 2]) AS key
@@ -602,10 +456,7 @@ object Deduplication extends QuerySuite {
         SELECT DISTINCT n.doc_id AS a, o.doc_id AS b
         FROM bands n JOIN bands o ON n.band = o.band AND n.key = o.key
         WHERE NOT n.old AND o.old),
-      shl AS (
-        SELECT doc_id, list_distinct(list_transform(s,
-          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
-        FROM sh),
+      ${oracleHash56Sets("sh")},
       near AS (
         SELECT DISTINCT c.a AS doc_id
         FROM cand c JOIN shl ha ON ha.doc_id = c.a JOIN shl hb ON hb.doc_id = c.b

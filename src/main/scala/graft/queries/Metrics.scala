@@ -222,10 +222,10 @@ object Metrics extends QuerySuite {
         graft.functions.Histograms.makeHistogram(0.0, 500.0, 50, col("value")).as("h"),
         percentile(col("value"), lit(0.95)).as("p95e"))
       h.select(col("event_type"),
-          round(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95), 4)
+          duckRound(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95), 4)
             .as("p95_hist"),
-          round(col("p95e"), 4).as("p95_exact"),
-          round(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95)
+          duckRound(col("p95e"), 4).as("p95_exact"),
+          duckRound(graft.functions.Histograms.quantileFromHistogram(col("h"), 0.95)
             - col("p95e"), 4).as("err"))
         .orderBy("event_type")
     }, Some("""
@@ -280,7 +280,7 @@ object Metrics extends QuerySuite {
         .groupBy("event_type").agg(countDistinct("user_id").as("exact_users"))
       sk.join(broadcast(ex), "event_type")
         .select(col("event_type"), col("n_reg"), col("n_zero"),
-          round(col("hll_estimate"), 2).as("hll_estimate"), col("exact_users"))
+          duckRound(col("hll_estimate"), 2).as("hll_estimate"), col("exact_users"))
         .orderBy("event_type")
     }, Some("""
       WITH x AS (

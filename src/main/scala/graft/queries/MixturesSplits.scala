@@ -508,7 +508,7 @@ object MixturesSplits extends QuerySuite {
         .cast("long").cast("double") / lit(4294967296.0))
       val splits = d.select(col("doc_id"),
         when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").as("split"))
-      Deduplication.lshEdges(d)
+      Dedup.lshEdges(Dedup.lshSignatures(d))
         .join(splits.select(col("doc_id").as("a"), col("split").as("sa")), "a")
         .join(splits.select(col("doc_id").as("b"), col("split").as("sb")), "b")
         .select(least(col("sa"), col("sb")).as("split_1"),
@@ -517,8 +517,7 @@ object MixturesSplits extends QuerySuite {
         .agg(count(lit(1)).as("n_pairs"))
         .withColumn("leak", (col("split_1") =!= col("split_2")).cast("long"))
         .orderBy("split_1", "split_2")
-    }, Some(s"""
-      WITH ${Deduplication.oracleLshEdges},
+    }, Some(s"""$oracleLshEdges,
       sp AS (
         SELECT doc_id,
           CASE WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)

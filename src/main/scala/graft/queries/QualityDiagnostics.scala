@@ -11,42 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object QualityDiagnostics extends QuerySuite {
 
-  /** q10k per doc WITH source (the l_curation_pipeline scorer). */
-  private def oracleQ10kWithSource: String = """qf AS (
-        SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS t,
-          CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-            / GREATEST(length(text), 1) AS punct_ratio,
-          CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-              x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS DOUBLE)
-            / GREATEST(len(string_split_regex(trim(text), '\s+')), 1) AS stop_ratio
-        FROM documents),
-      q AS (
-        SELECT doc_id, source,
-          CAST(round(round(0.5 * stop_ratio + 0.3 * (1.0 - punct_ratio)
-                + 0.2 * LEAST(CAST(len(t) AS DOUBLE) / 200.0, 1.0), 4)
-               * 10000.0, 0) AS BIGINT) AS q10k
-        FROM qf)"""
-
-  /** The shared q10k scorer as DuckDB CTEs (lock-step with
-    * TextAnalysis.qualityScore·10⁴ — the l_curation_pipeline scorer,
-    * same text as oracleQ10kWithSource).
-    */
-  private val oracleQ10k = """
-      WITH qf AS (
-        SELECT doc_id, source, string_split_regex(trim(text), '\s+') AS t,
-          CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g')) AS DOUBLE)
-            / GREATEST(length(text), 1) AS punct_ratio,
-          CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-              x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS DOUBLE)
-            / GREATEST(len(string_split_regex(trim(text), '\s+')), 1) AS stop_ratio
-        FROM documents),
-      q AS (
-        SELECT doc_id, source, CAST(len(t) AS BIGINT) AS toks,
-          CAST(round(round(0.5 * stop_ratio + 0.3 * (1.0 - punct_ratio)
-                + 0.2 * LEAST(CAST(len(t) AS DOUBLE) / 200.0, 1.0), 4)
-               * 10000.0, 0) AS BIGINT) AS q10k
-        FROM qf)"""
-
   val queries: Seq[GraftQuery] = Seq(
 
     // `l_quality_quantile_norm`: per-source quantile normalization of
@@ -71,7 +35,7 @@ object QualityDiagnostics extends QuerySuite {
             .otherwise(0L).as("pct_e4"))
         .orderBy("doc_id")
     }, Some(s"""
-      WITH ${oracleQ10kWithSource},
+      WITH ${oracleQ10k(Seq("source"))},
       r AS (
         SELECT doc_id, source, q10k,
           ROW_NUMBER() OVER (PARTITION BY source ORDER BY q10k, doc_id) AS rk,
@@ -344,7 +308,8 @@ object QualityDiagnostics extends QuerySuite {
         .withColumn("token_share_e4", expr("tokens * 10000 div total_tokens"))
         .select("threshold_e4", "n_docs", "tokens", "token_share_e4")
         .orderBy("threshold_e4")
-    }, Some(s"""$oracleQ10k,
+    }, Some(s"""
+      WITH ${oracleQ10k(Seq("source"), Seq("CAST(len(t) AS BIGINT) AS toks"))},
       th AS (SELECT CAST(unnest(range(0, 10)) * 1000 AS BIGINT) AS threshold_e4),
       surv AS (
         SELECT th.threshold_e4, CAST(count(*) AS BIGINT) AS n_docs,

@@ -130,6 +130,85 @@ package object queries {
     s"list_distinct(list_transform(range(1, GREATEST(len(t) - $lastTok, 1) + 1), i -> array_to_string(t[i:i+$lastTok], ' ')))"
   }
 
+  // The MinHash-LSH chain as DuckDB CTEs, lock-step with the Spark
+  // chain in graft.operators.Dedup (lshSignatures, lshCandidates,
+  // withVerifySets): 8 hashes, 4 bands of 2 rows.
+
+  /** The signature CTEs `ex`, `dg`, `mh` and `sig`(doc_id, sig) over
+    * `src`(doc_id, s): hash i is the (i % 4)-th 8-hex chunk of
+    * md5(shingle) for i < 4 and of md5('x|' || shingle) above, and the
+    * signature is each hash's min over the doc's shingles.
+    */
+  private[queries] def oracleSignatures(src: String): String = s"""ex AS (SELECT doc_id, unnest(s) AS shingle FROM $src),
+      dg AS (SELECT doc_id, md5(shingle) AS d0, md5('x|' || shingle) AS d1 FROM ex),
+      mh AS (
+        SELECT doc_id, seed.seed,
+          min(substring(CASE WHEN seed.seed < 4 THEN d0 ELSE d1 END,
+                        1 + 8 * (seed.seed % 4), 8)) AS mh
+        FROM dg CROSS JOIN (SELECT CAST(range AS INTEGER) AS seed FROM range(0, 8)) seed
+        GROUP BY doc_id, seed.seed),
+      sig AS (SELECT doc_id, list(mh ORDER BY seed) AS sig FROM mh GROUP BY doc_id)"""
+
+  /** The band and candidate CTEs `bands` and `cand`(a, b), a < b, over
+    * the signatures in `src`(doc_id, sig).
+    */
+  private[queries] def oracleLshCandidates(src: String): String = s"""bands AS (
+        SELECT doc_id, b.b AS band, md5(sig[2*b.b + 1] || '|' || sig[2*b.b + 2]) AS key
+        FROM $src CROSS JOIN (SELECT CAST(range AS INTEGER) AS b FROM range(0, 4)) b),
+      cand AS (
+        SELECT DISTINCT l.doc_id AS a, r.doc_id AS b
+        FROM bands l JOIN bands r ON l.band = r.band AND l.key = r.key AND l.doc_id < r.doc_id)"""
+
+  /** The verify-set CTE `shl`(doc_id, hs): the distinct 56-bit md5
+    * longs of each shingle set in `src`(doc_id, s), the mirror of
+    * [[graft.operators.Dedup.hashShingles56]].
+    */
+  private[queries] def oracleHash56Sets(src: String): String = s"""shl AS (
+        SELECT doc_id, list_distinct(list_transform(s,
+          x -> CAST(('0x' || substr(md5(x), 1, 14)) AS BIGINT))) AS hs
+        FROM $src)"""
+
+  /** The whole chain over every document, as a `WITH` head: 3-word
+    * shingles `sh`, then [[oracleSignatures]], [[oracleLshCandidates]]
+    * and [[oracleHash56Sets]] over them.
+    */
+  private[queries] val oracleLshChain: String = s"""
+      WITH tok AS (SELECT doc_id, $oracleTokens AS t FROM documents),
+      sh AS (SELECT doc_id, ${oracleShingles(3)} AS s FROM tok),
+      ${oracleSignatures("sh")},
+      ${oracleLshCandidates("sig")},
+      ${oracleHash56Sets("sh")}"""
+
+  /** [[oracleLshChain]] ending in CTE `e`(a, b), the candidates at
+    * Jaccard ≥ 0.5: the oracle of [[graft.operators.Dedup.lshEdges]].
+    */
+  private[queries] val oracleLshEdges: String = s"""$oracleLshChain,
+      e AS (
+        SELECT cand.a, cand.b
+        FROM cand JOIN shl sa ON sa.doc_id = cand.a JOIN shl sb ON sb.doc_id = cand.b
+        WHERE len(list_intersect(sa.hs, sb.hs)) * 2
+                >= len(list_distinct(sa.hs || sb.hs)))"""
+
+  /** The quality-score CTEs `qf` and `q`(doc_id, `carry`..., `extra`...,
+    * q10k BIGINT), lock-step with TextAnalysis.qualityScore·10⁴ (the
+    * l_curation_pipeline scorer). `carry` columns pass through from
+    * `documents`; `extra` are expressions over `qf` that `q` adds.
+    */
+  private[queries] def oracleQ10k(carry: Seq[String] = Nil, extra: Seq[String] = Nil): String = s"""qf AS (
+        SELECT doc_id, ${carry.map(_ + ", ").mkString}string_split_regex(trim(text), '\\s+') AS t,
+          CAST(length(regexp_replace(text, '[A-Za-z0-9\\s]', '', 'g')) AS DOUBLE)
+            / GREATEST(length(text), 1) AS punct_ratio,
+          CAST(len(list_filter(string_split_regex(trim(text), '\\s+'),
+              x -> list_contains(['the','a','of','and','to','in','is','it'], x))) AS DOUBLE)
+            / GREATEST(len(string_split_regex(trim(text), '\\s+')), 1) AS stop_ratio
+        FROM documents),
+      q AS (
+        SELECT doc_id,${(carry ++ extra).map(" " + _ + ",").mkString}
+          CAST(round(round(0.5 * stop_ratio + 0.3 * (1.0 - punct_ratio)
+                + 0.2 * LEAST(CAST(len(t) AS DOUBLE) / 200.0, 1.0), 4)
+               * 10000.0, 0) AS BIGINT) AS q10k
+        FROM qf)"""
+
   /** The thread-span-assembly oracle CTE chain ending in `spans` — the
     * single source of truth for every query whose DuckDB oracle needs
     * the spans of [[graft.Lakehouse.userSpans]] (the otel and async
